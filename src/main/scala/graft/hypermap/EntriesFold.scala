@@ -2,6 +2,7 @@ package graft.hypermap
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.functions.evm
 
 /** §2.4: the sequential per-event Mongo fold
@@ -159,10 +160,8 @@ object EntriesFold {
     *   affected = keys referenced by the batch;
     *   relevant = full event history filtered to affected keys;
     *   merged   = fold(relevant) limited to affected ∪ unchanged rows.
-    * At 100 TB this turns the per-batch cost from O(all events) into
-    * O(history of touched keys) — with the events table laid out by
-    * Layout.writeEvents, the relevant-history scan prunes hard.
-    * Equivalence with the full rebuild is spec-asserted.
+    * Cost: that of [[incrementalDelta]], plus the union with
+    * `previousEntries`. Equivalence with the full rebuild is spec-asserted.
     */
   def incrementalEntries(allEvents: DataFrame, previousEntries: DataFrame,
                          newBatch: DataFrame,
@@ -181,6 +180,21 @@ object EntriesFold {
     * instead of the O(table) union+rewrite of incrementalEntries. Safe as
     * an upsert because the event log is append-only: a key once folded to
     * an entry always refolds to one (refreshed never "deletes").
+    *
+    * `previousEntries` is only probed for the ROOT row, so a caller may
+    * pass a point read of it (Tail passes `Sinks.lookupCommitted`).
+    *
+    * Cost contract, per call, run eagerly: one job collects the batch's
+    * keys to the driver; at most one job probes `previousEntries` for
+    * ROOT (only when the batch references ROOT); one job scans
+    * `allEvents` once, with a hash-set filter on the keys, and collects
+    * the touched keys' history. Driver memory is O(batch keys + history
+    * of touched keys). Both returned frames are local plans over that
+    * collected data: they hold no cached blocks, and each action on
+    * `refreshed` runs only the fold's own jobs over the history, never
+    * another scan of `allEvents`. That is the tail shape; a batch that
+    * touches most keys collects most of the history, so a backfill
+    * belongs to the batch path (`EtlJob.run`).
     */
   def incrementalDelta(allEvents: DataFrame, previousEntries: DataFrame,
                        newBatch: DataFrame,
@@ -189,31 +203,25 @@ object EntriesFold {
     import spark.implicits._
     val tkey =
       if (normalizeTransferIds) evm.uint_dec_to_bytes32($"id") else $"id"
+    val refs = newBatch.select($"childhash", $"parenthash", $"entry",
+      when($"eventType" === "Transfer", tkey)).collect()
+    val keys = refs.flatMap(r => (0 until 4).map(r.getString)).filter(_ != null).distinct
     // ROOT is normally excluded (it has no entry, and including it would
     // drag every top-level Mint into `relevant` each batch). But if a ROOT
     // entry EXISTS (degenerate minted-as-child case the fold supports), it
     // must refresh when referenced, or its children set goes stale.
-    val rootHasEntry =
-      !previousEntries.where($"namehash" === ROOT).isEmpty ||
-        !newBatch.where($"childhash" === ROOT).isEmpty
-    def keysOf(df: DataFrame): DataFrame =
-      df.select(explode(array($"childhash", $"parenthash", $"entry",
-        when($"eventType" === "Transfer", tkey))).as("k"))
-        .where($"k".isNotNull && (lit(rootHasEntry) || $"k" =!= ROOT))
-        .distinct()
-    // batch-bounded key set; no .cache() — recomputing the projection is
-    // cheaper than leaking one cached plan per micro-batch forever
-    val affected = keysOf(newBatch)
-    val relevant = allEvents.where(
-      $"childhash".isNotNull || $"parenthash".isNotNull ||
-        $"entry".isNotNull || $"eventType" === "Transfer")
-      .join(broadcast(affected),
-        $"childhash" === $"k" || $"parenthash" === $"k" ||
-          $"entry" === $"k" || (when($"eventType" === "Transfer", tkey) === $"k"),
-        "left_semi")
+    val rootHasEntry = keys.contains(ROOT) &&
+      (refs.exists(_.getString(0) == ROOT) ||
+        !previousEntries.where($"namehash" === ROOT).isEmpty)
+    val affectedKeys = keys.filter(k => rootHasEntry || k != ROOT).toSeq
+    val history = allEvents.where(
+      $"childhash".isin(affectedKeys: _*) || $"parenthash".isin(affectedKeys: _*) ||
+        $"entry".isin(affectedKeys: _*) ||
+        ($"eventType" === "Transfer" && tkey.isin(affectedKeys: _*)))
+    val relevant = spark.createDataFrame(history.collect().toSeq.asJava, allEvents.schema)
     val refreshed = fold(relevant, normalizeTransferIds)
-      .join(affected, $"namehash" === $"k", "left_semi")
-    (affected, refreshed)
+      .where($"namehash".isin(affectedKeys: _*))
+    (affectedKeys.toDF("k"), refreshed)
   }
 
   /** E10 extension (off by default in parity mode): resolve fullName by

@@ -1,8 +1,15 @@
 package graft.hypermap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** S5/S6 — the reference's two write paths re-expressed over parquet.
   *
@@ -58,7 +65,7 @@ object Sinks {
     val deduped = dedupeDeterministic(updates)
     val novel =
       if (exists(spark, dir)) {
-        val existingIds = spark.read.parquet(dir).select("event_id")
+        val existingIds = readFlat(spark, dir).select("event_id")
         deduped.join(existingIds, Seq("event_id"), "left_anti")
       } else deduped
     val toWrite = novel.cache()
@@ -154,23 +161,17 @@ object Sinks {
       .withColumn("bucket", bucketCol(keyCol, nBuckets))
       .cache()
     try {
-      val nUpdates = bucketed.count()
+      val (nUpdates, touched) = rowsAndBuckets(bucketed)
       // An empty batch must not create an empty (file-less) parquet dir —
       // every later read would die on schema inference — nor rewrite
       // anything on an existing table.
       if (nUpdates == 0) return (0L, 0L)
       if (!exists(spark, dir)) {
-        // repartition by bucket first: without it every task writes to
-        // every bucket dir (tasks × buckets small files — metadata death);
-        // with it each bucket is one task's output, ~1 file per bucket.
-        bucketed.repartition(col("bucket"))
-          .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir)
+        writeBuckets(bucketed, touched.size, dir)
         writeBucketSpec(spark, dir, nBuckets, keyCol)
         return (0L, nUpdates)
       }
       checkBucketSpec(spark, dir, nBuckets, keyCol)
-      val touched = bucketed.select("bucket").distinct()
-        .collect().map(_.getLong(0)).sorted // ≤ nBuckets values — driver-safe
       val existingTouched = spark.read.parquet(dir)
         .where(col("bucket").isin(touched.toIndexedSeq: _*)) // partition pruning
       val matched = bucketed
@@ -183,8 +184,7 @@ object Sinks {
       // is also the crash-safe shape: each bucket flips old→new in one
       // rename, untouched buckets are never opened.
       val tmp = dir + ".tmp-" + System.nanoTime()
-      merged.repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp)
+      writeBuckets(merged, touched.size, tmp)
       val hconf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(dir).getFileSystem(hconf)
       touched.foreach { b =>
@@ -290,7 +290,15 @@ object Sinks {
       .rename(tmp, manifestPath(dir), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Live data for `buckets` (all when None), WITH the bucket column. */
+  /** Live data for `buckets` (all when None), WITH the bucket column.
+    *
+    * The manifest already names every path, so building the frame starts
+    * no Spark job, however many generations the snapshot spans: the schema
+    * comes from one data file's footer, and each read lists at most
+    * Spark's parallel-discovery threshold of paths, which Spark then lists
+    * on the driver. `bucket` is recomputed from the key with the
+    * expression that placed the row, so reads may mix generations.
+    */
   private def readLive(spark: SparkSession, dir: String, m: Manifest,
                        buckets: Option[Seq[Long]]): DataFrame = {
     val live = buckets match {
@@ -298,11 +306,36 @@ object Sinks {
       case None     => m.buckets
     }
     require(live.nonEmpty, s"readLive: no committed data for $buckets in $dir")
-    live.groupBy(_._2).toSeq.sortBy(_._1).map { case (gen, bs) =>
-      val paths = bs.keys.toSeq.sorted.map(b => s"$dir/$gen/bucket=$b")
-      spark.read.option("basePath", s"$dir/$gen").parquet(paths: _*)
-    }.reduce(_.unionByName(_))
+    val paths = live.toSeq.sorted.map { case (b, gen) => s"$dir/$gen/bucket=$b" }
+    val reader = footerSchema(spark, paths.head).fold(spark.read)(spark.read.schema)
+    val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    paths.grouped(perRead).map(ps => reader.parquet(ps: _*)).reduce(_.unionByName(_))
+      .withColumn("bucket", bucketCol(m.keyCol, m.nBuckets))
   }
+
+  /** The schema Spark stored in the footer of the first data file directly
+    * under `dir`, read on the driver. None when there is no such file or
+    * it was not written by Spark; the reader then infers it (one job).
+    */
+  private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    p.getFileSystem(conf).listStatus(p)
+      .find(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .flatMap { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType])
+  }
+
+  /** `spark.read.parquet(dir)` for a flat directory of Spark-written
+    * files, without the schema-inference job.
+    */
+  private[graft] def readFlat(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, dir).fold(spark.read)(spark.read.schema).parquet(dir)
 
   /** Read a manifest-committed table without its layout column. */
   def readCommitted(spark: SparkSession, dir: String): DataFrame = {
@@ -317,16 +350,14 @@ object Sinks {
     * buckets a single-key lookup reads 1/256th of the table's files by
     * construction, no matter how many generations the snapshot spans.
     * This is the reference's indexed `findOne` (actions.ts point reads)
-    * re-expressed as manifest-resolved file pruning.
+    * re-expressed as manifest-resolved file pruning. Building the frame
+    * starts no Spark job.
     */
   def lookupCommitted(spark: SparkSession, dir: String,
                       keys: Seq[String]): DataFrame = {
-    import spark.implicits._
     val m = readManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $dir"))
-    val buckets = keys.toDF(m.keyCol)
-      .select(bucketCol(m.keyCol, m.nBuckets)).as[Long].collect().toSeq.distinct
-    val live = buckets.filter(m.buckets.contains)
+    val live = bucketsOf(spark, m.keyCol, m.nBuckets, keys).distinct.filter(m.buckets.contains)
     if (live.isEmpty) return readLive(spark, dir, m, None)
       .where(lit(false)).drop("bucket") // keys hash only to absent buckets
     readLive(spark, dir, m, Some(live))
@@ -334,17 +365,29 @@ object Sinks {
       .drop("bucket")
   }
 
-  /** Delete gen dirs and tmp manifests the committed snapshot does not
+  /** [[bucketCol]] evaluated on the driver: the analyzed expression, bound
+    * to a one-string row, so no query is planned just to hash a few keys.
+    */
+  private def bucketsOf(spark: SparkSession, keyCol: String, nBuckets: Int,
+                        keys: Seq[String]): Seq[Long] = {
+    import spark.implicits._
+    val plan = Seq.empty[String].toDF(keyCol)
+      .select(bucketCol(keyCol, nBuckets)).queryExecution.analyzed
+    val hash = BindReferences.bindReference(
+      plan.expressions.head.asInstanceOf[Alias].child, plan.children.head.output)
+    keys.map(k => hash.eval(InternalRow(UTF8String.fromString(k))).asInstanceOf[Long])
+  }
+
+  /** Delete gen dirs and tmp manifests the committed snapshot `m` does not
     * reference — orphans from a crash between gen write and manifest
     * rename, or superseded by a later commit. Safe at any time: readers
     * only follow the manifest.
     */
-  private def gcUnreferenced(spark: SparkSession, dir: String): Unit = {
+  private def gcUnreferenced(spark: SparkSession, dir: String, m: Option[Manifest]): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
-    val referenced = readManifest(spark, dir).map(_.buckets.values.toSet)
-      .getOrElse(Set.empty)
+    val referenced = m.map(_.buckets.values.toSet).getOrElse(Set.empty)
     fs.listStatus(p).foreach { st =>
       val name = st.getPath.getName
       if ((st.isDirectory && name.startsWith("gen-") && !referenced.contains(name)) ||
@@ -353,78 +396,101 @@ object Sinks {
     }
   }
 
-  private def bucketsWritten(spark: SparkSession, genPath: String): Seq[Long] = {
-    val p = new Path(genPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq
-      .collect { case st if st.isDirectory && st.getPath.getName.startsWith("bucket=") =>
-        st.getPath.getName.stripPrefix("bucket=").toLong }
-      .sorted
+  /** Row count and sorted distinct buckets of `bucketed` in one Spark job:
+    * a tally per partition, no shuffle.
+    */
+  private def rowsAndBuckets(bucketed: DataFrame): (Long, Seq[Long]) = {
+    val spark = bucketed.sparkSession
+    import spark.implicits._
+    val tallies = bucketed.select(col("bucket")).as[Long].mapPartitions { it =>
+      val seen = scala.collection.mutable.Set.empty[Long]
+      var n = 0L
+      it.foreach { b => n += 1; seen += b }
+      Iterator((n, seen.toSeq))
+    }.collect()
+    (tallies.map(_._1).sum, tallies.flatMap(_._2).distinct.sorted.toSeq)
   }
 
+  /** Per call: one job for the count and touched buckets (which also
+    * materializes `updates`), then one write that reads the touched
+    * buckets once, counting matched keys as it merges. Manifest and GC
+    * work is driver-side file I/O.
+    */
   private[graft] def upsertCommittedImpl(
       spark: SparkSession, dir: String, updates: DataFrame,
       nBuckets: Int, keyCol: String, maxGens: Int,
       crashBeforeCommit: Boolean): (Long, Long) = {
     require(nBuckets > 0, "nBuckets must be positive")
-    gcUnreferenced(spark, dir) // sweep any crashed commit's orphans
+    val current = readManifest(spark, dir)
+    gcUnreferenced(spark, dir, current) // sweep any crashed commit's orphans
     val bucketed = dedupeDeterministicBy(updates, keyCol)
       .withColumn("bucket", bucketCol(keyCol, nBuckets))
       .cache()
     try {
-      val nUpdates = bucketed.count()
+      val (nUpdates, touched) = rowsAndBuckets(bucketed)
       if (nUpdates == 0) return (0L, 0L)
       val gen = s"gen-${System.nanoTime()}"
       val genPath = s"$dir/$gen"
-      readManifest(spark, dir) match {
+      current match {
         case None =>
-          bucketed.repartition(col("bucket"))
-            .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(genPath)
+          writeBuckets(bucketed, touched.size, genPath)
           if (crashBeforeCommit) throw new RuntimeException("injected crash before commit")
-          writeManifest(spark, dir, Manifest(nBuckets, keyCol,
-            bucketsWritten(spark, genPath).map(_ -> gen).toMap))
+          writeManifest(spark, dir, Manifest(nBuckets, keyCol, touched.map(_ -> gen).toMap))
           (0L, nUpdates)
         case Some(m) =>
           require(m.nBuckets == nBuckets && m.keyCol == keyCol,
             s"upsertCommitted layout mismatch for $dir: table has " +
               s"nBuckets=${m.nBuckets}, keyCol=${m.keyCol}; caller passed " +
               s"nBuckets=$nBuckets, keyCol=$keyCol")
-          val touched = bucketed.select("bucket").distinct()
-            .collect().map(_.getLong(0)).sorted.toSeq // ≤ nBuckets — driver-safe
           val liveTouched = touched.filter(m.buckets.contains)
-          val existingTouched =
-            if (liveTouched.isEmpty) None
-            else Some(readLive(spark, dir, m, Some(liveTouched)))
-          val matched = existingTouched.fold(0L)(e =>
-            bucketed.join(e.select(keyCol), Seq(keyCol), "left_semi").count())
-          val merged = existingTouched.fold(bucketed: DataFrame)(e =>
-            bucketed.unionByName(
-              e.join(bucketed.select(keyCol), Seq(keyCol), "left_anti"),
-              allowMissingColumns = true))
-          merged.repartition(col("bucket"))
-            .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(genPath)
+          val matches = new Observation()
+          val merged =
+            if (liveTouched.isEmpty) bucketed
+            else bucketed.unionByName(
+              readLive(spark, dir, m, Some(liveTouched))
+                .join(bucketed.select(col(keyCol), lit(true).as("__updated")),
+                  Seq(keyCol), "left_outer")
+                .observe(matches, count(col("__updated")).as("matched"))
+                .where(col("__updated").isNull).drop("__updated"),
+              allowMissingColumns = true)
+          writeBuckets(merged, touched.size, genPath)
+          val matched =
+            if (liveTouched.isEmpty) 0L else matches.get("matched").asInstanceOf[Long]
           if (crashBeforeCommit) throw new RuntimeException("injected crash before commit")
-          writeManifest(spark, dir,
-            m.copy(buckets = m.buckets ++ touched.map(_ -> gen)))
-          gcUnreferenced(spark, dir)
-          compactIfNeeded(spark, dir, maxGens)
+          val next = m.copy(buckets = m.buckets ++ touched.map(_ -> gen))
+          writeManifest(spark, dir, next)
+          gcUnreferenced(spark, dir, Some(next))
+          compactIfNeeded(spark, dir, next, maxGens)
           (matched, nUpdates - matched)
       }
     } finally bucketed.unpersist()
   }
 
-  /** Fold every bucket into one fresh gen when the snapshot references
+  /** Write `df` partitioned by its `nBuckets` distinct buckets, one file
+    * per bucket. Repartitioning by bucket first makes each bucket one
+    * task's output; without it every task writes to every bucket dir
+    * (tasks × buckets small files). The explicit count spreads the
+    * buckets over up to one task per core: a count left to AQE would
+    * coalesce a small batch's shuffle into ONE task that writes every
+    * bucket file in turn.
+    */
+  private def writeBuckets(df: DataFrame, nBuckets: Int, path: String): Unit =
+    df.repartition(math.min(nBuckets, df.sparkSession.sparkContext.defaultParallelism),
+        col("bucket"))
+      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
+
+  /** Fold every bucket into one fresh gen when the snapshot `m` references
     * more than `maxGens` generations — itself a manifest commit, so it
     * inherits the same crash-safety.
     */
-  private def compactIfNeeded(spark: SparkSession, dir: String, maxGens: Int): Unit = {
-    val m = readManifest(spark, dir).getOrElse(return)
+  private def compactIfNeeded(spark: SparkSession, dir: String, m: Manifest,
+                              maxGens: Int): Unit = {
     if (m.buckets.values.toSet.size <= maxGens) return
     val gen = s"gen-${System.nanoTime()}"
-    readLive(spark, dir, m, None).repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(s"$dir/$gen")
-    writeManifest(spark, dir, m.copy(buckets = m.buckets.keys.map(_ -> gen).toMap))
-    gcUnreferenced(spark, dir)
+    writeBuckets(readLive(spark, dir, m, None), m.buckets.size, s"$dir/$gen")
+    val compacted = m.copy(buckets = m.buckets.keys.map(_ -> gen).toMap)
+    writeManifest(spark, dir, compacted)
+    gcUnreferenced(spark, dir, Some(compacted))
   }
 
   /** The table's bucket layout, persisted as a hidden marker file so a

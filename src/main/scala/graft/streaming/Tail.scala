@@ -188,11 +188,22 @@ object Tail {
     * shape); its file hygiene is an offline `ZOrder.compaction` pass
     * over date partitions, not a per-batch concern.
     */
-  /** Cost contract (measured, PERF.md "Hypermap pipeline at bulk scale"):
-    * per-batch work is O(history of TOUCHED keys) + O(touched buckets)
-    * write. That is the tail shape — small triggers touching few keys.
-    * Feeding a bulk BACKFILL through this path degenerates: a spread
-    * 400k-log batch touches nearly every key, so each batch re-folds
+  /** Cost contract, per micro-batch with new events:
+    *   - scans: the batch once for the insert and once for its keys; the
+    *     events table once for the insert's existing ids and once, with a
+    *     hash-set filter on the touched keys, for their history; ROOT's
+    *     one committed bucket; the touched buckets once, in the merge;
+    *   - writes: the novel events and one new generation holding only
+    *     the touched buckets (plus, every `maxGens` batches, a compaction
+    *     of the whole table);
+    *   - jobs: a fixed number for the insert, the key and history collects
+    *     and the upsert, plus the fold's own jobs over the collected
+    *     history; none per live generation and none to list or infer a
+    *     schema (TailJobBudgetSpec pins the count);
+    *   - driver memory: O(history of TOUCHED keys).
+    * That is the tail shape — small triggers touching few keys. Feeding
+    * a bulk BACKFILL through this path degenerates: a spread 400k-log
+    * batch touches nearly every key, so each batch collects and re-folds
     * ~the whole history. Backfill belongs to the batch path
     * (`EtlJob.run`), then start the tail from its checkpoint.
     */
@@ -213,10 +224,11 @@ object Tail {
         try {
           val inserted = Sinks.insertIfAbsent(spark, eventsDir, decoded)
           if (inserted > 0 && Sinks.exists(spark, eventsDir)) {
-            val allEvents = spark.read.parquet(eventsDir)
+            val allEvents = Sinks.readFlat(spark, eventsDir)
+            // incrementalDelta only probes the previous entries for ROOT
             val prev =
               if (Sinks.readManifest(spark, entriesDir).isDefined)
-                Sinks.readCommitted(spark, entriesDir)
+                Sinks.lookupCommitted(spark, entriesDir, Seq(Schemas.RootHash))
               else spark.createDataFrame(
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.entries)
             val (_, refreshed) =

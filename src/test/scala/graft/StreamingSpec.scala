@@ -1,6 +1,6 @@
 package graft
 
-import graft.hypermap.{Decode, EntriesFold, Fixtures}
+import graft.hypermap.{Decode, EntriesFold, Fixtures, Schemas}
 import graft.streaming.Tail
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -135,6 +135,57 @@ class StreamingSpec extends AnyFunSuite {
       .select(rebuilt.columns.sorted.map(col).toIndexedSeq: _*)
     assert(canon(streamedEntries).exceptAll(canon(rebuilt)).isEmpty &&
       canon(rebuilt).exceptAll(canon(streamedEntries)).isEmpty)
+  }
+
+  test("committed tail refreshes a ROOT entry minted as a child, batch by batch") {
+    // ROOT has an entry only once some Mint names it as its CHILD; from
+    // then on, every later top-level Mint adds to ROOT's children. The
+    // tail must refresh ROOT when a batch mints it (seen in the batch)
+    // and when a later batch references it (seen only in the committed
+    // table, through incrementalDelta's ROOT probe).
+    val base = Files.createTempDirectory("graft-stream-root")
+    val rawDir = base.resolve("raw").toString
+    val evDir = base.resolve("ev").toString
+    val enDir = base.resolve("en").toString
+    new java.io.File(rawDir).mkdirs()
+    val Root = Fixtures.Root
+    val rootAsChild = {
+      val m = Fixtures.mint(Fixtures.OsHash, "root", 200L, 0)
+      m.copy(topics = m.topics.updated(2, Root))
+    }
+    val late = graft.functions.EvmCodec.namehash(Root, "late")
+    val batches = Seq(
+      Seq(Fixtures.mint(Root, "early", 100L, 0)), // ROOT has no entry yet
+      Seq(rootAsChild, Fixtures.mint(Root, "same", 200L, 1)),
+      Seq(Fixtures.mint(Root, "late", 300L, 0),
+        Fixtures.note(Root, "~k", "v".getBytes("UTF-8"), 301L, 0)),
+      Seq(Fixtures.mint(late, "leaf", 400L, 0), Fixtures.mint(Root, "last", 401L, 0)))
+    def canon(df: org.apache.spark.sql.DataFrame) = df
+      .withColumn("children", sort_array($"children"))
+      .withColumn("notes", sort_array(map_entries($"notes")))
+      .withColumn("facts", sort_array(map_entries($"facts")))
+      .select(Schemas.entries.fieldNames.map(col).toIndexedSeq: _*)
+    val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/", evDir, enDir,
+      base.resolve("ck").toString, trigger = Trigger.ProcessingTime("1 second"),
+      nBuckets = 8)
+    try {
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Fixtures.toDF(spark, b).coalesce(1).write.json(rawDir + s"/b$i")
+        q.processAllAvailable()
+        val committed = canon(graft.hypermap.Sinks.readCommitted(spark, enDir))
+        val rebuilt = canon(EntriesFold.fold(spark.read.parquet(evDir)))
+        assert(committed.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(committed).isEmpty,
+          s"committed entries diverge from the fold after batch $i")
+      }
+      val root = graft.hypermap.Sinks.readCommitted(spark, enDir)
+        .where($"namehash" === Root).select($"children", $"notes").head()
+      assert(root.getSeq[String](0).toSet ==
+        Seq("same", "late", "last").map(graft.functions.EvmCodec.namehash(Root, _)).toSet)
+      assert(root.getMap[String, String](1).keySet == Set("~k"))
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   test("streaming entries sink auto-compacts: file count stays bounded across N batches, data unchanged") {
