@@ -157,29 +157,16 @@ object EntriesFold {
     * touches. The fold restricted to events referencing an affected key is
     * exact for that key (creation, children, facts/notes existence checks,
     * gene, transfers all join on the key itself), so:
-    *   affected = keys referenced by the batch;
-    *   relevant = full event history filtered to affected keys;
-    *   merged   = fold(relevant) limited to affected ∪ unchanged rows.
-    * Cost: that of [[incrementalDelta]], plus the union with
-    * `previousEntries`. Equivalence with the full rebuild is spec-asserted.
-    */
-  def incrementalEntries(allEvents: DataFrame, previousEntries: DataFrame,
-                         newBatch: DataFrame,
-                         normalizeTransferIds: Boolean = false): DataFrame = {
-    val (affected, refreshed) =
-      incrementalDelta(allEvents, previousEntries, newBatch, normalizeTransferIds)
-    previousEntries
-      .join(affected, col("namehash") === col("k"), "left_anti")
-      .unionByName(refreshed)
-  }
-
-  /** The delta form of incremental maintenance: returns
-    * (affected keys as a one-column `k` frame, refreshed entry rows for
-    * those keys). Callers that persist entries in a keyed/bucketed layout
-    * (Sinks.upsertBucketed) write ONLY the refreshed rows — O(touched)
-    * instead of the O(table) union+rewrite of incrementalEntries. Safe as
-    * an upsert because the event log is append-only: a key once folded to
-    * an entry always refolds to one (refreshed never "deletes").
+    *   affected  = keys referenced by the batch;
+    *   relevant  = full event history filtered to affected keys;
+    *   refreshed = fold(relevant) limited to affected keys.
+    * Returns (affected keys as a one-column `k` frame, refreshed entry
+    * rows for those keys). The caller upserts ONLY the refreshed rows
+    * (`Sinks.upsertCommitted`), an O(touched) write. Safe as an upsert
+    * because the event log is append-only: a key once folded to an entry
+    * always refolds to one (refreshed never "deletes"). Previous entries
+    * with the affected keys anti-joined away, unioned with `refreshed`,
+    * equal the full rebuild (HypermapSpec).
     *
     * `previousEntries` is only probed for the ROOT row, so a caller may
     * pass a point read of it (Tail passes `Sinks.lookupCommitted`).

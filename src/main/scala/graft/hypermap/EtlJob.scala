@@ -42,11 +42,12 @@ object EtlJob {
           s"--check-coverage requires a fetcher-landed raw dir, but " +
             s"$rawDir has no _coverage/ manifest (land it with Rpc.fetch/" +
             "pollOnce, or drop the flag for manually-assembled dirs)")
-      val cov = spark.read.schema(Coverage.schema).json(s"$rawDir/_coverage")
-      val bounds = cov.agg(min(col("chunkStart")), max(col("chunkEnd"))).head()
-      if (!bounds.isNullAt(0)) {
-        val lo = fromBlock.getOrElse(bounds.getLong(0))
-        val hi = toBlock.getOrElse(bounds.getLong(1))
+      // the manifest is one record per chunk: bounds and gaps are a
+      // driver-side sweep, no Spark job
+      val ranges = Rpc.coverageRanges(rawDir)
+      if (ranges.nonEmpty) {
+        val lo = fromBlock.getOrElse(ranges.map(_._1).min)
+        val hi = toBlock.getOrElse(ranges.map(_._2).max)
         Coverage.requireComplete(spark, rawDir, lo, hi)
       } else if (fromBlock.nonEmpty || toBlock.nonEmpty) {
         throw new IllegalStateException(

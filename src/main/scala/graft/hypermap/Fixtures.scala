@@ -172,11 +172,11 @@ object Fixtures {
   def randomLogs(n: Int, seed: Long = 42L, idOffset: Long = 0L): Seq[Log] = {
     val rnd = new scala.util.Random(seed)
     val minted = scala.collection.mutable.ArrayBuffer[String](Root)
-    // idOffset lets chunked callers (EtlScale) generate disjoint label and
-    // block spaces per chunk so insertIfAbsent never dedups across chunks;
-    // ×8 clears a chunk's WORST-CASE block advance ((n/7)·50 ≈ 7.15n) —
-    // ×4 only covered the expected advance (~3.6n), leaving overlap
-    // statistically possible for unlucky seeds (r10 advice).
+    // idOffset lets chunked callers generate disjoint label and block
+    // spaces per chunk so insertIfAbsent never dedups across chunks; ×8
+    // clears a chunk's WORST-CASE block advance ((n/7)·50 ≈ 7.15n) — ×4
+    // only covered the expected advance (~3.6n), leaving overlap
+    // statistically possible for unlucky seeds.
     var block = 27300000L + idOffset * 8
     (0 until n).map { i =>
       if (i % 7 == 0) block += rnd.nextInt(50) + 1

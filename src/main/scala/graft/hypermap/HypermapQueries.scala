@@ -188,9 +188,9 @@ object HypermapQueries {
        |ORDER BY blockNumber""".stripMargin
   }
 
-  /** str_replay_equiv — ST3 exactly-once under the DRIVER'S oracle (was
-    * spec-only until round 13): the golden+adversarial fixture replayed
-    * through [[graft.streaming.Tail.startWithEntries]] in four landed
+  /** str_replay_equiv — ST3 exactly-once under the DRIVER'S oracle: the
+    * golden+adversarial fixture replayed through
+    * [[graft.streaming.Tail.startWithEntriesCommitted]] in four landed
     * micro-batches, with (a) batch 2 REDELIVERING three of batch 1's
     * rows (at-least-once delivery — the event_id anti-join sink must
     * dedupe), (b) a full query RESTART on the same checkpoint between
@@ -221,7 +221,7 @@ object HypermapQueries {
         3 -> all.drop(12),
         4 -> all.take(7))      // pure redelivery: must be a no-op
       def run(batches: Seq[(Int, Seq[Fixtures.Log])]): Unit = {
-        val q = graft.streaming.Tail.startWithEntries(s, rawDir + "/*/",
+        val q = graft.streaming.Tail.startWithEntriesCommitted(s, rawDir + "/*/",
           ev, en, ck, trigger = Trigger.ProcessingTime("1 second"))
         // finally-stop: a failed landing/batch must not leak a live
         // query bound to the shared checkpoint (a same-session retry
@@ -233,7 +233,7 @@ object HypermapQueries {
       }
       run(land.take(2))
       run(land.drop(2)) // restart on the same checkpoint (ST2)
-      val result = s.read.parquet(en).localCheckpoint(true)
+      val result = Sinks.readCommitted(s, en).localCheckpoint(true)
       // the fixture dirs are consumed once the checkpoint materializes
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
       result

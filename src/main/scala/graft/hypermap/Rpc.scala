@@ -271,7 +271,7 @@ object Rpc {
     * lives in [[graft.streaming.Tail]], which ingests the files this
     * lands. Pair `confirmations` with the tail's depth: the tail
     * FAILS LOUD on rows above its bound (see
-    * [[graft.streaming.Tail.startWithEntries]]), so run the fetcher
+    * [[graft.streaming.Tail.startWithEntriesCommitted]]), so run the fetcher
     * with confirmations >= the tail's depth.
     */
   def pollOnce(endpoint: String, outDir: String, genesis: Long,
@@ -339,7 +339,7 @@ object Rpc {
     }
 
   /** Confirmation-depth cap (ST5 extension, pairs with
-    * [[graft.streaming.Tail.startWithEntries]]'s `confirmedUpTo`): the
+    * [[graft.streaming.Tail.startWithEntriesCommitted]]'s `confirmedUpTo`): the
     * highest block a reorg-safe poll loop should fetch. Scanning only to
     * `confirmedHead` means a shallow block that later gets rewritten is
     * fetched exactly once, with its final content — the resume point
@@ -504,11 +504,12 @@ object Coverage {
   }
 
   /** Fail-loud completeness assertion for [[EtlJob]]: throws listing
-    * the missing ranges if [from, to] is not fully covered.
+    * the missing ranges if [from, to] is not fully covered. Runs on the
+    * driver ([[Rpc.coverageRanges]] + [[gapsLocal]]) and starts no Spark
+    * job; `spark` is kept for source compatibility.
     */
   def requireComplete(spark: SparkSession, rawDir: String, from: Long, to: Long): Unit = {
-    val g = gapsInDir(spark, rawDir, from, to)
-      .collect().map(r => s"${r.getLong(0)}-${r.getLong(1)}")
+    val g = gapsLocal(Rpc.coverageRanges(rawDir), from, to).map { case (s, e) => s"$s-$e" }
     if (g.nonEmpty)
       throw new IllegalStateException(
         s"raw-log dir $rawDir does not cover blocks $from-$to; missing: " +

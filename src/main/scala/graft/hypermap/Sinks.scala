@@ -22,10 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - insertIfAbsent: anti-join against existing ids, append only novel
   *     rows — at-least-once input → exactly-once table, matching the
   *     duplicate-key-skip behavior (upserted count = appended rows).
-  *   - upsert: last-writer-wins merge by event_id materialized to a new
-  *     version directory + atomic pointer swap (rename) — the plain-parquet
-  *     stand-in for Delta MERGE. On a Delta/Iceberg cluster this maps 1:1
-  *     to `WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`.
+  *   - upsertCommitted: the one keyed upsert. A last-writer-wins merge
+  *     that rewrites only the hash buckets a batch touches into a fresh
+  *     generation and commits them with one atomic manifest rename — the
+  *     manifest-log design of Delta Lake. On a Delta/Iceberg cluster this
+  *     maps 1:1 to `WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`.
+  *     `readCommitted` and `lookupCommitted` read it back.
   *
   * Scale note: insertIfAbsent's anti-join shuffles only on event_id and the
   * existing side prunes to the id column; at 100 TB the existing-ids scan
@@ -34,14 +36,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Sinks {
 
-  /** Deterministic within-batch dedup: one row per event_id chosen by a
-    * total order over the sortable columns (dropDuplicates alone keeps an
+  /** Deterministic within-batch dedup: one row per key chosen by a total
+    * order over the sortable columns (dropDuplicates alone keeps an
     * arbitrary partition-order row — nondeterministic across runs, while
     * the reference's bulkWrite applies ops in array order).
     */
-  private def dedupeDeterministic(updates: DataFrame): DataFrame =
-    dedupeDeterministicBy(updates, "event_id")
-
   private def dedupeDeterministicBy(updates: DataFrame, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
@@ -62,7 +61,7 @@ object Sinks {
     * rows actually inserted (the reference's "upsertedCount").
     */
   def insertIfAbsent(spark: SparkSession, dir: String, updates: DataFrame): Long = {
-    val deduped = dedupeDeterministic(updates)
+    val deduped = dedupeDeterministicBy(updates, "event_id")
     val novel =
       if (exists(spark, dir)) {
         val existingIds = readFlat(spark, dir).select("event_id")
@@ -75,154 +74,25 @@ object Sinks {
     n
   }
 
-  /** Idempotent MERGE by event_id: updates win over existing rows; result
-    * written to a fresh directory then swapped in. Returns
-    * (matched/updated, inserted) like the reference's bulkWrite report.
-    */
-  def upsert(spark: SparkSession, dir: String, updates: DataFrame): (Long, Long) = {
-    val deduped = dedupeDeterministic(updates).cache()
-    if (!exists(spark, dir)) {
-      val n = deduped.count()
-      // an empty first batch must not create a file-less parquet dir
-      // (unreadable: schema inference fails on every later read)
-      if (n > 0) deduped.write.mode(SaveMode.Overwrite).parquet(dir)
-      deduped.unpersist()
-      return (0L, n)
-    }
-    val existing = spark.read.parquet(dir)
-    val matched = existing.join(deduped.select("event_id"), Seq("event_id"), "left_semi").count()
-    val inserted = deduped.join(existing.select("event_id"), Seq("event_id"), "left_anti").count()
-    val merged = deduped.unionByName(
-      existing.join(deduped.select("event_id"), Seq("event_id"), "left_anti"),
-      allowMissingColumns = true)
-    val tmp = dir + ".tmp-" + System.nanoTime()
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    deduped.unpersist()
-    // Two-rename swap with checked results + rollback. NOT atomic on a raw
-    // filesystem (a crash between the renames strands the table in `old`;
-    // recovery = rename it back) — the production path is a transactional
-    // table format's MERGE; this is the best plain-parquet can do and it
-    // must never silently half-apply.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(hconf)
-    val old = new Path(dir + ".old-" + System.nanoTime())
-    if (!fs.rename(new Path(dir), old))
-      throw new java.io.IOException(s"upsert swap failed: cannot move $dir aside")
-    if (!fs.rename(new Path(tmp), new Path(dir))) {
-      fs.rename(old, new Path(dir)) // roll back to the previous table
-      throw new java.io.IOException(s"upsert swap failed: cannot move $tmp into place (rolled back)")
-    }
-    fs.delete(old, true)
-    (matched, inserted)
-  }
+  // ----------------------------------------------------- manifest commit
 
-  /** Bucketed copy-on-write upsert — the 100 TB path for S6.
-    *
-    * `upsert` above rewrites the WHOLE table per batch: O(table) write
-    * amplification, unusable once the table dwarfs a batch. This variant
-    * lays the table out as parquet partitioned by
-    * `bucket = pmod(xxhash64(event_id), nBuckets)` and each batch:
-    *
-    *   1. computes the set of buckets the batch touches (≤ nBuckets, and
-    *      ≈ batch-size for small batches — a tail batch of 1k events
-    *      touches at most 1k buckets),
-    *   2. reads ONLY those partitions (partition pruning on `bucket`),
-    *   3. merges last-writer-wins by event_id,
-    *   4. rewrites ONLY those partitions via dynamic partition overwrite.
-    *
-    * Write amplification drops from O(table) to O(table/nBuckets ×
-    * touched-buckets). This is exactly the copy-on-write keyed-table
-    * design of Delta/Hudi; on a cluster with a transactional format the
-    * same layout maps to MERGE + partition pruning. Untouched partitions
-    * are never read or written (UpsertBucketedSpec asserts their files are
-    * byte-identical across batches).
-    *
-    * Atomicity: Spark's dynamic overwrite commits per partition through
-    * the Hadoop commit protocol — a crash can leave touched partitions
-    * mixed old/new (re-running the same idempotent batch repairs them),
-    * but never corrupts untouched partitions. Strictly better than the
-    * full-rewrite swap. For snapshot-consistent readers during a crash
-    * window use [[upsertCommitted]], which commits the whole multi-bucket
-    * batch in one atomic manifest rename.
-    *
-    * Returns (matched/updated, inserted) like `upsert`.
-    */
-  /** The bucket assignment used by upsertBucketed's layout — exposed so
-    * callers (and benchmarks) never re-derive it and drift.
+  /** The bucket a key lands in under [[upsertCommitted]]'s layout —
+    * exposed so callers (and benchmarks) never re-derive it and drift.
     */
   def bucketCol(keyCol: String, nBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong))
 
-  def upsertBucketed(spark: SparkSession, dir: String, updates: DataFrame,
-                     nBuckets: Int = 256, keyCol: String = "event_id"): (Long, Long) = {
-    require(nBuckets > 0, "nBuckets must be positive")
-    recoverBucketed(spark, dir)
-    val bucketed = dedupeDeterministicBy(updates, keyCol)
-      .withColumn("bucket", bucketCol(keyCol, nBuckets))
-      .cache()
-    try {
-      val (nUpdates, touched) = rowsAndBuckets(bucketed)
-      // An empty batch must not create an empty (file-less) parquet dir —
-      // every later read would die on schema inference — nor rewrite
-      // anything on an existing table.
-      if (nUpdates == 0) return (0L, 0L)
-      if (!exists(spark, dir)) {
-        writeBuckets(bucketed, touched.size, dir)
-        writeBucketSpec(spark, dir, nBuckets, keyCol)
-        return (0L, nUpdates)
-      }
-      checkBucketSpec(spark, dir, nBuckets, keyCol)
-      val existingTouched = spark.read.parquet(dir)
-        .where(col("bucket").isin(touched.toIndexedSeq: _*)) // partition pruning
-      val matched = bucketed
-        .join(existingTouched.select(keyCol), Seq(keyCol), "left_semi").count()
-      val merged = bucketed.unionByName(
-        existingTouched.join(bucketed.select(keyCol), Seq(keyCol), "left_anti"),
-        allowMissingColumns = true)
-      // Spark refuses to overwrite a path its own plan reads, so the merged
-      // buckets land in a tmp dir and are swapped in per partition — which
-      // is also the crash-safe shape: each bucket flips old→new in one
-      // rename, untouched buckets are never opened.
-      val tmp = dir + ".tmp-" + System.nanoTime()
-      writeBuckets(merged, touched.size, tmp)
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val fs = new Path(dir).getFileSystem(hconf)
-      touched.foreach { b =>
-        val src = new Path(tmp, s"bucket=$b")
-        val dst = new Path(dir, s"bucket=$b")
-        if (fs.exists(src)) {
-          val old = new Path(dir, s".bucket=$b.old-" + System.nanoTime())
-          val hadOld = fs.exists(dst)
-          if (hadOld && !fs.rename(dst, old))
-            throw new java.io.IOException(s"upsertBucketed: cannot move $dst aside")
-          if (!fs.rename(src, dst)) {
-            if (hadOld) fs.rename(old, dst)
-            throw new java.io.IOException(s"upsertBucketed: swap failed for bucket $b (rolled back)")
-          }
-          if (hadOld) fs.delete(old, true)
-        }
-        // A touched bucket always has ≥1 merged row (its update rows are in
-        // `merged`), so a missing src means the write itself failed — the
-        // rename above would have thrown before reaching here.
-      }
-      fs.delete(new Path(tmp), true)
-      (matched, nUpdates - matched)
-    } finally bucketed.unpersist()
-  }
-
-  /** Read a table maintained by upsertBucketed without its layout column. */
-  def readBucketed(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).drop("bucket")
-
-  // ----------------------------------------------------- manifest commit
-
-  /** Manifest-committed bucketed upsert — closes [[upsertBucketed]]'s one
-    * remaining gap: cross-bucket atomicity. The in-place variant flips
-    * touched buckets one rename at a time, so a crash mid-loop exposes a
-    * MIXED table (some buckets new, some old) until the idempotent batch
-    * is re-run. Here readers resolve data only through a manifest, so the
-    * whole multi-bucket batch commits in ONE atomic rename — the
-    * poor-man's Delta log.
+  /** Keyed copy-on-write upsert, committed through a manifest.
+    *
+    * Each batch is deduplicated per key, hashed to
+    * `bucket = pmod(xxhash64(keyCol), nBuckets)`, and merged
+    * last-writer-wins into ONLY the buckets it touches: write
+    * amplification is O(table/nBuckets × touched buckets), not O(table).
+    * Readers resolve data only through a manifest, so the whole
+    * multi-bucket batch commits in ONE atomic rename — the poor-man's
+    * Delta log. Returns (matched/updated, inserted) like the reference's
+    * bulkWrite report. An empty batch writes nothing: it creates no
+    * directory on a fresh table and leaves an existing one untouched.
     *
     * Layout under `dir`:
     *   _MANIFEST                the committed snapshot: a header line
@@ -239,12 +109,14 @@ object Sinks {
     * complete. There is no observable mixed state.
     *
     * Reads stay pruned: the manifest maps each bucket to exactly one gen
-    * dir, so a point/bucket read opens only `gen/bucket=K` paths — the
-    * same file-skipping as the in-place layout, resolved through the
-    * snapshot instead of the live directory tree. Generations accumulate
-    * one per batch; when they exceed `maxGens` the commit folds the whole
-    * table into a single gen first (amortized O(table/maxGens) per batch —
-    * the same economics as Delta checkpoint compaction).
+    * dir, so a point/bucket read opens only `gen/bucket=K` paths, resolved
+    * through the snapshot instead of the live directory tree. A later
+    * call with a different `nBuckets` or `keyCol` is refused, since it
+    * would hash keys away from the rows they replace. Generations
+    * accumulate one per batch; once they exceed `maxGens` the commit is
+    * followed by a fold of the whole table into a single gen (amortized
+    * O(table/maxGens) per batch — the same economics as Delta checkpoint
+    * compaction).
     */
   def upsertCommitted(spark: SparkSession, dir: String, updates: DataFrame,
                       nBuckets: Int = 256, keyCol: String = "event_id",
@@ -493,112 +365,8 @@ object Sinks {
     gcUnreferenced(spark, dir, Some(compacted))
   }
 
-  /** The table's bucket layout, persisted as a hidden marker file so a
-    * later upsert with a different nBuckets/keyCol fails fast instead of
-    * silently duplicating keys (an update hashed to a different bucket
-    * count lands in a different partition than the row it should replace).
-    */
-  private def writeBucketSpec(spark: SparkSession, dir: String,
-                              nBuckets: Int, keyCol: String): Unit = {
-    val p = new Path(dir, ".graft_bucketspec")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write(s"$nBuckets\n$keyCol\n".getBytes("UTF-8"))
-    out.close()
-  }
-
-  private def checkBucketSpec(spark: SparkSession, dir: String,
-                              nBuckets: Int, keyCol: String): Unit = {
-    val p = new Path(dir, ".graft_bucketspec")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) { writeBucketSpec(spark, dir, nBuckets, keyCol); return }
-    val in = fs.open(p)
-    val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    in.close()
-    lines match {
-      case n :: k :: _ =>
-        require(n.trim == nBuckets.toString && k.trim == keyCol,
-          s"upsertBucketed layout mismatch for $dir: table has nBuckets=${n.trim}, " +
-            s"keyCol=${k.trim}; caller passed nBuckets=$nBuckets, keyCol=$keyCol")
-      case _ => writeBucketSpec(spark, dir, nBuckets, keyCol)
-    }
-  }
-
-  /** Heal a crash inside upsertBucketed's per-bucket rename window: a
-    * stranded `.bucket=K.old-*` dir whose `bucket=K` is missing is renamed
-    * back (the batch didn't land); one whose `bucket=K` exists is deleted
-    * (the batch landed, cleanup was lost). Hidden (dot-prefixed) dirs are
-    * invisible to parquet readers, so a stranded .old never corrupts reads.
-    * Also sweeps `<dir>.tmp-*` siblings left by a crash between the
-    * tmp-dir write and the swap loop (full-size orphans otherwise).
-    */
-  private[graft] def recoverBucketed(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = p.getParent
-    if (parent != null && fs.exists(parent)) {
-      val tmpPrefix = p.getName + ".tmp-"
-      fs.listStatus(parent).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.startsWith(tmpPrefix))
-          fs.delete(st.getPath, true)
-      }
-    }
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      val i = name.indexOf(".old-")
-      if (st.isDirectory && name.startsWith(".bucket=") && i > 0) {
-        val live = new Path(dir, name.substring(1, i))
-        if (fs.exists(live)) fs.delete(st.getPath, true)
-        else fs.rename(st.getPath, live)
-      }
-    }
-  }
-
   private[graft] def exists(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Recover from a crash inside replaceDir's rename window: if `dir` is
-    * missing but a stranded `dir.old-*` exists, rename the newest one
-    * back. Returns true if a recovery happened. Callers that treat
-    * missing-dir as "first run" MUST call this first or a crash window
-    * silently empties the table.
-    */
-  private[graft] def recoverDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) return false
-    val parent = p.getParent
-    if (parent == null || !fs.exists(parent)) return false
-    val prefix = p.getName + ".old-"
-    val stranded = fs.listStatus(parent)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .sortBy(_.getPath.getName)
-    if (stranded.isEmpty) return false
-    fs.rename(stranded.last.getPath, p)
-  }
-
-  /** Write `df` to a fresh directory, then swap it into `dir` (checked
-    * two-rename with rollback — see upsert's atomicity note).
-    */
-  private[graft] def replaceDir(spark: SparkSession, dir: String, df: DataFrame): Unit = {
-    val tmp = dir + ".tmp-" + System.nanoTime()
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!exists(spark, dir)) {
-      if (!fs.rename(new Path(tmp), new Path(dir)))
-        throw new java.io.IOException(s"replaceDir: cannot move $tmp into place")
-      return
-    }
-    val old = new Path(dir + ".old-" + System.nanoTime())
-    if (!fs.rename(new Path(dir), old))
-      throw new java.io.IOException(s"replaceDir: cannot move $dir aside")
-    if (!fs.rename(new Path(tmp), new Path(dir))) {
-      fs.rename(old, new Path(dir))
-      throw new java.io.IOException(s"replaceDir: swap failed (rolled back)")
-    }
-    fs.delete(old, true)
   }
 }

@@ -712,7 +712,7 @@ object Temporal {
     * Plan shape: ONE full-outer shuffle join on the snapshot key, then a
     * tiny groupBy on the 4-value class column — at 100 TB both snapshots
     * shuffle once on the same key (or co-locate for free if both are
-    * bucketed by it, the Sinks.upsertBucketed layout), and only 4 counter
+    * bucketed by it, the Sinks.upsertCommitted layout), and only 4 counter
     * rows leave. Change detection compares the payload columns directly
     * (double equality is exact: both sides derive from the same stored
     * value) — a fingerprint column (md5 of concatenated payload, the

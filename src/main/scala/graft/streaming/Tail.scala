@@ -28,7 +28,7 @@ import graft.hypermap.{Decode, EntriesFold, Schemas, Sinks}
   * [[graft.hypermap.Rpc.pollOnce]]'s `confirmations` cap means an
   * unconfirmed block is never fetched at all; once it clears the depth
   * it is fetched exactly once, with its post-reorg final content, and
-  * only that version is ever indexed. [[startWithEntries]]'
+  * only that version is ever indexed. [[startWithEntriesCommitted]]'s
   * `confirmedUpTo` bound is the engine-side HALF: an assertion that the
   * fetcher respected the depth, failing loud on unconfirmed rows rather
   * than silently dropping them (dropped rows would never be re-delivered
@@ -58,137 +58,28 @@ object Tail {
   }
 
   /** Tail that maintains BOTH tables: events (idempotent insert) and the
-    * derived entries (incremental fold — only the namehashes each batch
-    * touches are recomputed; equivalence with a full rebuild is
-    * spec-asserted in HypermapSpec). The streaming equivalent of the
-    * reference's storeEvents + processEventsToEntries per chunk
-    * (scripts/extract-events.ts:95-136, mongodb.ts:113-144), minus its
-    * per-event round trips.
-    */
-  /** `confirmedUpTo` (ST5 extension): when set, each micro-batch ASSERTS
-    * that every row is at or below `confirmedUpTo()` — the
-    * confirmation-depth bound (head − N) — and FAILS LOUD otherwise.
+    * derived entries, refreshing only the namehashes each batch touches.
+    * The streaming equivalent of the reference's storeEvents +
+    * processEventsToEntries per chunk (scripts/extract-events.ts:95-136,
+    * mongodb.ts:113-144), minus its per-event round trips.
     *
-    * Why assert instead of filter (r14 ADVICE, medium): a dropped row
-    * would never come back. The fetcher re-lands a chunk under the SAME
-    * filename (`chunk_<start>_<end>.json`), which the file stream source
-    * never reprocesses, and the poll loop's coverage manifest counts the
-    * chunk as covered — so silently dropping an unconfirmed row is
-    * silent data loss that the gap check then can't even detect. The
-    * correct deployment caps UNconfirmed blocks at the FETCHER
-    * ([[graft.hypermap.Rpc.pollOnce]] with confirmations >= this tail's
-    * depth): then nothing unconfirmed ever lands, a reorged block is
-    * fetched exactly once with its final content, and this bound is pure
-    * defense-in-depth that never fires. If it DOES fire, the fetcher was
-    * run with a shallower depth than the tail — a misconfiguration this
-    * error names, with the remedies (raise fetcher confirmations, or
-    * re-land the range under fresh filenames). Evaluated per batch, so a
-    * long-running tail tracks the advancing head.
-    */
-  def startWithEntries(spark: SparkSession, rawDir: String, eventsDir: String,
-                       entriesDir: String, checkpointDir: String,
-                       trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-                       blocks: Option[DataFrame] = None,
-                       confirmedUpTo: Option[() => Long] = None): StreamingQuery = {
-    val raw = spark.readStream.schema(Schemas.rawLogs).json(rawDir)
-    raw.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        confirmedUpTo.foreach { f =>
-          val bound = f()
-          val top = batch.agg(max(col("blockNumber"))).head()
-          if (!top.isNullAt(0) && top.getLong(0) > bound)
-            throw new IllegalStateException(
-              s"micro-batch contains blocks up to ${top.getLong(0)}, above the " +
-                s"confirmation bound $bound: the fetcher landed UNCONFIRMED blocks. " +
-                "Dropping them would be silent loss (re-landed chunks reuse their " +
-                "filenames, which the file source never reprocesses, and the poll " +
-                "frontier advances past them). Run the fetcher with confirmations " +
-                ">= this tail's depth (Rpc.pollOnce(confirmations = N)), or re-land " +
-                "the unconfirmed range under fresh filenames.")
-        }
-        val bounded = batch
-        val decoded = Decode.decode(bounded, blocks).cache()
-        try {
-          val inserted = Sinks.insertIfAbsent(spark, eventsDir, decoded)
-          // all-junk first batch: no events table yet, nothing to fold —
-          // wait for the next poll instead of crashing on a missing path
-          if (inserted > 0 && Sinks.exists(spark, eventsDir)) {
-            val allEvents = spark.read.parquet(eventsDir)
-            // heal a crash that happened mid-swap on a previous batch
-            Sinks.recoverDir(spark, entriesDir)
-            val prev =
-              if (Sinks.exists(spark, entriesDir)) spark.read.parquet(entriesDir)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.entries)
-            val updated = EntriesFold.incrementalEntries(allEvents, prev, decoded)
-            Sinks.replaceDir(spark, entriesDir, updated)
-          }
-        } finally decoded.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** The 100 TB variant of startWithEntries: the entries table lives in
-    * Sinks.upsertBucketed's hash-bucketed layout (keyed by namehash) and
-    * each micro-batch writes ONLY the buckets holding refreshed entries —
-    * per-batch write cost O(touched keys), not O(table), on top of the
-    * already-incremental fold. Read the table back with
-    * `Sinks.readBucketed`. startWithEntries keeps the flat layout for
-    * small tables / plain `spark.read.parquet` consumers.
-    */
-  def startWithEntriesBucketed(spark: SparkSession, rawDir: String, eventsDir: String,
-                               entriesDir: String, checkpointDir: String,
-                               trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-                               blocks: Option[DataFrame] = None,
-                               nBuckets: Int = 256): StreamingQuery = {
-    val raw = spark.readStream.schema(Schemas.rawLogs).json(rawDir)
-    raw.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val decoded = Decode.decode(batch, blocks).cache()
-        try {
-          val inserted = Sinks.insertIfAbsent(spark, eventsDir, decoded)
-          if (inserted > 0 && Sinks.exists(spark, eventsDir)) {
-            val allEvents = spark.read.parquet(eventsDir)
-            val prev =
-              if (Sinks.exists(spark, entriesDir)) Sinks.readBucketed(spark, entriesDir)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.entries)
-            val (_, refreshed) =
-              EntriesFold.incrementalDelta(allEvents, prev, decoded)
-            Sinks.upsertBucketed(spark, entriesDir, refreshed,
-              nBuckets = nBuckets, keyCol = "namehash")
-          }
-        } finally decoded.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** startWithEntriesBucketed with snapshot-consistent readers: the
-    * entries table lives behind Sinks.upsertCommitted's manifest, so a
-    * reader concurrent with (or interrupted by) a micro-batch sees either
-    * the previous or the next complete snapshot — never the mid-swap mix
-    * the in-place bucketed layout can expose. Same O(touched-bucket)
-    * write cost; read the table back with `Sinks.readCommitted`.
-    */
-  /** Auto-compaction: every commit folds the snapshot back to ONE
-    * generation once it references more than `maxGens` — at a 30 s
-    * trigger a day's 2,880 micro-batch generations stay bounded at
-    * maxGens, with the fold cost amortized O(table/maxGens) per batch
-    * (Sinks.compactIfNeeded inherits the manifest commit's
-    * crash-safety). File count in the serving table is therefore
-    * ≤ maxGens·touched-buckets at all times — spec-proven
-    * (StreamingSpec "bounded file count"). The RAW events dir is the
-    * write-once archive log, deliberately append-only (object-store
-    * shape); its file hygiene is an offline `ZOrder.compaction` pass
-    * over date partitions, not a per-batch concern.
-    */
-  /** Cost contract, per micro-batch with new events:
+    * Snapshot: the entries table lives behind the manifest of
+    * [[graft.hypermap.Sinks.upsertCommitted]], so a reader concurrent
+    * with (or interrupted by) a micro-batch sees either the previous or
+    * the next complete snapshot, never a mix. Read it with
+    * `Sinks.readCommitted` or `Sinks.lookupCommitted`.
+    *
+    * Compaction: every commit folds the snapshot back to ONE generation
+    * once it references more than `maxGens`, so at a 30 s trigger a
+    * day's 2,880 micro-batch generations stay bounded at `maxGens`, with
+    * the fold cost amortized O(table/maxGens) per batch and the same
+    * crash-safety as any commit. File count in the serving table is
+    * therefore ≤ maxGens·touched-buckets at all times (StreamingSpec
+    * "bounded file count"). The events dir is the write-once archive
+    * log, deliberately append-only; its file hygiene is an offline
+    * `ZOrder.compaction` pass over date partitions.
+    *
+    * Cost contract, per micro-batch with new events:
     *   - scans: the batch once for the insert and once for its keys; the
     *     events table once for the insert's existing ids and once, with a
     *     hash-set filter on the touched keys, for their history; ROOT's
@@ -206,6 +97,28 @@ object Tail {
     * batch touches nearly every key, so each batch collects and re-folds
     * ~the whole history. Backfill belongs to the batch path
     * (`EtlJob.run`), then start the tail from its checkpoint.
+    *
+    * `confirmedUpTo` (ST5 extension): when set, each micro-batch ASSERTS
+    * that every row is at or below `confirmedUpTo()` — the
+    * confirmation-depth bound (head − N) — and FAILS LOUD otherwise, at
+    * the cost of one max-aggregate job over the batch. Unset, the batch
+    * runs no extra work.
+    *
+    * Why assert instead of filter: a dropped row would never come back.
+    * The fetcher re-lands a chunk under the SAME filename
+    * (`chunk_<start>_<end>.json`), which the file stream source never
+    * reprocesses, and the poll loop's coverage manifest counts the chunk
+    * as covered — so silently dropping an unconfirmed row is silent data
+    * loss that the gap check then can't even detect. The correct
+    * deployment caps UNconfirmed blocks at the FETCHER
+    * ([[graft.hypermap.Rpc.pollOnce]] with confirmations >= this tail's
+    * depth): then nothing unconfirmed ever lands, a reorged block is
+    * fetched exactly once with its final content, and this bound is pure
+    * defense-in-depth that never fires. If it DOES fire, the fetcher was
+    * run with a shallower depth than the tail — a misconfiguration this
+    * error names, with the remedies (raise fetcher confirmations, or
+    * re-land the range under fresh filenames). Evaluated per batch, so a
+    * long-running tail tracks the advancing head.
     */
   def startWithEntriesCommitted(spark: SparkSession, rawDir: String, eventsDir: String,
                                 entriesDir: String, checkpointDir: String,
@@ -213,13 +126,23 @@ object Tail {
                                 blocks: Option[DataFrame] = None,
                                 nBuckets: Int = 256,
                                 maxGens: Int = 16,
-                                maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(Schemas.rawLogs)
-    val raw = maxFilesPerTrigger
-      .map(m => reader.option("maxFilesPerTrigger", m))
-      .getOrElse(reader).json(rawDir)
+                                confirmedUpTo: Option[() => Long] = None): StreamingQuery = {
+    val raw = spark.readStream.schema(Schemas.rawLogs).json(rawDir)
     raw.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        confirmedUpTo.foreach { f =>
+          val bound = f()
+          val top = batch.agg(max(col("blockNumber"))).head()
+          if (!top.isNullAt(0) && top.getLong(0) > bound)
+            throw new IllegalStateException(
+              s"micro-batch contains blocks up to ${top.getLong(0)}, above the " +
+                s"confirmation bound $bound: the fetcher landed UNCONFIRMED blocks. " +
+                "Dropping them would be silent loss (re-landed chunks reuse their " +
+                "filenames, which the file source never reprocesses, and the poll " +
+                "frontier advances past them). Run the fetcher with confirmations " +
+                ">= this tail's depth (Rpc.pollOnce(confirmations = N)), or re-land " +
+                "the unconfirmed range under fresh filenames.")
+        }
         val decoded = Decode.decode(batch, blocks).cache()
         try {
           val inserted = Sinks.insertIfAbsent(spark, eventsDir, decoded)

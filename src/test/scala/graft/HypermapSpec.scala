@@ -125,15 +125,7 @@ class HypermapSpec extends AnyFunSuite {
     val shuffled = new Random(7).shuffle(logs)
     val a = EntriesFold.fold(Decode.decode(Fixtures.toDF(spark, logs)))
     val b = EntriesFold.fold(Decode.decode(Fixtures.toDF(spark, shuffled)))
-    val cols = a.columns.sorted.map(col)
-    // children arrays are sets — sort for comparison
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("children", sort_array($"children"))
-      // set ops reject MapType — compare maps as sorted entry arrays
-      .withColumn("notes", sort_array(map_entries($"notes")))
-      .withColumn("facts", sort_array(map_entries($"facts")))
-      .select(cols.toIndexedSeq: _*)
-    assert(canon(a).exceptAll(canon(b)).isEmpty && canon(b).exceptAll(canon(a)).isEmpty)
+    EntriesAssert.assertSameEntries(b, a)
   }
 
   test("fold: gene applies only to existing entries (updateOne, no upsert)") {
@@ -157,11 +149,6 @@ class HypermapSpec extends AnyFunSuite {
   test("incremental entries equals full rebuild after each batch") {
     val all = Fixtures.goldenLogs
     val batches = Seq(all.take(5), all.slice(5, 10), all.drop(10))
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("children", sort_array($"children"))
-      .withColumn("notes", sort_array(map_entries($"notes")))
-      .withColumn("facts", sort_array(map_entries($"facts")))
-      .select(df.columns.sorted.map(col).toIndexedSeq: _*)
     var history = Seq.empty[Fixtures.Log]
     var entriesState = EntriesFold.fold(
       Decode.decode(Fixtures.toDF(spark, Seq.empty)))
@@ -169,10 +156,13 @@ class HypermapSpec extends AnyFunSuite {
       history = history ++ b
       val allEvents = Decode.decode(Fixtures.toDF(spark, history))
       val newBatch = Decode.decode(Fixtures.toDF(spark, b))
-      entriesState = EntriesFold.incrementalEntries(allEvents, entriesState, newBatch)
-      val full = EntriesFold.fold(allEvents)
-      assert(canon(entriesState).exceptAll(canon(full)).isEmpty &&
-        canon(full).exceptAll(canon(entriesState)).isEmpty,
+      // the previous entries minus the affected keys, plus the refreshed rows
+      val (affected, refreshed) =
+        EntriesFold.incrementalDelta(allEvents, entriesState, newBatch)
+      entriesState = entriesState
+        .join(affected, $"namehash" === $"k", "left_anti")
+        .unionByName(refreshed)
+      EntriesAssert.assertSameEntries(entriesState, EntriesFold.fold(allEvents),
         s"incremental diverges from rebuild after batch of ${b.size}")
     }
   }

@@ -329,7 +329,7 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("EntriesFold.fold stays entity-keyed: every shuffle hashes on an entry key, no NL joins, no windows") {
-    // The anchor for the EtlScale end-to-end numbers (PERF.md "Hypermap
+    // The anchor for the bulk-scale fold numbers (PERF.md "Hypermap
     // pipeline at bulk scale"): the measured plan is pinned here so a
     // future edit can't silently move the fold off its keyed-shuffle
     // shape. Broadcast thresholds are disabled so the join strategy (and

@@ -28,74 +28,22 @@ class SinksSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).select("event_id").distinct().count() == 14)
   }
 
-  test("upsert is an idempotent last-writer-wins MERGE (S6)") {
+  test("upsertCommitted: empty batches are no-ops, layout mismatch is rejected") {
+    // an empty FIRST batch must not create a directory
     val dir = freshDir()
-    val (m0, i0) = Sinks.upsert(spark, dir, decoded)
-    assert((m0, i0) == (0L, 14L))
-    // re-merge the same batch: all matched, none inserted, table unchanged
-    val (m1, i1) = Sinks.upsert(spark, dir, decoded)
-    assert((m1, i1) == (14L, 0L))
-    assert(spark.read.parquet(dir).count() == 14)
-    // updated rows win
-    val mutated = decoded.withColumn("label",
-      when($"label" === "alice", "alice-v2").otherwise($"label"))
-    val (m2, i2) = Sinks.upsert(spark, dir, mutated)
-    assert((m2, i2) == (14L, 0L))
-    assert(spark.read.parquet(dir).where($"label" === "alice-v2").count() == 1)
-    assert(spark.read.parquet(dir).where($"label" === "alice").count() == 0)
-  }
-
-  test("upsertBucketed matches upsert semantics and only rewrites touched buckets") {
-    val dir = freshDir()
-    val (m0, i0) = Sinks.upsertBucketed(spark, dir, decoded, nBuckets = 8)
-    assert((m0, i0) == (0L, 14L))
-    assert(Sinks.readBucketed(spark, dir).count() == 14)
-
-    // Snapshot per-bucket file listings before a single-row update batch.
-    def bucketFiles(): Map[String, Set[String]] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(d => d.getName ->
-          d.listFiles().map(f => f.getName + ":" + f.lastModified()).toSet)
-        .toMap
-    }
-    val before = bucketFiles()
-
-    val oneRow = decoded.where($"label" === "alice")
-      .withColumn("label", lit("alice-v2"))
-    val (m1, i1) = Sinks.upsertBucketed(spark, dir, oneRow, nBuckets = 8)
-    assert((m1, i1) == (1L, 0L))
-    val table = Sinks.readBucketed(spark, dir)
-    assert(table.count() == 14)
-    assert(table.where($"label" === "alice-v2").count() == 1)
-    assert(table.where($"label" === "alice").count() == 0)
-
-    // O(touched) not O(table): exactly one bucket's files changed.
-    val after = bucketFiles()
-    val changed = before.keySet.union(after.keySet)
-      .filter(k => before.get(k) != after.get(k))
-    assert(changed.size == 1, s"expected 1 rewritten bucket, got $changed")
-
-    // idempotent redelivery of the same batch
-    val (m2, i2) = Sinks.upsertBucketed(spark, dir, oneRow, nBuckets = 8)
-    assert((m2, i2) == (1L, 0L))
-    assert(Sinks.readBucketed(spark, dir).count() == 14)
-  }
-
-  test("upsertBucketed: empty batches are no-ops, layout mismatch is rejected") {
-    // an empty FIRST batch must not create an unreadable file-less dir
-    val dir = freshDir()
-    assert(Sinks.upsertBucketed(spark, dir, decoded.where(lit(false)), nBuckets = 8)
+    assert(Sinks.upsertCommitted(spark, dir, decoded.where(lit(false)), nBuckets = 8)
       == (0L, 0L))
     assert(!Sinks.exists(spark, dir))
-    // seed, then an empty later batch is a no-op
-    Sinks.upsertBucketed(spark, dir, decoded, nBuckets = 8)
-    assert(Sinks.upsertBucketed(spark, dir, decoded.where(lit(false)), nBuckets = 8)
+    // seed, then an empty later batch is a no-op: no new generation
+    Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 8)
+    val seeded = Sinks.readManifest(spark, dir)
+    assert(Sinks.upsertCommitted(spark, dir, decoded.where(lit(false)), nBuckets = 8)
       == (0L, 0L))
-    assert(Sinks.readBucketed(spark, dir).count() == 14)
+    assert(Sinks.readManifest(spark, dir) == seeded)
+    assert(Sinks.readCommitted(spark, dir).count() == 14)
     // a different bucket count would split keys across layouts — refused
     intercept[IllegalArgumentException] {
-      Sinks.upsertBucketed(spark, dir, decoded, nBuckets = 16)
+      Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 16)
     }
   }
 
@@ -133,8 +81,7 @@ class SinksSpec extends AnyFunSuite {
       .orderBy($"event_id").collect().toSeq
     val mutated = decoded.withColumn("label",
       when($"label" === "alice", "alice-v2").otherwise($"label"))
-    // kill between the gen write and the commit — the in-place variant's
-    // "between bucket swaps" window, except here nothing is exposed
+    // kill between the gen write and the commit: nothing is exposed
     intercept[RuntimeException] {
       Sinks.upsertCommittedImpl(spark, dir, mutated, nBuckets = 8,
         keyCol = "event_id", maxGens = 16, crashBeforeCommit = true)

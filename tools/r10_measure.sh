@@ -1,5 +1,5 @@
 #!/bin/bash
-# Round-10 serial measurement pass. Run AFTER EtlScale finishes; writes one
+# Round-10 serial measurement pass. Run alone on the host; writes one
 # log per stage under /tmp/r10/.
 set -uo pipefail
 cd "$(dirname "$0")/.."

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main directly against the sbt-compiled classes, bypassing the
 # sbt launcher (so long scale runs don't hold the project build lock).
-# Usage: tools/run_main.sh graft.EtlScale [args...]
+# Usage: tools/run_main.sh graft.GenScale [args...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OPENS=""
