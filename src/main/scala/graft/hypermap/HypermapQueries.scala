@@ -276,7 +276,7 @@ object HypermapQueries {
       } finally mock.stop()
       Coverage.requireComplete(s, dir, 27430000L, 27434999L)
       val result = Decode.decode(
-        s.read.schema(Schemas.rawLogs).json(dir + "/chunk_*.json"))
+        s.read.schema(Schemas.rawLogs).json(dir))
         .localCheckpoint(true)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       result

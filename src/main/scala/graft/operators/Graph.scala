@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 import graft.Tables.{t => tbl}
@@ -29,11 +29,8 @@ object Graph {
     * hops per round and each round is just a join + groupBy.min. For
     * graphs with long chains, switch to alternating large/small-star
     * (Kiveris et al., "Connected Components in MapReduce") — same
-    * DataFrame skeleton, different propagation rule.
-    *
-    * Each iteration localCheckpoints the label frame: the loop would
-    * otherwise double the lineage per round and recompile ever-growing
-    * plans (driver-side O(2^iter) analysis).
+    * DataFrame skeleton, different propagation rule. Runs on
+    * [[Rounds.untilStable]].
     *
     * @param edges two-column DataFrame of undirected edges
     * @return (node, cluster) — cluster is the component's min node id
@@ -58,63 +55,35 @@ object Graph {
       .where(col("a").isNotNull && col("b").isNotNull)
   }
 
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val e = cleanEdges(edges, "connectedComponents")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
+  /** The distinct both-ways edge list (x, y, carry…) of `cleanEdges`. */
+  private def undirected(edges: DataFrame, op: String, carry: String*): DataFrame = {
+    val e = cleanEdges(edges, op)
+    val rest = carry.map(col)
+    e.select(col("a").as("x") +: col("b").as("y") +: rest: _*)
+      .union(e.select(col("b").as("x") +: col("a").as("y") +: rest: _*))
       .distinct()
-      .persist()
-    // Convergence check: labels are min-monotone (each round every label
-    // either stays or strictly decreases, node set fixed), so the label
-    // sum is a strictly decreasing potential — "sum unchanged" ⟺
-    // converged. The potential rides the SAME job that materializes the
-    // round's checkpoint (Observation metrics are collected as a
-    // side-output of the localCheckpoint action), so each round is ONE
-    // Spark job, not checkpoint + a separate aggregate — at gate scale
-    // the loop is scheduling-bound and this halves it; at cluster scale
-    // it halves driver round-trips. decimal(38,0) so huge graphs can't
-    // overflow the potential.
-    def checkpointWithPotential(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = Observation()
-      val out = df
-        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("pot"))
-        .localCheckpoint()
-      (out, obs.get.get("pot").orNull.asInstanceOf[java.math.BigDecimal])
-    }
-    var (labels, prevPot) = checkpointWithPotential(
-      und.select(col("x").as("node")).distinct().withColumn("label", col("node")))
-    var iter = 0
-    var converged = prevPot == null // null on an empty graph → converged
-    while (!converged && iter < maxIter) {
-      val neighborMin = und
-        .join(labels.withColumnRenamed("node", "y").withColumnRenamed("label", "ylabel"), Seq("y"))
-        .select(col("x").as("node"), col("ylabel").as("label"))
-      val (next, pot) = checkpointWithPotential(
-        neighborMin.union(labels).groupBy("node").agg(min("label").as("label")))
-      // next is fully materialized (eager localCheckpoint), so the prior
-      // round's blocks are dead — free them now instead of letting every
-      // round's label table pile up in executor storage memory until the
-      // ContextCleaner happens to run (at 100 TB a label table is
-      // O(|nodes|); maxIter leaked copies would evict real caches).
-      CheckpointBridge.freeCheckpoint(labels)
-      labels = next
-      converged = pot.compareTo(prevPot) == 0
-      prevPot = pot
-      iter += 1
-    }
-    und.unpersist()
+  }
+
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val und = undirected(edges, "connectedComponents").persist()
+    // Convergence: labels are min-monotone (each round every label either
+    // stays or strictly decreases, node set fixed), so the label sum is a
+    // strictly decreasing potential — "sum unchanged" ⟺ converged.
+    // decimal(38,0) so huge graphs can't overflow the potential.
     // Unconverged labels are WRONG labels (a component reported as several
-    // clusters) and indistinguishable from right ones — refuse to return
-    // them. Graphs with diameter > maxIter need a larger budget or the
-    // large/small-star rule. Free the final checkpoint before throwing —
-    // callers that retry (e.g. the bench loop swallows failures) must not
-    // accumulate one orphaned label table per attempt.
-    if (!converged) {
-      CheckpointBridge.freeCheckpoint(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(graph diameter exceeds the iteration budget)")
-    }
+    // clusters) that look like right ones, hence the throw past maxIter:
+    // graphs with diameter > maxIter need a larger budget or the
+    // large/small-star rule.
+    val labels = try {
+      Rounds.untilStable("connectedComponents",
+        und.select(col("x").as("node")).distinct().withColumn("label", col("node")),
+        Seq(sum(col("label").cast("decimal(38,0)")).as("pot")), maxIter) { labels =>
+        val neighborMin = und
+          .join(labels.withColumnRenamed("node", "y").withColumnRenamed("label", "ylabel"), Seq("y"))
+          .select(col("x").as("node"), col("ylabel").as("label"))
+        neighborMin.union(labels).groupBy("node").agg(min("label").as("label"))
+      }
+    } finally und.unpersist()
     labels.select(col("node"), col("label").as("cluster"))
   }
 
@@ -129,11 +98,10 @@ object Graph {
     * Each operation is a groupBy.min + join-back on the edge list (never
     * collect_list — per-node neighbor sets stay distributed, so a
     * 100M-degree hub can't OOM a task). Convergence = the canonical edge
-    * set is a fixpoint of both stars, detected by (count, xxhash64-sum)
-    * over the edge set collected by the SAME job that checkpoints the
-    * round (Observation); a false "converged" needs a 64-bit hash-sum
-    * collision between consecutive rounds (~2^-64, documented risk of
-    * the check, not the labels).
+    * set is a fixpoint of both stars, detected by [[Rounds.untilStable]]
+    * on (count, xxhash64-sum) of the edge set; a false "converged" needs
+    * a 64-bit hash-sum collision between consecutive rounds (~2^-64,
+    * documented risk of the check, not the labels).
     *
     * @param edges two-column DataFrame of undirected edges (integral ids)
     * @return (node, cluster) — cluster is the component's min node id;
@@ -175,49 +143,26 @@ object Graph {
       greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
       .distinct()
 
-    def checkpointWithSig(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
-      val obs = Observation()
-      val out = df.observe(obs,
-        count(lit(1)).as("n"),
-        sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")).as("h"))
+    try {
+      val cur = Rounds.untilStable("connectedComponentsStar", canon(cleaned),
+        Seq(sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")).as("h")), maxIter) { e =>
+        canon(smallStar(largeStar(e)))
+      }
+      // Fixpoint edge set is a union of stars (a = member, b = root min).
+      // Left-join back onto the full node set so nodes whose only edges
+      // were self-loops (dropped by canon) still label themselves — same
+      // contract as connectedComponents.
+      val nodes = cleaned.select(col("a").as("node"))
+        .union(cleaned.select(col("b").as("node"))).distinct()
+      // Eager checkpoint: materialize the O(|nodes|) labeling while
+      // `cleaned` is still cached, then drop both the input cache and the
+      // fixpoint edge set — the caller holds only the final small frame.
+      val out = nodes.join(cur.withColumnRenamed("a", "node"), Seq("node"), "left")
+        .select(col("node"), coalesce(col("b"), col("node")).as("cluster"))
         .localCheckpoint()
-      val m = obs.get
-      (out, (m("n").asInstanceOf[Long],
-        m.get("h").orNull.asInstanceOf[java.math.BigDecimal]))
-    }
-
-    var (cur, sig) = checkpointWithSig(canon(cleaned))
-    var iter = 0
-    var converged = sig._1 == 0L // edgeless graph: nothing to label below
-    while (!converged && iter < maxIter) {
-      val (next, nextSig) = checkpointWithSig(canon(smallStar(largeStar(cur))))
-      CheckpointBridge.freeCheckpoint(cur) // superseded round, see connectedComponents
-      converged = nextSig == sig
-      cur = next
-      sig = nextSig
-      iter += 1
-    }
-    if (!converged) { // free before throwing, see connectedComponents
-      cleaned.unpersist(blocking = false)
       CheckpointBridge.freeCheckpoint(cur)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-    }
-    // Fixpoint edge set is a union of stars (a = member, b = root min).
-    // Left-join back onto the full node set so nodes whose only edges
-    // were self-loops (dropped by canon) still label themselves — same
-    // contract as connectedComponents.
-    val nodes = cleaned.select(col("a").as("node"))
-      .union(cleaned.select(col("b").as("node"))).distinct()
-    // Eager checkpoint: materialize the O(|nodes|) labeling while
-    // `cleaned` is still cached, then drop both the input cache and the
-    // fixpoint edge set — the caller holds only the final small frame.
-    val out = nodes.join(cur.withColumnRenamed("a", "node"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("b"), col("node")).as("cluster"))
-      .localCheckpoint()
-    cleaned.unpersist(blocking = false)
-    CheckpointBridge.freeCheckpoint(cur)
-    out
+      out
+    } finally cleaned.unpersist(blocking = false)
   }
 
   /** Incremental connected components: fold a batch of new edges into an
@@ -439,45 +384,27 @@ object Graph {
     * contracts by the damping factor per round, so callers wanting an
     * ε-converged vector run iters = log(ε)/log(damping) (~90 rounds for
     * 1e-6 at 0.85) — same plan shape, just more rounds.
-    *
-    * Each round localCheckpoints and frees its predecessor
-    * (CheckpointBridge discipline — see connectedComponents) so neither
-    * lineage nor superseded score tables accumulate.
     */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85): DataFrame = {
-    val e = cleanEdges(edges, "pageRank")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
-      .persist()
+    val und = undirected(edges, "pageRank").persist()
     // In a symmetric graph every node has out-degree ≥ 1, so there is no
     // dangling-mass redistribution term.
     val deg = und.groupBy(col("x")).agg(count(lit(1)).as("deg")).persist()
     val n = deg.count() // O(|nodes|) driver scalar, needed for the 1/n terms
     val base = (1.0 - damping) / math.max(n, 1L)
-    var pr = deg
-      .select(col("x").as("node"), col("deg"), round(lit(1.0 / math.max(n, 1L)), 9).as("pr"))
-      .localCheckpoint()
-    var lastCkpt = pr
-    // Checkpoint every SECOND round (r18 batch 2 — the tx_textrank
-    // cadence, same rationale): each eager localCheckpoint is a whole
-    // job at the ~0.3 s local scheduling floor, `pr` is referenced once
-    // per round so a skipped checkpoint grows the plan linearly (two
+    // Checkpoint every SECOND round: each eager localCheckpoint is a
+    // whole job at the ~0.3 s local scheduling floor, `pr` is referenced
+    // once per round so a skipped checkpoint grows the plan linearly (two
     // join+agg rounds deep, trivial), and the per-round round(…, 9)
     // barrier keeps the arithmetic identical either way.
-    for (k <- 1 to iters) {
+    val pr = Rounds.fixed(deg.select(col("x").as("node"), col("deg"),
+        round(lit(1.0 / math.max(n, 1L)), 9).as("pr")), iters, every = 2) { pr =>
       val contrib = pr.join(und, pr("node") === und("x"))
         .groupBy(col("y")).agg(sum(col("pr") / col("deg")).as("s"))
-      val next = deg
+      deg
         .join(contrib, deg("x") === contrib("y"), "left")
         .select(col("x").as("node"), col("deg"),
           round(lit(base) + lit(damping) * coalesce(col("s"), lit(0.0)), 9).as("pr"))
-      pr = if (k % 2 == 0 || k == iters) {
-        val ck = next.localCheckpoint()
-        CheckpointBridge.freeCheckpoint(lastCkpt)
-        lastCkpt = ck
-        ck
-      } else next
     }
     und.unpersist(); deg.unpersist()
     pr.select(col("node"), col("pr"))
@@ -533,11 +460,7 @@ object Graph {
     * one aggregation; no windows, no driver iteration.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val e = cleanEdges(edges, "triangleCounts")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
-      .persist()
+    val und = undirected(edges, "triangleCounts").persist()
     val deg = und.groupBy(col("x")).agg(count(lit(1)).as("deg"))
     val oriented = und
       .join(deg.select(col("x"), col("deg").as("dx")), "x")
@@ -598,25 +521,18 @@ object Graph {
     * count, ties to lowest label" is a single total order identical in
     * both engines AND overflow-free for ANY long label (the previous
     * cnt·2³² − label packing silently mis-ranked ids ≥ 2³² or negative —
-    * exactly what the file's own xxhash64-id guidance produces; r13
-    * audit). The negation sits on the COUNT (a row count, never near
-    * 2⁶³) rather than the label: −label wraps Long.MinValue to itself,
-    * ranking that label worst where the oracle's `ORDER BY cnt DESC,
-    * label ASC` ranks it best (r13 advisory).
+    * exactly what the file's own xxhash64-id guidance produces). The
+    * negation sits on the COUNT (a row count, never near 2⁶³) rather
+    * than the label: −label wraps Long.MinValue to itself, ranking that
+    * label worst where the oracle's `ORDER BY cnt DESC, label ASC` ranks
+    * it best.
     * Per round: one join + two keyed aggregations, label table
-    * O(|nodes|), checkpoint-and-free discipline as in
-    * [[connectedComponents]].
+    * O(|nodes|), on [[Rounds.fixed]].
     */
   def labelPropagation(edges: DataFrame, iters: Int = 4): DataFrame = {
-    val e = cleanEdges(edges, "labelPropagation")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
-      .persist()
-    var labels = und.select(col("x").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val und = undirected(edges, "labelPropagation").persist()
+    val labels = Rounds.fixed(und.select(col("x").as("node")).distinct()
+        .withColumn("label", col("node")), iters) { labels =>
       val cnt = und
         .join(labels.select(col("node").as("y"), col("label")), Seq("y"))
         .groupBy(col("x"), col("label")).agg(count(lit(1)).as("cnt"))
@@ -625,12 +541,9 @@ object Graph {
       // counts are row counts (nowhere near 2^63, negation overflow-free)
       // while -label wraps to itself at Long.MinValue and would rank that
       // label worst where the oracle ranks it best.
-      val next = cnt.groupBy(col("x"))
+      cnt.groupBy(col("x"))
         .agg(min_by(col("label"), struct(-col("cnt"), col("label"))).as("label"))
         .select(col("x").as("node"), col("label"))
-        .localCheckpoint()
-      CheckpointBridge.freeCheckpoint(labels)
-      labels = next
     }
     und.unpersist()
     labels
@@ -724,10 +637,7 @@ object Graph {
     * All counts are exact integers; the two divisions are IEEE, 6 dp.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val e = cleanEdges(edges, "modularity")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
+    val und = undirected(edges, "modularity")
     val lx = labels.select(col("node").as("x"), col("label").as("cx"))
     val ly = labels.select(col("node").as("y"), col("label").as("cy"))
     val dmass = und.groupBy(col("x")).agg(count(lit(1)).as("deg"))
@@ -798,52 +708,28 @@ object Graph {
     * edge list against the survivor set — all three shuffle on node id, so
     * a cluster co-partitions them, and the edge list only ever SHRINKS
     * (peeling is monotone), making later rounds cheaper than earlier ones.
-    * CONVERGENCE-CHECKED: each round compares the surviving directed-edge
-    * count against the previous round and stops at the first fixpoint
-    * (no node dropped), so the result is the true k-core for ARBITRARY
-    * input — long pendant chains just take more rounds. `rounds` is the
-    * minimum number of peels to run (the oracle unrolls exactly that
-    * many CTEs, so the gate runs ≥ its unroll depth); `maxRounds` is a
-    * runaway cap — peel chains longer than it raise IllegalStateException
-    * rather than silently returning a non-core. The count per round is
-    * free: the edge list is localCheckpoint'd (an action) anyway.
+    * CONVERGENCE-CHECKED ([[Rounds.untilStable]] on the surviving
+    * directed-edge count): peeling stops at the first fixpoint (no node
+    * dropped), so the result is the true k-core for ARBITRARY input —
+    * long pendant chains just take more rounds. `rounds` is the minimum
+    * number of peels to run (the oracle unrolls exactly that many CTEs,
+    * so the gate runs ≥ its unroll depth); `maxRounds` is a runaway cap —
+    * peel chains longer than it raise IllegalStateException rather than
+    * silently returning a non-core.
     * Returns surviving (node, core_deg) — degree WITHIN the core.
     */
   def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 4,
             maxRounds: Int = 1000): DataFrame = {
-    val e = cleanEdges(edges, "kCore")
-    var und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
-      .localCheckpoint()
-    var prev = und.count()
-    var converged = prev == 0L
-    var r = 0
-    while (r < rounds || (!converged && r < maxRounds)) {
+    val core = Rounds.untilStable("kCore", undirected(edges, "kCore"), Nil, maxRounds,
+        minRounds = rounds) { und =>
       val keep = und.groupBy(col("x")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
         .select(col("x").as("kx"))
-      val next = und
+      und
         .join(keep, und("x") === keep("kx")).drop("kx")
         .join(keep, und("y") === keep("kx")).drop("kx")
-        .localCheckpoint()
-      CheckpointBridge.freeCheckpoint(und)
-      und = next
-      val cur = und.count()
-      converged = cur == prev
-      prev = cur
-      r += 1
     }
-    if (!converged) {
-      // free before throwing (connectedComponents discipline): a
-      // retrying caller must not accumulate one orphaned edge table
-      // per attempt
-      CheckpointBridge.freeCheckpoint(und)
-      throw new IllegalStateException(
-        s"kCore did not converge within maxRounds=$maxRounds peel rounds " +
-          s"($prev directed edges still shrinking); raise maxRounds")
-    }
-    und.groupBy(col("x").as("node")).agg(count(lit(1)).cast("long").as("core_deg"))
+    core.groupBy(col("x").as("node")).agg(count(lit(1)).cast("long").as("core_deg"))
   }
 
   /** gr_kcore — 2-core of the LSH pair graph (≥4 peel rounds to match
@@ -893,9 +779,7 @@ object Graph {
     // exchange reuse already shares the scan within the single job, and
     // at scale the caller hands in a materialized edge artifact anyway
     // (lshPairGraph / containmentTable are eager localCheckpoints).
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
+    val und = undirected(edges, "adamicAdar")
     val deg = und.groupBy(col("x")).agg(count(lit(1)).as("deg"))
     val wedges = und.select(col("x").as("z"), col("y").as("a"))
       .join(und.select(col("x").as("z2"), col("y").as("b")),
@@ -953,7 +837,7 @@ object Graph {
     *
     * Each round is one join (frontier onto edges) + one min-aggregation,
     * both keyed on node id; the dist table is O(reached nodes), and the
-    * checkpoint-and-free loop discipline is [[connectedComponents]]'.
+    * rounds run on [[Rounds.fixed]].
     */
   def bfs(edges: DataFrame, source: Long, rounds: Int = 6): DataFrame = {
     val seed = edges.sparkSession.range(source, source + 1)
@@ -968,21 +852,13 @@ object Graph {
     * empty seed, which every round preserves).
     */
   def bfsFromSeed(edges: DataFrame, seed: DataFrame, rounds: Int = 6): DataFrame = {
-    val e = cleanEdges(edges, "bfs")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct().persist()
-    var dist = seed.select(col("node").cast("long").as("node"),
-        col("dist").cast("long").as("dist"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val next = dist.unionByName(
+    val und = undirected(edges, "bfs").persist()
+    val dist = Rounds.fixed(seed.select(col("node").cast("long").as("node"),
+        col("dist").cast("long").as("dist")), rounds) { dist =>
+      dist.unionByName(
           dist.join(und, dist("node") === und("x"))
             .select(col("y").as("node"), (col("dist") + 1L).as("dist")))
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      CheckpointBridge.freeCheckpoint(dist)
-      dist = next
     }
     und.unpersist()
     dist
@@ -1039,36 +915,27 @@ object Graph {
     * specific path (same operands, same order in any engine) and min() is
     * order-free, so results hash-match without per-round quantization.
     * Rounds bound the hop depth exactly like bfs; each round is one join
-    * + one min-aggregation keyed on node id, dist is O(reached nodes),
-    * checkpoint-and-free loop discipline throughout. Non-negative weights
-    * assumed (Bellman-Ford tolerates negatives, but `rounds` then needs
-    * to reach |V|−1 for convergence).
+    * + one min-aggregation keyed on node id, dist is O(reached nodes).
+    * Non-negative weights assumed (Bellman-Ford tolerates negatives, but
+    * `rounds` then needs to reach |V|−1 for convergence).
     */
   def ssspFromSeed(edges: DataFrame, seed: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 1, "need at least one relaxation round")
     // null/fractional endpoint hygiene: same cleanEdges every sibling
     // entry point applies — a null endpoint would otherwise survive the
-    // relaxation as a spurious null-node distance row (r13 audit)
-    val e = cleanEdges(edges, "ssspFromSeed")
-    val und = e.select(col("a").as("x"), col("b").as("y"), col("w"))
-      .union(e.select(col("b").as("x"), col("a").as("y"), col("w")))
-      .distinct().persist()
-    var dist = seed.select(col("node").cast("long").as("node"),
-        col("dist").cast("double").as("dist"))
-      .localCheckpoint()
-    // Per-round checkpoints stay (r18 batch 2, unlike pageRank/ppr):
-    // dist is referenced TWICE per round (carry-forward union +
-    // relaxation join), so a skipped checkpoint re-executes the whole
-    // lazy round — cadence-2 A/B'd a local wash (1.084 → 1.050 s) and
-    // costs +50% relaxation joins at scale, the wrong side of the trade.
-    for (_ <- 1 to rounds) {
-      val next = dist.unionByName(
+    // relaxation as a spurious null-node distance row
+    val und = undirected(edges, "ssspFromSeed", "w").persist()
+    // Every round is checkpointed (unlike pageRank/ppr): dist is
+    // referenced TWICE per round (carry-forward union + relaxation join),
+    // so a skipped checkpoint re-executes the whole lazy round —
+    // cadence 2 measured a local wash (1.084 → 1.050 s) and costs +50%
+    // relaxation joins at scale, the wrong side of the trade.
+    val dist = Rounds.fixed(seed.select(col("node").cast("long").as("node"),
+        col("dist").cast("double").as("dist")), rounds) { dist =>
+      dist.unionByName(
           dist.join(und, dist("node") === und("x"))
             .select(col("y").as("node"), (col("dist") + col("w")).as("dist")))
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      CheckpointBridge.freeCheckpoint(dist)
-      dist = next
     }
     und.unpersist()
     dist
@@ -1134,20 +1001,13 @@ object Graph {
     * no float fold ever differs between engines.
     */
   def harmonicCloseness(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val e = cleanEdges(edges, "harmonicCloseness")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct().persist()
-    var dist = und.select(col("x").as("src"), col("x").as("node"), lit(0L).as("dist"))
-      .distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val und = undirected(edges, "harmonicCloseness").persist()
+    val dist = Rounds.fixed(und.select(col("x").as("src"), col("x").as("node"),
+        lit(0L).as("dist")).distinct(), rounds) { dist =>
       val exp = dist.join(und, dist("node") === und("x"))
         .select(col("src"), col("y").as("node"), (col("dist") + 1L).as("dist"))
-      val next = dist.select(col("src"), col("node"), col("dist")).union(exp)
+      dist.select(col("src"), col("node"), col("dist")).union(exp)
         .groupBy(col("src"), col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      CheckpointBridge.freeCheckpoint(dist)
-      dist = next
     }
     und.unpersist()
     // lcm(1..rounds): every 1/d term becomes the exact integer lcm/d, so
@@ -1211,10 +1071,7 @@ object Graph {
     * IEEE formula, 6 dp.
     */
   def assortativity(edges: DataFrame): DataFrame = {
-    val e = cleanEdges(edges, "assortativity")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
+    val und = undirected(edges, "assortativity")
     val deg = und.groupBy(col("x")).agg(count(lit(1)).as("deg"))
     val dd = und
       .join(deg.select(col("x"), col("deg").as("dx")), Seq("x"))
@@ -1261,55 +1118,44 @@ object Graph {
     * relevance-to-this-node score for related-document expansion and
     * seed-based spam/trust propagation (TrustRank). Same per-round
     * shape as [[pageRank]] (one join + one aggregation keyed on node,
-    * contribution sums map-side combined, checkpoint-and-free), same
+    * contribution sums map-side combined, checkpoint cadence 2), same
     * per-round 9-dp quantization making the float sums engine-stable;
     * the only change is the base term: (1−d)·1[v ∈ S]/|S| — nodes keep
     * rank ONLY through walk proximity to a seed.
     */
   def pprFromSeed(edges: DataFrame, seed: DataFrame, iters: Int = 5,
                   damping: Double = 0.85): DataFrame = {
-    val e = cleanEdges(edges, "pprFromSeed")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct().persist()
+    val und = undirected(edges, "pprFromSeed").persist()
     val deg = und.groupBy(col("x")).agg(count(lit(1)).as("deg"))
     // |S| counts only seeds PRESENT in the graph: an absent seed would
     // otherwise keep its share of the restart mass while the left join
-    // below drops its row — silently scaling every score down (r13
-    // audit). Restart mass is preserved among the seeds that exist.
+    // below drops its row — silently scaling every score down. Restart
+    // mass is preserved among the seeds that exist.
     val seeds = seed.select(col("node").cast("long").as("sn")).distinct()
       .join(deg.select(col("x").as("sn")), Seq("sn"), "left_semi")
     val ns = seeds.agg(count(lit(1)).as("ns"))
     // (node, deg, seedw) — seedw = 1/|S| on seeds, 0 elsewhere; the whole
-    // per-node state the iteration needs, checkpointed once.
+    // per-node state the iteration needs, computed once.
     val nodes = deg
       .join(seeds, deg("x") === seeds("sn"), "left")
       .crossJoin(broadcast(ns))
       .select(col("x").as("node"), col("deg"),
         when(col("sn").isNull, lit(0.0))
           .otherwise(round(lit(1.0) / col("ns"), 9)).as("seedw"))
-      .localCheckpoint()
-    var pr = nodes.select(col("node"), col("deg"), col("seedw").as("pr"))
-      .localCheckpoint()
-    var lastCkpt = pr
+      .persist()
     // cadence-2 checkpointing — see pageRank for the rationale (pr is
     // referenced once per round; round(…, 9) keeps arithmetic identical)
-    for (k <- 1 to iters) {
+    val pr = Rounds.fixed(nodes.select(col("node"), col("deg"), col("seedw").as("pr")),
+        iters, every = 2) { pr =>
       val contrib = pr.join(und, pr("node") === und("x"))
         .groupBy(col("y")).agg(sum(col("pr") / col("deg")).as("s"))
-      val next = nodes
+      nodes
         .join(contrib, nodes("node") === contrib("y"), "left")
         .select(col("node"), col("deg"),
           round(lit(1.0 - damping) * col("seedw") +
             lit(damping) * coalesce(col("s"), lit(0.0)), 9).as("pr"))
-      pr = if (k % 2 == 0 || k == iters) {
-        val ck = next.localCheckpoint()
-        CheckpointBridge.freeCheckpoint(lastCkpt)
-        lastCkpt = ck
-        ck
-      } else next
     }
-    und.unpersist()
+    und.unpersist(); nodes.unpersist()
     pr.select(col("node"), col("pr"))
   }
 
@@ -1362,10 +1208,7 @@ object Graph {
     */
   val grDegDist: Q = (s, d) => {
     import s.implicits._
-    val e = cleanEdges(lshPairGraph(s, d), "degDist")
-    e.select($"a".as("x"), $"b".as("y"))
-      .union(e.select($"b".as("x"), $"a".as("y")))
-      .distinct()
+    undirected(lshPairGraph(s, d), "degDist")
       .groupBy($"x").agg(count(lit(1)).as("deg"))
       .groupBy($"deg").agg(count(lit(1)).as("n_nodes"))
       .orderBy($"deg")
@@ -1388,9 +1231,7 @@ object Graph {
     */
   def neighborJaccard(edges: DataFrame): DataFrame = {
     val e = cleanEdges(edges, "neighborJaccard")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct()
+    val und = undirected(edges, "neighborJaccard")
     val deg = und.groupBy(col("x")).agg(count(lit(1)).as("deg"))
     val wedges = und.select(col("x").as("z"), col("y").as("a"))
       .join(und.select(col("x").as("z2"), col("y").as("b")),
@@ -1445,8 +1286,7 @@ object Graph {
     * authorities are "parts bought by broad buyers" — the bipartite
     * ranking behind catalog curation; the same loop ranks doc↔entity or
     * query↔url graphs. Each half-step is one keyed join-aggregate
-    * (shuffle on the side being scored), pageRank's checkpoint-and-free
-    * loop discipline.
+    * (shuffle on the side being scored).
     *
     * Normalization is L∞ (divide by the max) rather than the textbook
     * L2: max is order-free across partitions, while a float L2 sum is
@@ -1465,8 +1305,13 @@ object Graph {
     * dst). Passing the same frame for both is the ad-hoc path; the
     * gated path passes two hash-BUCKETED copies of the artifact so each
     * half-step's 60 M-edge join side is already partitioned on its key
-    * and only the node table exchanges (r15 verdict item 1 — before
-    * this, each of the six half-steps re-shuffled the full edge list).
+    * and only the node table exchanges (otherwise each of the six
+    * half-steps re-shuffles the full edge list).
+    *
+    * Hand-rolled rather than on [[Rounds]]: the loop alternates two
+    * frames and returns both, while a Rounds loop carries one. Each
+    * checkpoint still frees the one it supersedes (the Rounds
+    * discipline).
     */
   private def hitsBipartiteOn(eBySrc: DataFrame, eByDst: DataFrame,
                               iters: Int, shjHint: Boolean = false): DataFrame = {
@@ -1474,7 +1319,7 @@ object Graph {
       .select(col("id"), lit(1.0).as("hub")).localCheckpoint()
     // no zero-auth seed: the first half-round derives auth from hub and
     // would free the seed unread — materializing it burned one full
-    // distinct-shuffle of the edge list per call (r13 audit)
+    // distinct-shuffle of the edge list per call
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
       // Node tables are dimension-sized and LOOK broadcastable, but a
@@ -1637,22 +1482,23 @@ object Graph {
     * (node, bc) where bc is the summed dependency δ over the given
     * sources (v = src rows excluded per Brandes). Levels bounds both
     * passes; see [[grBetweenness]] for the discipline notes.
+    *
+    * Hand-rolled rather than on [[Rounds]]: the backward pass reads
+    * every forward level, so levels are kept, not superseded, and the
+    * forward pass stops early once a frontier is empty. The visited
+    * frame and every level are still freed (the Rounds discipline).
     */
   def brandes(edges: DataFrame, sources: DataFrame,
               levels: Int = BcLevels): DataFrame = {
-    val e = cleanEdges(edges, "brandes")
-    val und = e.select(col("a").as("x"), col("b").as("y"))
-      .union(e.select(col("b").as("x"), col("a").as("y")))
-      .distinct().persist()
+    val und = undirected(edges, "brandes").persist()
     val seed = sources.select(col("src"), col("src").as("node"), lit(1L).as("sigma"))
       .localCheckpoint()
     // forward: lvls(r) = (src, node, sigma) at depth exactly r; each
     // cumulative visited frame is dead as soon as its successor
-    // checkpoints — free it then (the connectedComponents discipline;
-    // they leaked until the r13 audit)
+    // checkpoints — free it then
     val lvls = scala.collection.mutable.ArrayBuffer(seed)
     var visited = seed.select(col("src"), col("node")).localCheckpoint()
-    // Saturation early-exit (r18 batch 4): once a frontier is EMPTY,
+    // Saturation early-exit: once a frontier is EMPTY,
     // every deeper level is empty by construction (it expands the empty
     // frame) and visited cannot change — so the remaining rounds' join/
     // anti-join/checkpoint jobs compute nothing. Re-using the empty

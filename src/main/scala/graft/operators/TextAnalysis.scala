@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import graft.Tables.{t => tbl}
 
 /** Text-analysis operators for training-data pipelines: token counting,
@@ -714,7 +715,11 @@ object TextAnalysis {
   private def bpeSyms(wrapped: String): org.apache.spark.sql.Column =
     split(expr(s"substr($wrapped, 2, length($wrapped) - 2)"), s"$BpeS2$BpeS1")
 
-  /** Train `n` merges; returns (merge_rank, lhs, rhs) in training order. */
+  /** Train `n` merges; returns (merge_rank, lhs, rhs) in training order.
+    * Hand-rolled rather than on [[Rounds]]: every round collects its
+    * argmax pair to the driver, and the merges between checkpoints form
+    * a lazy replace chain whose checkpoint is not a round of its own.
+    */
   def bpeTrain(docs: DataFrame, n: Int = BpeN): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1952,24 +1957,23 @@ object TextAnalysis {
       .select($"x", $"y", ($"w".cast("double") / $"wd").as("frac"))
       .localCheckpoint()
     val n = wdeg.count()
-    var pr = wdeg.select($"x".as("node"), round(lit(1.0 / math.max(n, 1L)), 9).as("pr"))
-      .localCheckpoint()
-    for (k <- 1 to 5) {
+    // Checkpoint every SECOND round, not every round: each eager
+    // localCheckpoint is a whole job (~0.3 s scheduling floor per round,
+    // PERF.md IterBench), and two rounds of lineage is a trivially small
+    // plan — the per-round round(…, 9) barrier keeps the arithmetic
+    // identical either way. Halves the job count of the
+    // scheduling-floor-bound wall.
+    val pr = Rounds.fixed(wdeg.select($"x".as("node"),
+        round(lit(1.0 / math.max(n, 1L)), 9).as("pr")), 5, every = 2) { pr =>
       val contrib = pr.join(edges, pr("node") === edges("x"))
         .groupBy($"y").agg(sum($"pr" * $"frac").as("s"))
-      val next = wdeg
+      wdeg
         .join(contrib, wdeg("x") === contrib("y"), "left")
         .select($"x".as("node"),
           round(lit(0.15 / math.max(n, 1L)) +
             lit(0.85) * coalesce($"s", lit(0.0)), 9).as("pr"))
-      // Checkpoint every SECOND round, not every round: each eager
-      // localCheckpoint is a whole job (~0.3 s scheduling floor per
-      // round, PERF.md IterBench), and two rounds of lineage is a
-      // trivially small plan — the per-round round(…, 9) barrier keeps
-      // the arithmetic identical either way. Halves the job count of
-      // the scheduling-floor-bound wall.
-      pr = if (k % 2 == 0 || k == 5) next.localCheckpoint() else next
     }
+    Seq(wdeg, edges).foreach(CheckpointBridge.freeCheckpoint)
     pr.withColumn("rk", row_number().over(
         Window.orderBy($"pr".desc, $"node")))
       .where($"rk" <= 20)

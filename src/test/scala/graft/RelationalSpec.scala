@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkTestSession {
   // One shared local session for the whole test JVM (suites run in one fork).
   lazy val spark: SparkSession = GraftSession.local(cpus = "4", appName = "graft-test")
+  /** The smallest generated scale factor (TESTDATA.md). */
+  val smokeSf = "/root/testdata/sf0.001"
 }
 
 class RelationalSpec extends AnyFunSuite {

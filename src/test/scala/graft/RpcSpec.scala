@@ -73,7 +73,7 @@ class RpcSpec extends AnyFunSuite {
       Rpc.fetch(mock.endpoint, From, To, dir, chunkSize = 1000L)
       val cov = spark.read.schema(Coverage.schema).json(s"$dir/_coverage")
       assert(cov.count() == 5) // one record per chunk, not per run
-      assert(spark.read.schema(Schemas.rawLogs).json(s"$dir/chunk_*.json")
+      assert(spark.read.schema(Schemas.rawLogs).json(dir)
         .count() == Fixtures.goldenLogs.size)
     } finally {
       mock.stop()
@@ -180,7 +180,7 @@ class RpcSpec extends AnyFunSuite {
       assert(r.chunks == 1) // exactly the hole, nothing re-fetched
       Coverage.requireComplete(spark, rawDir, From, To)
       // all golden rows landed exactly once across the three runs
-      assert(spark.read.schema(Schemas.rawLogs).json(s"$rawDir/chunk_*.json")
+      assert(spark.read.schema(Schemas.rawLogs).json(rawDir)
         .count() == Fixtures.goldenLogs.size)
       // caught up: the healed dir no-ops
       assert(Rpc.pollOnce(mock.endpoint, rawDir, genesis = From,

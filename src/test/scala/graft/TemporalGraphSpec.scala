@@ -809,4 +809,42 @@ class TemporalGraphSpec extends AnyFunSuite {
     assert(withGhost == present,
       s"an absent seed must not scale scores: $withGhost vs $present")
   }
+
+  test("iterative operators leave persisted only the checkpoints their result reads") {
+    // A warm second call: whatever the first call memoised (the tx_textrank
+    // bigram counts) is persisted before the measured call, so every
+    // persisted RDD the call adds is its own, and only the blocks the
+    // returned frame still reads may stay.
+    import org.apache.spark.sql.graftbridge.CheckpointBridge
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (10L, 11L))
+      .toDF("a", "b")
+    val seed = Seq((1L, 0L)).toDF("node", "dist")
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(edges)),
+      "pprFromSeed" -> (() => Graph.pprFromSeed(edges, seed.select($"node"))),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges)),
+      "bfsFromSeed" -> (() => Graph.bfsFromSeed(edges, seed)),
+      "ssspFromSeed" -> (() => Graph.ssspFromSeed(edges.withColumn("w", lit(0.5)), seed)),
+      "harmonicCloseness" -> (() => Graph.harmonicCloseness(edges)),
+      "connectedComponents" -> (() => Graph.connectedComponents(edges)),
+      "connectedComponentsStar" -> (() => Graph.connectedComponentsStar(edges)),
+      "kCore" -> (() => Graph.kCore(edges)),
+      "tx_textrank" -> (() => SparkEntry.queries("tx_textrank")(spark, SparkTestSession.smokeSf)))
+    def release(df: org.apache.spark.sql.DataFrame): Unit =
+      CheckpointBridge.checkpointedRdds(df).foreach(_.unpersist(blocking = false))
+    calls.foreach { case (name, call) =>
+      val warm = call()
+      warm.collect()
+      release(warm)
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val result = call()
+      result.collect()
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      val read = CheckpointBridge.checkpointedRdds(result).map(_.id).toSet
+      assert(added == read,
+        s"$name left ${(added -- read).size} block sets persisted beyond its result's ${read.size}")
+      release(result)
+    }
+  }
 }
