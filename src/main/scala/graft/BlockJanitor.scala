@@ -62,7 +62,7 @@ object BlockJanitor {
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
         if (org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed(rdd) &&
             !protectedIds.contains(key(sc, id)))
-          rdd.unpersist(blocking = false)
+          org.apache.spark.rdd.GraftRddBridge.release(rdd, blocking = false)
       }
     }
   }

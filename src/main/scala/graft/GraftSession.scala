@@ -67,6 +67,10 @@ object GraftSession {
       // pinned"), which also proves >128-key tasks stay on the hash
       // path at this value.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
+      // Static (shared by every session): one committed-tail micro-batch
+      // generates ~215 classes, which a cache of Spark's default 100 would
+      // evict and recompile on every batch.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

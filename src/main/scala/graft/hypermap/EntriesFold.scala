@@ -1,6 +1,6 @@
 package graft.hypermap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import graft.functions.evm
@@ -162,30 +162,40 @@ object EntriesFold {
     *   refreshed = fold(relevant) limited to affected keys.
     * Returns (affected keys as a one-column `k` frame, refreshed entry
     * rows for those keys). The caller upserts ONLY the refreshed rows
-    * (`Sinks.upsertCommitted`), an O(touched) write. Safe as an upsert
-    * because the event log is append-only: a key once folded to an entry
-    * always refolds to one (refreshed never "deletes"). Previous entries
-    * with the affected keys anti-joined away, unioned with `refreshed`,
-    * equal the full rebuild (HypermapSpec).
+    * (`Sinks.upsertCommitted`). Safe as an upsert because the event log is
+    * append-only: a key once folded to an entry always refolds to one
+    * (refreshed never "deletes"). Previous entries with the affected keys
+    * anti-joined away, unioned with `refreshed`, equal the full rebuild
+    * (HypermapSpec).
     *
     * `previousEntries` is only probed for the ROOT row, so a caller may
     * pass a point read of it (Tail passes `Sinks.lookupCommitted`).
     *
     * Cost contract, per call, run eagerly: one job collects the batch's
-    * keys to the driver; at most one job probes `previousEntries` for
-    * ROOT (only when the batch references ROOT); one job scans
-    * `allEvents` once, with a hash-set filter on the keys, and collects
-    * the touched keys' history. Driver memory is O(batch keys + history
-    * of touched keys). Both returned frames are local plans over that
-    * collected data: they hold no cached blocks, and each action on
-    * `refreshed` runs only the fold's own jobs over the history, never
-    * another scan of `allEvents`. That is the tail shape; a batch that
-    * touches most keys collects most of the history, so a backfill
-    * belongs to the batch path (`EtlJob.run`).
+    * keys; at most one probes `previousEntries` for ROOT (only when the
+    * batch references it); one scan of `allEvents` with a hash-set filter
+    * on the keys collects at most [[HistoryCap]] + 1 rows of their
+    * history. At or under the cap the fold runs over that copy in ≤ 2
+    * jobs and `refreshed` is a local relation of its rows in the caller's
+    * session: driver memory O(batch keys + touched history), no blocks
+    * held. Over it (a spread batch, e.g. a restart after an outage)
+    * `refreshed` is the same fold over the filtered scan, lazy and
+    * distributed. A batch touching most keys refolds most of the history
+    * either way: backfill is `EtlJob.run`.
     */
   def incrementalDelta(allEvents: DataFrame, previousEntries: DataFrame,
                        newBatch: DataFrame,
-                       normalizeTransferIds: Boolean = false): (DataFrame, DataFrame) = {
+                       normalizeTransferIds: Boolean = false): (DataFrame, DataFrame) =
+    incrementalDeltaImpl(allEvents, previousEntries, newBatch, normalizeTransferIds,
+      HistoryCap)
+
+  /** Tens of MB of heap, 100× a tail batch's history: past it the
+    * distributed fold's fixed job cost is small next to its data anyway. */
+  private val HistoryCap = 100000
+
+  private[graft] def incrementalDeltaImpl(
+      allEvents: DataFrame, previousEntries: DataFrame, newBatch: DataFrame,
+      normalizeTransferIds: Boolean, historyCap: Int): (DataFrame, DataFrame) = {
     val spark = allEvents.sparkSession
     import spark.implicits._
     val tkey =
@@ -205,11 +215,32 @@ object EntriesFold {
       $"childhash".isin(affectedKeys: _*) || $"parenthash".isin(affectedKeys: _*) ||
         $"entry".isin(affectedKeys: _*) ||
         ($"eventType" === "Transfer" && tkey.isin(affectedKeys: _*)))
-    val relevant = spark.createDataFrame(history.collect().toSeq.asJava, allEvents.schema)
-    val refreshed = fold(relevant, normalizeTransferIds)
-      .where($"namehash".isin(affectedKeys: _*))
+    val collected = history.limit(historyCap + 1).collect()
+    def refresh(relevant: DataFrame) =
+      fold(relevant, normalizeTransferIds).where($"namehash".isin(affectedKeys: _*))
+    val refreshed = if (collected.length > historyCap) refresh(history) else {
+      val local = refresh(smallQuerySession(spark).createDataFrame(collected.toSeq.asJava,
+        allEvents.schema))
+      spark.createDataFrame(local.collect().toSeq.asJava, local.schema)
+    }
     (affectedKeys.toDF("k"), refreshed)
   }
+
+  /** One session per parent for folds over driver-local rows, its conf
+    * fixed here: without AQE, with one shuffle partition and no size-based
+    * broadcasts, the fold is one job plus one for the hinted broadcast of
+    * ROOT's creation, instead of a job per exchange. Codegen stays on.
+    */
+  private val smallQuerySessions =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SparkSession])
+  private def smallQuerySession(parent: SparkSession): SparkSession =
+    smallQuerySessions.computeIfAbsent(parent, { p =>
+      val s = p.newSession()
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      s.conf.set("spark.sql.shuffle.partitions", "1")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s
+    })
 
   /** E10 extension (off by default in parity mode): resolve fullName by
     * iterating parent links label.parent.grandparent…, bounded depth.

@@ -14,13 +14,13 @@ object QueryService {
     * pagination with the reference's [1,100] limit clamp and page>=1 clamp.
     * Returns (page rows, total count) like GetEventsResponse.
     *
-    * Offset pagination needs a global order; rows 1..page*limit are first
-    * reduced with a distributed top-k (TakeOrderedAndProject — each task
-    * keeps its local top page*limit, only those reach the driver-side
-    * merge), and the offset window runs over that ≤ page*limit-row result.
-    * A row_number window directly over the filtered table would move every
-    * surviving row to one partition — the classic 100 TB cliff. For deep
-    * pages use getEventsAfter below (seekable, no top-k growth).
+    * Offset pagination needs a global order; the page is the top
+    * page*limit rows minus the first (page-1)*limit, which Spark plans as
+    * one distributed top-k with an offset (TakeOrderedAndProject — each
+    * task keeps its local top page*limit, only those reach the
+    * driver-side merge). A window over the filtered table would move
+    * every surviving row to one partition — the classic 100 TB cliff. For
+    * deep pages use getEventsAfter below (seekable, no top-k growth).
     */
   def getEvents(events: DataFrame, eventType: Option[String] = None,
                 startDate: Option[String] = None, page: Int = 1,
@@ -34,16 +34,11 @@ object QueryService {
         unix_timestamp(to_date(lit(d), "yyyy-MM-dd")))
     }
     val total = filtered.count()
-    val w = Window.orderBy(col("blockNumber").desc, col("logIndex").desc)
+    val top = math.min(p.toLong * l, Int.MaxValue.toLong).toInt
     val pageDf = filtered
       .orderBy(col("blockNumber").desc, col("logIndex").desc)
-      .limit(math.min(p.toLong * l, Int.MaxValue.toLong).toInt)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") > (p.toLong - 1) * l)
-      .drop("rn")
-      // re-assert the contract order: the window sort feeds row_number but
-      // guarantees nothing about output order after the filter
-      .orderBy(col("blockNumber").desc, col("logIndex").desc)
+      .limit(top)
+      .offset(math.min((p - 1).toLong * l, top.toLong).toInt)
     (pageDf, total)
   }
 

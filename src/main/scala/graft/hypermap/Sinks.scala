@@ -87,7 +87,11 @@ object Sinks {
     * Each batch is deduplicated per key, hashed to
     * `bucket = pmod(xxhash64(keyCol), nBuckets)`, and merged
     * last-writer-wins into ONLY the buckets it touches: write
-    * amplification is O(table/nBuckets × touched buckets), not O(table).
+    * amplification is O(min(table, touched buckets × rows per bucket)).
+    * `nBuckets` is the least power of two holding the table at
+    * [[RowsPerBucket]] rows per bucket, chosen at the first commit from
+    * the batch's rows and at each compaction (which rewrites every bucket
+    * anyway) from the manifest's row count; commits in between keep it.
     * Readers resolve data only through a manifest, so the whole
     * multi-bucket batch commits in ONE atomic rename — the poor-man's
     * Delta log. Returns (matched/updated, inserted) like the reference's
@@ -96,7 +100,7 @@ object Sinks {
     *
     * Layout under `dir`:
     *   _MANIFEST                the committed snapshot: a header line
-    *                            `nBuckets keyCol`, then `bucket gen` lines
+    *                            `nBuckets keyCol rows`, then `bucket gen` lines
     *   gen-<nonce>/bucket=K/…   immutable per-commit parquet data
     *
     * Commit protocol: write the merged touched buckets into a fresh gen
@@ -111,21 +115,25 @@ object Sinks {
     * Reads stay pruned: the manifest maps each bucket to exactly one gen
     * dir, so a point/bucket read opens only `gen/bucket=K` paths, resolved
     * through the snapshot instead of the live directory tree. A later
-    * call with a different `nBuckets` or `keyCol` is refused, since it
-    * would hash keys away from the rows they replace. Generations
-    * accumulate one per batch; once they exceed `maxGens` the commit is
-    * followed by a fold of the whole table into a single gen (amortized
-    * O(table/maxGens) per batch — the same economics as Delta checkpoint
-    * compaction).
+    * call with a different `keyCol` is refused, since it would hash keys
+    * away from the rows they replace. Generations accumulate one per
+    * batch; once they exceed `maxGens` the commit is followed by a fold of
+    * the whole table into a single gen (amortized O(table/maxGens) per
+    * batch — the same economics as Delta checkpoint compaction).
     */
   def upsertCommitted(spark: SparkSession, dir: String, updates: DataFrame,
-                      nBuckets: Int = 256, keyCol: String = "event_id",
-                      maxGens: Int = 16): (Long, Long) =
-    upsertCommittedImpl(spark, dir, updates, nBuckets, keyCol, maxGens,
+                      keyCol: String = "event_id", maxGens: Int = 16): (Long, Long) =
+    upsertCommittedImpl(spark, dir, updates, keyCol, maxGens, RowsPerBucket,
       crashBeforeCommit = false)
 
+  /** A commit rewrites each bucket it touches as one file, and a small
+    * commit costs its file count more than its bytes: a table under 8,192
+    * rows is one file.
+    */
+  private val RowsPerBucket = 8192
+
   private[graft] final case class Manifest(
-      nBuckets: Int, keyCol: String, buckets: Map[Long, String])
+      nBuckets: Int, keyCol: String, rows: Long, buckets: Map[Long, String])
 
   private def manifestPath(dir: String) = new Path(dir, "_MANIFEST")
 
@@ -138,11 +146,11 @@ object Sinks {
       val lines =
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
         finally in.close()
-      val Array(n, k) = lines.head.split(" ", 2)
+      val Array(n, k, rows) = lines.head.split(" ", 3)
       val buckets = lines.tail.map { l =>
         val Array(b, g) = l.split(" ", 2); (b.toLong, g)
       }.toMap
-      Some(Manifest(n.toInt, k, buckets))
+      Some(Manifest(n.toInt, k, rows.toLong, buckets))
     }
   }
 
@@ -151,7 +159,7 @@ object Sinks {
     val tmp = new Path(dir, s"_MANIFEST.tmp-${System.nanoTime()}")
     val fs = tmp.getFileSystem(conf)
     val out = fs.create(tmp, true)
-    val body = (s"${m.nBuckets} ${m.keyCol}" +:
+    val body = (s"${m.nBuckets} ${m.keyCol} ${m.rows}" +:
       m.buckets.toSeq.sortBy(_._1).map { case (b, g) => s"$b $g" })
       .mkString("", "\n", "\n")
     out.write(body.getBytes("UTF-8"))
@@ -218,9 +226,9 @@ object Sinks {
 
   /** Point lookup against a manifest-committed table: hash the keys to
     * their buckets (the same expression the write path uses, so the two
-    * can never drift) and open ONLY those gen/bucket paths — at 256
-    * buckets a single-key lookup reads 1/256th of the table's files by
-    * construction, no matter how many generations the snapshot spans.
+    * can never drift) and open ONLY those gen/bucket paths — a
+    * single-key lookup reads one bucket's file, 1/nBuckets of the table,
+    * no matter how many generations the snapshot spans.
     * This is the reference's indexed `findOne` (actions.ts point reads)
     * re-expressed as manifest-resolved file pruning. Building the frame
     * starts no Spark job.
@@ -284,59 +292,55 @@ object Sinks {
   }
 
   /** Per call: one job for the count and touched buckets (which also
-    * materializes `updates`), then one write that reads the touched
-    * buckets once, counting matched keys as it merges. Manifest and GC
-    * work is driver-side file I/O.
+    * materializes `updates`; a first commit counts it once before, to size
+    * the layout), then one write that reads the touched buckets once,
+    * counting matched keys as it merges. Manifest and GC work is
+    * driver-side file I/O.
     */
   private[graft] def upsertCommittedImpl(
       spark: SparkSession, dir: String, updates: DataFrame,
-      nBuckets: Int, keyCol: String, maxGens: Int,
+      keyCol: String, maxGens: Int, rowsPerBucket: Int,
       crashBeforeCommit: Boolean): (Long, Long) = {
-    require(nBuckets > 0, "nBuckets must be positive")
     val current = readManifest(spark, dir)
+    current.foreach(m => require(m.keyCol == keyCol,
+      s"upsertCommitted layout mismatch for $dir: table is keyed on ${m.keyCol}, " +
+        s"caller passed keyCol=$keyCol"))
     gcUnreferenced(spark, dir, current) // sweep any crashed commit's orphans
-    val bucketed = dedupeDeterministicBy(updates, keyCol)
-      .withColumn("bucket", bucketCol(keyCol, nBuckets))
-      .cache()
+    val deduped = dedupeDeterministicBy(updates, keyCol).cache()
     try {
+      val m = current.getOrElse(
+        Manifest(bucketsFor(deduped.count(), rowsPerBucket), keyCol, 0L, Map.empty))
+      val bucketed = deduped.withColumn("bucket", bucketCol(keyCol, m.nBuckets))
       val (nUpdates, touched) = rowsAndBuckets(bucketed)
       if (nUpdates == 0) return (0L, 0L)
       val gen = s"gen-${System.nanoTime()}"
-      val genPath = s"$dir/$gen"
-      current match {
-        case None =>
-          writeBuckets(bucketed, touched.size, genPath)
-          if (crashBeforeCommit) throw new RuntimeException("injected crash before commit")
-          writeManifest(spark, dir, Manifest(nBuckets, keyCol, touched.map(_ -> gen).toMap))
-          (0L, nUpdates)
-        case Some(m) =>
-          require(m.nBuckets == nBuckets && m.keyCol == keyCol,
-            s"upsertCommitted layout mismatch for $dir: table has " +
-              s"nBuckets=${m.nBuckets}, keyCol=${m.keyCol}; caller passed " +
-              s"nBuckets=$nBuckets, keyCol=$keyCol")
-          val liveTouched = touched.filter(m.buckets.contains)
-          val matches = new Observation()
-          val merged =
-            if (liveTouched.isEmpty) bucketed
-            else bucketed.unionByName(
-              readLive(spark, dir, m, Some(liveTouched))
-                .join(bucketed.select(col(keyCol), lit(true).as("__updated")),
-                  Seq(keyCol), "left_outer")
-                .observe(matches, count(col("__updated")).as("matched"))
-                .where(col("__updated").isNull).drop("__updated"),
-              allowMissingColumns = true)
-          writeBuckets(merged, touched.size, genPath)
-          val matched =
-            if (liveTouched.isEmpty) 0L else matches.get("matched").asInstanceOf[Long]
-          if (crashBeforeCommit) throw new RuntimeException("injected crash before commit")
-          val next = m.copy(buckets = m.buckets ++ touched.map(_ -> gen))
-          writeManifest(spark, dir, next)
-          gcUnreferenced(spark, dir, Some(next))
-          compactIfNeeded(spark, dir, next, maxGens)
-          (matched, nUpdates - matched)
-      }
-    } finally bucketed.unpersist()
+      val liveTouched = touched.filter(m.buckets.contains)
+      val matches = new Observation()
+      val merged =
+        if (liveTouched.isEmpty) bucketed
+        else bucketed.unionByName(
+          readLive(spark, dir, m, Some(liveTouched))
+            .join(bucketed.select(col(keyCol), lit(true).as("__updated")),
+              Seq(keyCol), "left_outer")
+            .observe(matches, count(col("__updated")).as("matched"))
+            .where(col("__updated").isNull).drop("__updated"),
+          allowMissingColumns = true)
+      writeBuckets(merged, touched.size, s"$dir/$gen")
+      val matched =
+        if (liveTouched.isEmpty) 0L else matches.get("matched").asInstanceOf[Long]
+      if (crashBeforeCommit) throw new RuntimeException("injected crash before commit")
+      val next = m.copy(rows = m.rows + nUpdates - matched,
+        buckets = m.buckets ++ touched.map(_ -> gen))
+      writeManifest(spark, dir, next)
+      gcUnreferenced(spark, dir, Some(next))
+      compactIfNeeded(spark, dir, next, maxGens, rowsPerBucket)
+      (matched, nUpdates - matched)
+    } finally deduped.unpersist()
   }
+
+  /** The least power of two that holds `rows` at `rowsPerBucket` each. */
+  private def bucketsFor(rows: Long, rowsPerBucket: Int): Int =
+    Iterator.iterate(1)(_ * 2).find(_.toLong * rowsPerBucket >= rows).get
 
   /** Write `df` partitioned by its `nBuckets` distinct buckets, one file
     * per bucket. Repartitioning by bucket first makes each bucket one
@@ -352,15 +356,21 @@ object Sinks {
       .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
 
   /** Fold every bucket into one fresh gen when the snapshot `m` references
-    * more than `maxGens` generations — itself a manifest commit, so it
-    * inherits the same crash-safety.
+    * more than `maxGens` generations, re-sizing `nBuckets` to the committed
+    * row count — itself a manifest commit, so it inherits the same
+    * crash-safety. The new manifest lists the bucket dirs written.
     */
   private def compactIfNeeded(spark: SparkSession, dir: String, m: Manifest,
-                              maxGens: Int): Unit = {
+                              maxGens: Int, rowsPerBucket: Int): Unit = {
     if (m.buckets.values.toSet.size <= maxGens) return
-    val gen = s"gen-${System.nanoTime()}"
-    writeBuckets(readLive(spark, dir, m, None), m.buckets.size, s"$dir/$gen")
-    val compacted = m.copy(buckets = m.buckets.keys.map(_ -> gen).toMap)
+    val gen = new Path(dir, s"gen-${System.nanoTime()}")
+    val nBuckets = bucketsFor(m.rows, rowsPerBucket)
+    writeBuckets(readLive(spark, dir, m, None).withColumn("bucket", bucketCol(m.keyCol, nBuckets)),
+      nBuckets, gen.toString)
+    val written = gen.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(gen)
+      .map(_.getPath.getName).filter(_.startsWith("bucket="))
+      .map(_.stripPrefix("bucket=").toLong -> gen.getName).toMap
+    val compacted = m.copy(nBuckets = nBuckets, buckets = written)
     writeManifest(spark, dir, compacted)
     gcUnreferenced(spark, dir, Some(compacted))
   }

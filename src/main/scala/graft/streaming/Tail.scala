@@ -69,15 +69,13 @@ object Tail {
     * the next complete snapshot, never a mix. Read it with
     * `Sinks.readCommitted` or `Sinks.lookupCommitted`.
     *
-    * Compaction: every commit folds the snapshot back to ONE generation
-    * once it references more than `maxGens`, so at a 30 s trigger a
-    * day's 2,880 micro-batch generations stay bounded at `maxGens`, with
-    * the fold cost amortized O(table/maxGens) per batch and the same
-    * crash-safety as any commit. File count in the serving table is
-    * therefore ≤ maxGens·touched-buckets at all times (StreamingSpec
-    * "bounded file count"). The events dir is the write-once archive
-    * log, deliberately append-only; its file hygiene is an offline
-    * `ZOrder.compaction` pass over date partitions.
+    * Compaction: a commit folds the snapshot back to ONE generation once
+    * it references more than `maxGens`, amortized O(table/maxGens) per
+    * batch with the same crash-safety as any commit, so the serving table
+    * holds ≤ maxGens·nBuckets files at all times (StreamingSpec
+    * "auto-compacts"); the table sizes `nBuckets` from its own row count.
+    * The events dir is the write-once archive log, deliberately
+    * append-only; its file hygiene is an offline `ZOrder.compaction` pass.
     *
     * Cost contract, per micro-batch with new events:
     *   - scans: the batch once for the insert and once for its keys; the
@@ -87,44 +85,33 @@ object Tail {
     *   - writes: the novel events and one new generation holding only
     *     the touched buckets (plus, every `maxGens` batches, a compaction
     *     of the whole table);
-    *   - jobs: a fixed number for the insert, the key and history collects
-    *     and the upsert, plus the fold's own jobs over the collected
-    *     history; none per live generation and none to list or infer a
-    *     schema (TailJobBudgetSpec pins the count);
-    *   - driver memory: O(history of TOUCHED keys).
-    * That is the tail shape — small triggers touching few keys. Feeding
-    * a bulk BACKFILL through this path degenerates: a spread 400k-log
-    * batch touches nearly every key, so each batch collects and re-folds
-    * ~the whole history. Backfill belongs to the batch path
-    * (`EtlJob.run`), then start the tail from its checkpoint.
+    *   - jobs: a fixed number for the insert, the key and history collects,
+    *     the fold over the collected history (≤ 2) and the upsert; none
+    *     per live generation and none to list or infer a schema
+    *     (TailJobBudgetSpec pins the count);
+    *   - driver memory: O(history of TOUCHED keys) up to
+    *     `EntriesFold.incrementalDelta`'s cap, past which the fold runs
+    *     distributed.
+    * That is the tail shape — small triggers touching few keys. A bulk
+    * BACKFILL through this path re-folds ~the whole history per batch; it
+    * belongs to the batch path (`EtlJob.run`), then start the tail from
+    * its checkpoint.
     *
     * `confirmedUpTo` (ST5 extension): when set, each micro-batch ASSERTS
     * that every row is at or below `confirmedUpTo()` — the
-    * confirmation-depth bound (head − N) — and FAILS LOUD otherwise, at
-    * the cost of one max-aggregate job over the batch. Unset, the batch
-    * runs no extra work.
-    *
-    * Why assert instead of filter: a dropped row would never come back.
-    * The fetcher re-lands a chunk under the SAME filename
-    * (`chunk_<start>_<end>.json`), which the file stream source never
-    * reprocesses, and the poll loop's coverage manifest counts the chunk
-    * as covered — so silently dropping an unconfirmed row is silent data
-    * loss that the gap check then can't even detect. The correct
-    * deployment caps UNconfirmed blocks at the FETCHER
-    * ([[graft.hypermap.Rpc.pollOnce]] with confirmations >= this tail's
-    * depth): then nothing unconfirmed ever lands, a reorged block is
-    * fetched exactly once with its final content, and this bound is pure
-    * defense-in-depth that never fires. If it DOES fire, the fetcher was
-    * run with a shallower depth than the tail — a misconfiguration this
-    * error names, with the remedies (raise fetcher confirmations, or
-    * re-land the range under fresh filenames). Evaluated per batch, so a
-    * long-running tail tracks the advancing head.
+    * confirmation-depth bound (head − N), evaluated per batch — and FAILS
+    * LOUD otherwise, at the cost of one max-aggregate job over the batch.
+    * It asserts instead of filtering because a dropped row would never
+    * come back: a re-landed chunk keeps its filename, which the file
+    * source never reprocesses, and the coverage manifest counts it as
+    * covered. Capping the FETCHER ([[graft.hypermap.Rpc.pollOnce]] with
+    * confirmations ≥ this depth) means it never fires; the error names
+    * the remedies if it does.
     */
   def startWithEntriesCommitted(spark: SparkSession, rawDir: String, eventsDir: String,
                                 entriesDir: String, checkpointDir: String,
                                 trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
                                 blocks: Option[DataFrame] = None,
-                                nBuckets: Int = 256,
                                 maxGens: Int = 16,
                                 confirmedUpTo: Option[() => Long] = None): StreamingQuery = {
     val raw = spark.readStream.schema(Schemas.rawLogs).json(rawDir)
@@ -157,7 +144,7 @@ object Tail {
             val (_, refreshed) =
               EntriesFold.incrementalDelta(allEvents, prev, decoded)
             Sinks.upsertCommitted(spark, entriesDir, refreshed,
-              nBuckets = nBuckets, keyCol = "namehash", maxGens = maxGens)
+              keyCol = "namehash", maxGens = maxGens)
           }
         } finally decoded.unpersist()
         ()

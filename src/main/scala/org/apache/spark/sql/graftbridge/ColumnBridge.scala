@@ -37,7 +37,8 @@ object CheckpointBridge {
     * localCheckpoint has no lineage to recompute from.
     */
   def freeCheckpoint(ds: Dataset[_]): Unit =
-    checkpointedRdd(ds).foreach(_.unpersist(blocking = false))
+    checkpointedRdd(ds).foreach(
+      org.apache.spark.rdd.GraftRddBridge.release(_, blocking = false))
 
   /** EVERY locally-checkpointed RDD a Dataset's plan reads — not just a
     * root LogicalRDD: cached artifacts are typically a Project/Filter

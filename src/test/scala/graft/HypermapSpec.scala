@@ -167,6 +167,35 @@ class HypermapSpec extends AnyFunSuite {
     }
   }
 
+  test("incremental entries: the collected and the distributed fold commit identical entries") {
+    // the same batches through both routes of incrementalDelta: the fold
+    // over the collected history (cap above it) and the fold over the
+    // filtered scan (cap 0, as a spread batch past the cap would take)
+    val all = Fixtures.goldenLogs ++ Fixtures.adversarialLogs
+    val batches = Seq(all.take(5), all.slice(5, 12), all.drop(12))
+    var history = Seq.empty[Fixtures.Log]
+    val empty = EntriesFold.fold(Decode.decode(Fixtures.toDF(spark, Seq.empty)))
+    var (collected, distributed) = (empty, empty)
+    batches.foreach { b =>
+      history = history ++ b
+      val allEvents = Decode.decode(Fixtures.toDF(spark, history))
+      val newBatch = Decode.decode(Fixtures.toDF(spark, b))
+      def step(state: org.apache.spark.sql.DataFrame, cap: Int, local: Boolean) = {
+        val (affected, refreshed) = EntriesFold.incrementalDeltaImpl(allEvents, state,
+          newBatch, normalizeTransferIds = false, historyCap = cap)
+        assert(refreshed.queryExecution.analyzed
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] == local)
+        state.join(affected, $"namehash" === $"k", "left_anti").unionByName(refreshed)
+      }
+      collected = step(collected, 1 << 20, local = true)
+      distributed = step(distributed, 0, local = false)
+      EntriesAssert.assertSameEntries(distributed, collected,
+        s"the two routes diverge after a batch of ${b.size}")
+      EntriesAssert.assertSameEntries(collected, EntriesFold.fold(allEvents),
+        s"incremental diverges from rebuild after a batch of ${b.size}")
+    }
+  }
+
   test("fullName resolution walks parent chain") {
     val resolved = EntriesFold.resolveFullNames(entries, maxDepth = 4)
     val alice = resolved.where($"label" === "alice").head()

@@ -28,37 +28,82 @@ class SinksSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).select("event_id").distinct().count() == 14)
   }
 
+  /** A commit of `df` into `dir` sized at `rowsPerBucket` rows per
+    * bucket — the 14-row fixture at 2 spreads over 8 buckets, where the
+    * production size would give it one.
+    */
+  def commitSized(dir: String, df: org.apache.spark.sql.DataFrame, rowsPerBucket: Int,
+                  maxGens: Int = 16): (Long, Long) =
+    Sinks.upsertCommittedImpl(spark, dir, df, keyCol = "event_id", maxGens = maxGens,
+      rowsPerBucket = rowsPerBucket, crashBeforeCommit = false)
+
   test("upsertCommitted: empty batches are no-ops, layout mismatch is rejected") {
     // an empty FIRST batch must not create a directory
     val dir = freshDir()
-    assert(Sinks.upsertCommitted(spark, dir, decoded.where(lit(false)), nBuckets = 8)
-      == (0L, 0L))
+    assert(Sinks.upsertCommitted(spark, dir, decoded.where(lit(false))) == (0L, 0L))
     assert(!Sinks.exists(spark, dir))
     // seed, then an empty later batch is a no-op: no new generation
-    Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 8)
+    Sinks.upsertCommitted(spark, dir, decoded)
     val seeded = Sinks.readManifest(spark, dir)
-    assert(Sinks.upsertCommitted(spark, dir, decoded.where(lit(false)), nBuckets = 8)
-      == (0L, 0L))
+    assert(Sinks.upsertCommitted(spark, dir, decoded.where(lit(false))) == (0L, 0L))
     assert(Sinks.readManifest(spark, dir) == seeded)
     assert(Sinks.readCommitted(spark, dir).count() == 14)
-    // a different bucket count would split keys across layouts — refused
+    // a different key would hash rows away from the ones they replace — refused
     intercept[IllegalArgumentException] {
-      Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 16)
+      Sinks.upsertCommitted(spark, dir, decoded, keyCol = "transactionHash")
     }
+  }
+
+  test("upsertCommitted sizes buckets from the row count at the first commit and at " +
+       "compaction, and keeps the manifest's row count exact") {
+    val dir = freshDir()
+    def manifest() = Sinks.readManifest(spark, dir).get
+    def assertRows(n: Long) = {
+      assert(manifest().rows == n)
+      assert(Sinks.readCommitted(spark, dir).count() == n)
+    }
+    // first commit: 6 rows at 2 per bucket → 4 buckets
+    assert(commitSized(dir, decoded.orderBy($"event_id").limit(6), 2) == (0L, 6L))
+    assert(manifest().nBuckets == 4)
+    assertRows(6)
+    // 6 matched, 8 inserted; later commits keep the committed bucket count
+    assert(commitSized(dir, decoded, 2) == (6L, 8L))
+    assert(manifest().nBuckets == 4)
+    assertRows(14)
+    // matched only: the count does not move
+    val oneRow = decoded.where($"label" === "alice").withColumn("label", lit("alice-v2"))
+    assert(commitSized(dir, oneRow, 2) == (1L, 0L))
+    assertRows(14)
+    // compaction (a second live generation past maxGens = 1) re-sizes from
+    // the manifest's count: 14 rows at 2 per bucket → 8 buckets
+    commitSized(dir, oneRow.withColumn("label", lit("alice-v3")), 2, maxGens = 1)
+    assert(manifest().buckets.values.toSet.size == 1)
+    assert(manifest().nBuckets == 8)
+    assertRows(14)
+    // every key still sits in the bucket its hash names
+    decoded.select($"event_id").as[String].collect().foreach { k =>
+      assert(Sinks.lookupCommitted(spark, dir, Seq(k)).count() == 1, s"key $k misplaced")
+    }
+    // at the production size the next compaction folds the table to one bucket
+    Sinks.upsertCommitted(spark, dir, oneRow, maxGens = 0)
+    assert(manifest().nBuckets == 1)
+    assertRows(14)
+    assert(Sinks.readCommitted(spark, dir).where($"label" === "alice-v2").count() == 1)
   }
 
   test("upsertCommitted is an idempotent LWW merge with manifest-pruned reads") {
     val dir = freshDir()
-    val (m0, i0) = Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 8)
+    val (m0, i0) = commitSized(dir, decoded, 2)
     assert((m0, i0) == (0L, 14L))
-    val (m1, i1) = Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 8)
+    assert(Sinks.readManifest(spark, dir).get.nBuckets == 8)
+    val (m1, i1) = Sinks.upsertCommitted(spark, dir, decoded)
     assert((m1, i1) == (14L, 0L))
     assert(Sinks.readCommitted(spark, dir).count() == 14)
     // one-row update: only its bucket moves to the new gen
     val manifestBefore = Sinks.readManifest(spark, dir).get
     val oneRow = decoded.where($"label" === "alice")
       .withColumn("label", lit("alice-v2"))
-    val (m2, i2) = Sinks.upsertCommitted(spark, dir, oneRow, nBuckets = 8)
+    val (m2, i2) = Sinks.upsertCommitted(spark, dir, oneRow)
     assert((m2, i2) == (1L, 0L))
     val manifestAfter = Sinks.readManifest(spark, dir).get
     val moved = manifestBefore.buckets.keySet.filter(b =>
@@ -69,27 +114,27 @@ class SinksSpec extends AnyFunSuite {
     assert(Sinks.readCommitted(spark, dir).count() == 14)
     // layout mismatch refused
     intercept[IllegalArgumentException] {
-      Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 16)
+      Sinks.upsertCommitted(spark, dir, decoded, keyCol = "transactionHash")
     }
   }
 
   test("upsertCommitted: crash before the manifest rename leaves the old " +
        "snapshot fully visible; re-run applies the batch and sweeps orphans") {
     val dir = freshDir()
-    Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 8)
+    commitSized(dir, decoded, 2)
     val before = Sinks.readCommitted(spark, dir)
       .orderBy($"event_id").collect().toSeq
     val mutated = decoded.withColumn("label",
       when($"label" === "alice", "alice-v2").otherwise($"label"))
     // kill between the gen write and the commit: nothing is exposed
     intercept[RuntimeException] {
-      Sinks.upsertCommittedImpl(spark, dir, mutated, nBuckets = 8,
-        keyCol = "event_id", maxGens = 16, crashBeforeCommit = true)
+      Sinks.upsertCommittedImpl(spark, dir, mutated, keyCol = "event_id", maxGens = 16,
+        rowsPerBucket = 2, crashBeforeCommit = true)
     }
     assert(Sinks.readCommitted(spark, dir).orderBy($"event_id").collect().toSeq
       == before, "reader saw a torn snapshot after a mid-commit crash")
     // the redelivered batch commits fully and the orphan gen is GC'd
-    val (m2, i2) = Sinks.upsertCommitted(spark, dir, mutated, nBuckets = 8)
+    val (m2, i2) = Sinks.upsertCommitted(spark, dir, mutated)
     assert((m2, i2) == (14L, 0L))
     assert(Sinks.readCommitted(spark, dir).where($"label" === "alice-v2").count() == 1)
     val referenced = Sinks.readManifest(spark, dir).get.buckets.values.toSet
@@ -101,7 +146,9 @@ class SinksSpec extends AnyFunSuite {
 
   test("lookupCommitted opens only the keys' bucket paths") {
     val dir = freshDir()
-    Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 8)
+    commitSized(dir, decoded, 2)
+    val nBuckets = Sinks.readManifest(spark, dir).get.nBuckets
+    assert(nBuckets == 8)
     val key = decoded.select($"event_id").as[String].head()
     val hit = Sinks.lookupCommitted(spark, dir, Seq(key))
     assert(hit.count() == 1)
@@ -109,7 +156,7 @@ class SinksSpec extends AnyFunSuite {
     // pruning is structural: the plan's input files cover exactly the
     // buckets the keys hash to, not the whole table
     val expected = Seq(key).toDF("event_id")
-      .select(Sinks.bucketCol("event_id", 8)).as[Long].collect().toSet
+      .select(Sinks.bucketCol("event_id", nBuckets)).as[Long].collect().toSet
     val openedBuckets = hit.inputFiles
       .map(f => "bucket=(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong).toSet
     assert(openedBuckets == expected,
@@ -122,12 +169,12 @@ class SinksSpec extends AnyFunSuite {
 
   test("upsertCommitted compacts generations past maxGens without changing data") {
     val dir = freshDir()
-    Sinks.upsertCommitted(spark, dir, decoded, nBuckets = 8)
+    commitSized(dir, decoded, 2)
     // 3 single-row batches with maxGens=2: each adds a gen, compaction folds
     for (i <- 1 to 3) {
       val oneRow = decoded.where($"label" === "alice")
         .withColumn("label", lit(s"alice-v$i"))
-      Sinks.upsertCommitted(spark, dir, oneRow, nBuckets = 8, maxGens = 2)
+      Sinks.upsertCommitted(spark, dir, oneRow, maxGens = 2)
     }
     val gens = Sinks.readManifest(spark, dir).get.buckets.values.toSet
     assert(gens.size <= 2, s"compaction did not bound generations: $gens")

@@ -62,8 +62,7 @@ class StreamingSpec extends AnyFunSuite {
     Fixtures.toDF(spark, all.take(8)).coalesce(1).write.json(rawDir + "/b1")
     val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/",
       base.resolve("ev").toString, base.resolve("en").toString,
-      base.resolve("ck").toString, trigger = Trigger.ProcessingTime("1 second"),
-      nBuckets = 8)
+      base.resolve("ck").toString, trigger = Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
     Fixtures.toDF(spark, all.drop(8)).coalesce(1).write.json(rawDir + "/b2")
     q.processAllAvailable()
@@ -96,8 +95,7 @@ class StreamingSpec extends AnyFunSuite {
         Fixtures.note(Root, "~k", "v".getBytes("UTF-8"), 301L, 0)),
       Seq(Fixtures.mint(late, "leaf", 400L, 0), Fixtures.mint(Root, "last", 401L, 0)))
     val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/", evDir, enDir,
-      base.resolve("ck").toString, trigger = Trigger.ProcessingTime("1 second"),
-      nBuckets = 8)
+      base.resolve("ck").toString, trigger = Trigger.ProcessingTime("1 second"))
     try {
       batches.zipWithIndex.foreach { case (b, i) =>
         Fixtures.toDF(spark, b).coalesce(1).write.json(rawDir + s"/b$i")
@@ -134,8 +132,7 @@ class StreamingSpec extends AnyFunSuite {
     // one-gen-per-batch forever (a 30 s trigger = 2,880/day)
     val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/",
       base.resolve("ev").toString, enDir, base.resolve("ck").toString,
-      trigger = Trigger.ProcessingTime("1 second"),
-      nBuckets = 4, maxGens = 2)
+      trigger = Trigger.ProcessingTime("1 second"), maxGens = 2)
     val counts = all.grouped(2).toSeq.zipWithIndex.map { case (batch, i) =>
       Fixtures.toDF(spark, batch).coalesce(1).write.json(rawDir + s"/b$i")
       q.processAllAvailable()
@@ -147,7 +144,7 @@ class StreamingSpec extends AnyFunSuite {
     val m = Sinks.readManifest(spark, enDir).get
     assert(m.buckets.values.toSet.size <= 2,
       s"snapshot references ${m.buckets.values.toSet.size} gens, maxGens=2")
-    val ceiling = 2 * 4 // maxGens * nBuckets (1 file per bucket per gen)
+    val ceiling = 2 * m.nBuckets // maxGens * nBuckets (1 file per bucket per gen)
     assert(counts.last <= ceiling,
       s"file count ${counts.last} exceeded the $ceiling compaction ceiling: $counts")
     assert(counts.last <= counts.max,
@@ -415,8 +412,7 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(rawDir).mkdirs()
     val seeded = Decode.decode(Fixtures.toDF(spark, Fixtures.randomLogs(seedLogs))).cache()
     Sinks.insertIfAbsent(spark, evDir, seeded)
-    Sinks.upsertCommitted(spark, enDir, EntriesFold.fold(seeded),
-      nBuckets = 64, keyCol = "namehash")
+    Sinks.upsertCommitted(spark, enDir, EntriesFold.fold(seeded), keyCol = "namehash")
     seeded.unpersist()
     // land each chunk the way Rpc.pollOnce does: written aside, then
     // moved into the tailed dir in one rename, so the file source never
@@ -433,7 +429,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val q = Tail.startWithEntriesCommitted(spark, rawDir + "/chunk_*.json",
       evDir, enDir, base.resolve("ck").toString,
-      trigger = Trigger.ProcessingTime("1 second"), nBuckets = 64)
+      trigger = Trigger.ProcessingTime("1 second"))
     try {
       (1 to batches).map { b =>
         landChunk(f"chunk_$b%04d.json", Fixtures.randomLogs(batchLogs, seed = 1000L + b,
