@@ -1,6 +1,6 @@
 package graft.hypermap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import graft.functions.evm
@@ -173,15 +173,17 @@ object EntriesFold {
     *
     * Cost contract, per call, run eagerly: one job collects the batch's
     * keys; at most one probes `previousEntries` for ROOT (only when the
-    * batch references it); one scan of `allEvents` with a hash-set filter
-    * on the keys collects at most [[HistoryCap]] + 1 rows of their
-    * history. At or under the cap the fold runs over that copy in ≤ 2
-    * jobs and `refreshed` is a local relation of its rows in the caller's
-    * session: driver memory O(batch keys + touched history), no blocks
-    * held. Over it (a spread batch, e.g. a restart after an outage)
-    * `refreshed` is the same fold over the filtered scan, lazy and
-    * distributed. A batch touching most keys refolds most of the history
-    * either way: backfill is `EtlJob.run`.
+    * batch references it); one job scans `allEvents` with a hash-set
+    * filter on the keys and collects their history, holding at most
+    * 2 × [[HistoryCap]] + 1 rows on the driver. At or under the cap the
+    * fold runs over that copy in ≤ 2 jobs, ≤ 5 for the call, and
+    * `refreshed` is a local relation of its rows in the caller's session:
+    * driver memory O(batch keys + touched history), no blocks held. Over
+    * it (a spread batch, e.g. a restart after an outage) `refreshed` is
+    * the same fold over the filtered scan, lazy and distributed: the call
+    * runs ≤ 3 jobs and the caller's action runs the fold. A batch
+    * touching most keys refolds most of the history either way: backfill
+    * is `EtlJob.run`.
     */
   def incrementalDelta(allEvents: DataFrame, previousEntries: DataFrame,
                        newBatch: DataFrame,
@@ -189,8 +191,14 @@ object EntriesFold {
     incrementalDeltaImpl(allEvents, previousEntries, newBatch, normalizeTransferIds,
       HistoryCap)
 
-  /** Tens of MB of heap, 100× a tail batch's history: past it the
-    * distributed fold's fixed job cost is small next to its data anyway. */
+  /** Bounds driver memory, not time: collected history costs ~0.95 KB of
+    * heap a row before the local relation's copy, so the cap is ~95 MB,
+    * about 100× a tail batch's history. The collected fold was the faster
+    * route at every size measured (4-core host, 200k-event history: 2.2–2.6
+    * against 3.7–4.4 s at 4.4k history rows, 6.4 against 7.6–9.3 s at 24k,
+    * 23–25 against 64–83 s at 81k), so a lower cap gains nothing; how much
+    * driver memory the distributed route saves past it is not measured.
+    */
   private val HistoryCap = 100000
 
   private[graft] def incrementalDeltaImpl(
@@ -215,11 +223,18 @@ object EntriesFold {
       $"childhash".isin(affectedKeys: _*) || $"parenthash".isin(affectedKeys: _*) ||
         $"entry".isin(affectedKeys: _*) ||
         ($"eventType" === "Transfer" && tkey.isin(affectedKeys: _*)))
-    val collected = history.limit(historyCap + 1).collect()
+    // one job: each partition ships at most cap + 1 rows, and the driver
+    // stops keeping them once the total passes the cap, so it holds at
+    // most 2 × cap + 1 (a `limit` would plan an incremental take instead,
+    // a job per round of partitions)
+    val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
+    spark.sparkContext.runJob(history.rdd.mapPartitions(_.take(historyCap + 1)),
+      (it: Iterator[Row]) => it.toArray,
+      (_: Int, part: Array[Row]) => if (collected.length <= historyCap) collected ++= part)
     def refresh(relevant: DataFrame) =
       fold(relevant, normalizeTransferIds).where($"namehash".isin(affectedKeys: _*))
     val refreshed = if (collected.length > historyCap) refresh(history) else {
-      val local = refresh(smallQuerySession(spark).createDataFrame(collected.toSeq.asJava,
+      val local = refresh(smallQuerySession(spark).createDataFrame(collected.asJava,
         allEvents.schema))
       spark.createDataFrame(local.collect().toSeq.asJava, local.schema)
     }

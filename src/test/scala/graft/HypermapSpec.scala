@@ -187,6 +187,17 @@ class HypermapSpec extends AnyFunSuite {
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] == local)
         state.join(affected, $"namehash" === $"k", "left_anti").unionByName(refreshed)
       }
+      // the cap bounds the whole collected history, not each partition's
+      // share of it: a cap of exactly the history's size collects, one less
+      // does not
+      val keys = EntriesFold.incrementalDeltaImpl(allEvents, collected, newBatch,
+        normalizeTransferIds = false, historyCap = 0)._1.as[String].collect()
+      val historyRows = allEvents.where($"childhash".isin(keys: _*) ||
+        $"parenthash".isin(keys: _*) || $"entry".isin(keys: _*) ||
+        ($"eventType" === "Transfer" && $"id".isin(keys: _*))).count().toInt
+      assert(allEvents.rdd.getNumPartitions > 1 && historyRows > 1)
+      step(collected, historyRows, local = true)
+      step(collected, historyRows - 1, local = false)
       collected = step(collected, 1 << 20, local = true)
       distributed = step(distributed, 0, local = false)
       EntriesAssert.assertSameEntries(distributed, collected,

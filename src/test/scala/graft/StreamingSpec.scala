@@ -59,6 +59,13 @@ class StreamingSpec extends AnyFunSuite {
     val rawDir = base.resolve("raw").toString
     new java.io.File(rawDir).mkdirs()
     val all = Fixtures.goldenLogs
+    // seed the entries table from the first 8 logs at one row per bucket,
+    // so both batches merge into partially touched buckets (the production
+    // size would give these few rows one bucket)
+    Sinks.upsertCommittedImpl(spark, base.resolve("en").toString,
+      EntriesFold.fold(Decode.decode(Fixtures.toDF(spark, all.take(8)))), keyCol = "namehash",
+      maxGens = 16, rowsPerBucket = 1, crashBeforeCommit = false)
+    assert(Sinks.readManifest(spark, base.resolve("en").toString).get.nBuckets > 1)
     Fixtures.toDF(spark, all.take(8)).coalesce(1).write.json(rawDir + "/b1")
     val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/",
       base.resolve("ev").toString, base.resolve("en").toString,
@@ -399,9 +406,11 @@ class StreamingSpec extends AnyFunSuite {
 
   /** One soak of the committed tail: backfill `seedLogs` random logs
     * through the batch path (events insert, full fold upserted into the
-    * committed entries table), then land `batches` chunk files of
-    * `batchLogs` fresh logs each (disjoint id and block space: the
-    * steady-state tail shape) and time each `processAllAvailable()`.
+    * committed entries table at 32 rows per bucket, so the tail merges
+    * into many buckets whatever the table's size; the production size
+    * would give either table here one or two), then land `batches` chunk
+    * files of `batchLogs` fresh logs each (disjoint id and block space:
+    * the steady-state tail shape) and time each `processAllAvailable()`.
     * Returns the per-batch walls in seconds.
     */
   private def soak(seedLogs: Int, batches: Int, batchLogs: Int,
@@ -412,7 +421,8 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(rawDir).mkdirs()
     val seeded = Decode.decode(Fixtures.toDF(spark, Fixtures.randomLogs(seedLogs))).cache()
     Sinks.insertIfAbsent(spark, evDir, seeded)
-    Sinks.upsertCommitted(spark, enDir, EntriesFold.fold(seeded), keyCol = "namehash")
+    Sinks.upsertCommittedImpl(spark, enDir, EntriesFold.fold(seeded), keyCol = "namehash",
+      maxGens = 16, rowsPerBucket = 32, crashBeforeCommit = false)
     seeded.unpersist()
     // land each chunk the way Rpc.pollOnce does: written aside, then
     // moved into the tailed dir in one rename, so the file source never
@@ -444,9 +454,10 @@ class StreamingSpec extends AnyFunSuite {
   test("committed tail per-batch wall is table-size-flat (10x entries table)") {
     // Two soaks, identical steady-state batches (150 fresh logs each),
     // against a seeded entries table 10x apart in size; the median batch
-    // wall must not scale with the table. Bound 4x (vs the 10x table
-    // growth): generous headroom over scheduler noise on shared CI cores
-    // while still refuting any O(table) term.
+    // wall must not scale with the table. Both tables hold 32 rows per
+    // bucket, so a batch rewrites about as many rows in either. Bound 4x
+    // (vs the 10x table growth): generous headroom over scheduler noise on
+    // shared CI cores while still refuting any O(table) term.
     val root = Files.createTempDirectory("graft-soak-spec")
     soak(400, 2, 150, root.resolve("warm")) // JIT
     val small = soak(2000, 3, 150, root.resolve("s"))
