@@ -1,13 +1,10 @@
 package graft
 
-/** Build-cost ledger for build-once artifacts (IndexStore parquet
-  * generations, SessionCache memos). The bench's warmup phase
-  * deliberately absorbs artifact builds so timed passes measure the read
-  * path — correct methodology for per-snapshot artifacts, but it made
-  * build cost an invisible zero (r18 verdict item 3). Every build now
-  * records its wall seconds here, keyed by family, and Bench emits the
-  * ledger as `artifact_build_sec` in the detail JSON so a judge can
-  * separate build cost from query cost for every artifact consumer.
+/** Build-cost ledger for session artifacts ([[Artifacts]]). The bench's
+  * warmup phase deliberately absorbs artifact builds so timed passes
+  * measure the read path; every build records its wall seconds here,
+  * keyed by family, and Bench emits the ledger as `artifact_build_sec`
+  * in the detail JSON, so build cost stays separable from query cost.
   *
   * Accumulating (`+=`), not last-write: a family rebuilt after a bench
   * session restart charges both builds.

@@ -36,25 +36,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Artifact pricing (r18 verdict item 3): SPARK_GRAFT_BENCH_COLD=1
-    // wipes the cross-run IndexStore root before the session starts, so
-    // every parquet artifact family rebuilds inside THIS bench run and
-    // its build seconds land in the ledger (SessionCache memos are
-    // per-session, hence always cold in a fresh JVM). The ledger is
-    // emitted as "artifact_build_sec" in the detail JSON either way —
-    // without the flag, families served from a prior run's files simply
-    // show no build cost, which is itself the honest number for a warm
-    // corpus snapshot.
-    if (sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")) {
-      val idxRoot = new java.io.File(sys.env.getOrElse("GRAFT_INDEX_DIR",
-        System.getProperty("java.io.tmpdir") + "/graft-index"))
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(wipe)
-        f.delete(): Unit
-      }
-      wipe(idxRoot)
-    }
     var spark = GraftSession.local(appName = "graft-bench")
     // One gate fatally wounding the executor (an OOM or a storage race
     // kills local[N]'s single executor, which STOPS the SparkContext)
@@ -64,8 +45,8 @@ object Bench {
     // instead of their real numbers. The failing gate still records its
     // own error; every later gate runs in a fresh session.
     // sessionGen counts restarts: gates timed after a restart run in a
-    // session that missed the warmup pass (cold codegen caches, cold
-    // SessionCache artifacts), so the timed loop below re-warms each
+    // session that missed the warmup pass (cold codegen caches, no
+    // session artifacts), so the timed loop below re-warms each
     // such gate once, untimed, before its passes — and the restart event
     // itself is recorded in the detail JSON ("restarts") so downstream
     // comparisons can discount the failing gate's own passes (r16
@@ -89,11 +70,14 @@ object Bench {
     // compile cost is ~0.5-2 s/plan regardless of data size — pure noise at
     // the 100 TB design point, where a plan compiles once and then streams
     // terabytes through it. The timed pass below measures steady state.
-    // This pass also DELIBERATELY materializes every build-once artifact
-    // (IndexStore parquet indexes for ann_pq, SessionCache label tables for
+    // This pass also DELIBERATELY builds every session artifact (the
+    // parquet indexes for ann_pq, the memoized label tables for
     // cc/dd_canonical): index builds happen once per corpus snapshot in
     // production, so timed passes must measure the read path, and the
     // build's GC/IO wake can't perturb a neighboring query's timing.
+    // Artifacts live only as long as the session, so every run builds
+    // them all here and "artifact_build_sec" in the detail JSON prices
+    // each family's builds.
     // Opt-in subset: SPARK_GRAFT_BENCH_FILTER is a comma-separated list of
     // name prefixes (e.g. "dd_,pl_,cc_"). Unset → full suite, the driver's
     // contract. Used by the sf1 scaling runs (PERF.md), where only the

@@ -23,7 +23,7 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   * boundary is safe because a new top-level build means the previous
   * top-level result has been consumed (Bench counts, Verify writes, the
   * specs collect before building the next gate). Long-lived artifacts —
-  * everything a [[SessionCache]] memoizes, streaming state — are
+  * every Dataset [[Artifacts.memo]] keeps, streaming state — are
   * registered via [[protect]] and never swept.
   *
   * This frees storage the queries already paid for; it caches nothing

@@ -23,7 +23,8 @@ object SparkEntry {
     * [[BlockJanitor.sweep]]; the sweep deliberately does NOT live here —
     * Verify consumes these builders from 8 concurrent threads, where a
     * sweep triggered by one gate's build would free a sibling's blocks
-    * mid-write.
+    * mid-write. Session artifacts ([[Artifacts]]) are protected from the
+    * sweep and built once per key under concurrent builders.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     operators.Relational.queries ++ hypermap.HypermapQueries.queries ++

@@ -16,21 +16,11 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Table row count, memoized per (session, dir, table): one count job
-    * on first use, a map hit after. Three operators grew identical
-    * private copies of this (Similarity.embCount, Retrieval.docCount,
-    * Geo.custCount — the last one un-memoized, paying a Spark job per
-    * dbscan entry); this is the single shared implementation. Entries
-    * for stopped sessions are evicted so the map can't pin dead
-    * SparkContexts across ScalaTest suites.
+  /** Table row count, a session artifact per (dir, table): one count
+    * job on first use, a map hit after.
     */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
-  def cachedCount(spark: SparkSession, dir: String, name: String): Long = {
-    countCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    countCache.computeIfAbsent((spark, dir, name),
-      _ => java.lang.Long.valueOf(t(spark, dir, name).count())).longValue()
-  }
+  def cachedCount(spark: SparkSession, dir: String, name: String): Long =
+    Artifacts.memo(spark, "table_count", s"$dir/$name")(t(spark, dir, name).count())
 
   def lineitem(spark: SparkSession, dir: String): DataFrame   = t(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "orders")

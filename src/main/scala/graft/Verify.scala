@@ -14,8 +14,8 @@ object Verify {
     // Queries are independent and results are tiny at sf0.01 — the old
     // sequential loop spent ~8.5 min mostly on per-query job latency with
     // local[32] idle (VERDICT r12 §wrong-1). Spark sessions are thread-safe
-    // for concurrent actions, so run the dump on a fixed pool; memoized
-    // artifacts stay single-build via SessionCache.computeIfAbsent.
+    // for concurrent actions, so run the dump on a fixed pool; session
+    // artifacts stay single-build per key (Artifacts.memo).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       sys.env.getOrElse("GRAFT_VERIFY_THREADS", "8").toInt)
     val futures = selected.toSeq.map { case (name, fn) =>

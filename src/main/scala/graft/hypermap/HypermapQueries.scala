@@ -26,9 +26,8 @@ object HypermapQueries {
     * fixed plan work in each bench entry. Caching truncates the lineage so
     * downstream plans (fold, pagination) start from the materialized rows.
     */
-  private val decodedCache = new graft.SessionCache[Unit]("hm_decoded")
   private def pipeline(s: SparkSession): DataFrame =
-    decodedCache.getOrCompute(s, ())(
+    graft.Artifacts.memo(s, "hm_decoded", "")(
       Decode.decode(Fixtures.toDF(s,
         Fixtures.goldenLogs ++ Fixtures.adversarialLogs)).persist())
 
@@ -204,10 +203,9 @@ object HypermapQueries {
     * (temp dirs + two streaming queries, ~5 s); verify's parallel dump
     * and bench both reuse the one materialized result.
     */
-  private val replayCache = new graft.SessionCache[Unit]("hm_replay")
   val entriesReplay: Q = (s, _) => {
     import s.implicits._
-    val streamed = replayCache.getOrCompute(s, ()) {
+    val streamed = graft.Artifacts.memo(s, "hm_replay", "") {
       import org.apache.spark.sql.streaming.Trigger
       val base = java.nio.file.Files.createTempDirectory("graft-replay")
       val rawDir = base.resolve("raw").toString
@@ -259,10 +257,9 @@ object HypermapQueries {
     * (docs/SANITY_CHECKS.md:9-11). Memoized per session like the
     * replay gate — the fetch is a side-effecting fixture build.
     */
-  private val rpcCache = new graft.SessionCache[Unit]("hm_rpc")
   val rpcExtract: Q = (s, _) => {
     import s.implicits._
-    val decoded = rpcCache.getOrCompute(s, ()) {
+    val decoded = graft.Artifacts.memo(s, "hm_rpc", "") {
       val mock = new Rpc.MockRpc(
         Fixtures.goldenLogs ++ Fixtures.adversarialLogs, head = 27434999L,
         failPlan = i => i >= 1 && i <= 3) // burst: 2nd-4th getLogs calls 429

@@ -334,7 +334,7 @@ object Dedup {
       .where(col("n") >= 2)
 
   /** The corpus-duplicated-gram table (gram, n≥2) as a per-snapshot
-    * IndexStore parquet artifact. Previously a SessionCache'd
+    * parquet artifact. Previously a memoized
     * localCheckpoint: a CORPUS-sized table in executor block storage —
     * the exact failure class the trigram index (r14), geo neighbor
     * graph (r14), rc_ pair table (r15), and gr_hits edges (r15) each
@@ -347,8 +347,8 @@ object Dedup {
     * every span-dedup pass.
     */
   private[operators] def cachedDupCounts(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
-    graft.IndexStore.materialize(s, s"dd_dupgrams_v1_$d", fp)(
+    val fp = graft.Artifacts.fingerprint(s"$d/documents.parquet")
+    graft.Artifacts.table(s, "dd_dupgrams", s"$d|$fp")(
       dupGramCounts(tbl(s, d, "documents")))
   }
 
@@ -365,8 +365,8 @@ object Dedup {
     * heap-OOM JVM kill.
     */
   private[operators] def cachedDupOccurrences(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
-    graft.IndexStore.materialize(s, s"dd_dupocc_v1_$d", fp)(
+    val fp = graft.Artifacts.fingerprint(s"$d/documents.parquet")
+    graft.Artifacts.table(s, "dd_dupocc", s"$d|$fp")(
       dupGramsWithStart(tbl(s, d, "documents").select(col("doc_id"), col("text")))
         .join(cachedDupCounts(s, d), Seq("gram"))
         .select(col("doc_id"), col("start")))
@@ -578,7 +578,7 @@ object Dedup {
         // (the k-gram stand-in for Lee et al.'s suffix array): without
         // the hook, both join sides recompute the 25M-row explode +
         // gram-string build (r15 probe: ~2/3 of the gate's sf10 wall);
-        // the gate materializes it once via IndexStore and both sides
+        // the gate materializes it once as a parquet artifact and both sides
         // scan the parquet artifact
         val g = materializeAnchors(dupGramsWithStart(docs))
         val a = g.select(col("gram"), col("doc_id").as("a"), col("start").as("pa"))
@@ -638,10 +638,9 @@ object Dedup {
   }
 
   val substrPairs: Q = (s, d) => {
-    val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
+    val fp = graft.Artifacts.fingerprint(s"$d/documents.parquet")
     substrPairsOf(tbl(s, d, "documents").select(col("doc_id"), col("text")),
-      materializeAnchors = df =>
-        graft.IndexStore.materialize(s, s"substr_anchors_v1_$d", fp)(df))
+      materializeAnchors = df => graft.Artifacts.table(s, "substr_anchors", s"$d|$fp")(df))
   }
   val substrPairsSql: String =
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
@@ -1034,7 +1033,7 @@ object Dedup {
       .withColumn("plen",
         (col("sz") - ceil(col("sz") * lit(tau) - lit(1e-9)) + lit(1)).cast("int"))
     // materialized via the caller's hook: the gate routes it to an
-    // IndexStore parquet artifact (r15 — the 500k-doc lists table held
+    // parquet artifact (r15 — the 500k-doc lists table held
     // ~750 MB of block storage under localCheckpoint and the verify
     // stage died UNABLE_TO_ACQUIRE_MEMORY under batch pressure at sf10;
     // parquet is also what "persisted similarity index" means at 100 TB).
@@ -1077,10 +1076,9 @@ object Dedup {
   private val PpTau = 0.5
 
   val ppJoinQ: Q = (s, d) => {
-    val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
+    val fp = graft.Artifacts.fingerprint(s"$d/documents.parquet")
     ppJoin(tbl(s, d, "documents"), n = 5, tau = PpTau,
-      materializeLists = df =>
-        graft.IndexStore.materialize(s, s"pp_lists_v1_${d}_n5_t$PpTau", fp)(df))
+      materializeLists = df => graft.Artifacts.table(s, "pp_lists", s"$d|$fp")(df))
   }
   val ppJoinSql: String =
     s"""WITH g AS (
@@ -1507,16 +1505,15 @@ object Dedup {
     * why excerpt/quote dedup (RealNews-style) thresholds containment,
     * not Jaccard.
     *
-    * SessionCache'd artifact: dd_containment reports the ≥0.5 survivors
+    * Memoized artifact: dd_containment reports the ≥0.5 survivors
     * and Graph.adamicAdar link-scores the same pair graph — one shingle
     * self-join per corpus snapshot (lshPairGraph discipline). The probe
     * slice is the correctness baseline; at scale the pair domain comes
     * from LSH candidates and this exact-containment verify runs on
     * candidates only (dd_ngram_jaccard's documented path).
     */
-  private val contCache = new graft.SessionCache[String]("dd_containment")
   def containmentTable(s: SparkSession, d: String): DataFrame =
-    contCache.getOrCompute(s, d) {
+    graft.Artifacts.memo(s, "dd_containment", d) {
       val sh = shingles(tbl(s, d, "documents").where(col("doc_id") < 30)).distinct()
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
       val inter = sh.select(col("doc_id").as("a"), col("sh"))

@@ -542,11 +542,11 @@ object Geo {
     // 4-partition Java-serialized block write (observed wedged for
     // >15 min). Now: repartition the probe side by its cell key first
     // (point-count-sized, so the pair write parallelizes and each task's
-    // slice stays small) and land the neighbor graph as an IndexStore
-    // parquet artifact — columnar write, no storage-memory squeeze, and
+    // slice stays small) and land the neighbor graph as a parquet
+    // artifact — columnar write, no storage-memory squeeze, and
     // the per-snapshot materialization the scaladoc above promises.
-    val fp = graft.IndexStore.fingerprint(s"$d/customer.parquet")
-    graft.IndexStore.materialize(s, s"geo_db_pairs_v2_$d", fp) {
+    val fp = graft.Artifacts.fingerprint(s"$d/customer.parquet")
+    graft.Artifacts.table(s, "geo_db_pairs", s"$d|$fp") {
       val n = custCount(s, d)
       val eps = dbEpsFor(n)
       val pts0 = dbPoints(s, d, eps)
@@ -645,9 +645,8 @@ object Geo {
     * the star-CC contraction loop. localCheckpoint(eager) pins the
     * labels; the loop's lineage is dropped with it.
     */
-  private val dbCoreLabCache = new graft.SessionCache[String]("geo_dbscan_labels")
   private def cachedCoreLab(s: SparkSession, d: String): DataFrame =
-    dbCoreLabCache.getOrCompute(s, d) {
+    graft.Artifacts.memo(s, "geo_dbscan_labels", d) {
       val pairs = dbPairs(s, d)
       val ne = pairs.groupBy(col("k")).agg(count(lit(1)).as("n_eps"))
       val core = ne.where(col("n_eps") >= DbMinPts).select(col("k"))

@@ -243,10 +243,9 @@ object Graph {
     * incremental fold then costs only the O(|batch|) cluster-graph CC,
     * never a rebuild of the seed labels.
     */
-  private val seedLabelCache = new graft.SessionCache[String]("gr_seed_labels")
   private def seedLabels(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    seedLabelCache.getOrCompute(s, d)(
+    graft.Artifacts.memo(s, "gr_seed_labels", d)(
       connectedComponentsStar(lshPairGraph(s, d).where($"a" < 150 && $"b" < 150)))
   }
 
@@ -258,9 +257,8 @@ object Graph {
     * so the cache holds materialized blocks, not lineage. Same precedent
     * as HypermapQueries.decodedCache.
     */
-  private val labelCache = new graft.SessionCache[String]("gr_lsh_labels")
   private[operators] def lshLabels(s: SparkSession, d: String): DataFrame =
-    labelCache.getOrCompute(s, d)(connectedComponents(lshPairGraph(s, d)))
+    graft.Artifacts.memo(s, "gr_lsh_labels", d)(connectedComponents(lshPairGraph(s, d)))
 
   /** The LSH candidate-pair graph, materialized once per (session,
     * sfDir): CC, PageRank, and triangle counting all consume the same
@@ -269,9 +267,8 @@ object Graph {
     * metric would triple the dominant cost. Eager localCheckpoint so the
     * cache holds blocks, not lineage (labelCache discipline).
     */
-  private val pairsCache = new graft.SessionCache[String]("gr_lsh_pairs")
   private def lshPairGraph(s: SparkSession, d: String): DataFrame =
-    pairsCache.getOrCompute(s, d)(Dedup.lshPairs(s, d).localCheckpoint())
+    graft.Artifacts.memo(s, "gr_lsh_pairs", d)(Dedup.lshPairs(s, d).localCheckpoint())
 
   /** cc — duplicate clusters over the LSH candidate pairs (same probe set
     * as dd_lsh_pairs): each doc in a candidate pair labeled with its
@@ -555,9 +552,8 @@ object Graph {
     * corpus snapshot (labelPropagation already returns an eager
     * checkpoint, so the cache holds blocks, not lineage).
     */
-  private val lpaCache = new graft.SessionCache[String]("gr_lpa_labels")
   private def lshLpaLabels(s: SparkSession, d: String): DataFrame =
-    lpaCache.getOrCompute(s, d)(labelPropagation(lshPairGraph(s, d)))
+    graft.Artifacts.memo(s, "gr_lpa_labels", d)(labelPropagation(lshPairGraph(s, d)))
 
   /** gr_labelprop — 4-round LPA communities over the LSH pair graph. */
   val grLabelProp: Q = (s, d) => {
@@ -1358,7 +1354,7 @@ object Graph {
   /** The distinct customer→part bipartite edge list — the per-snapshot
     * infrastructure artifact (orders ⋈ lineitem + distinct, the suite's
     * largest edge build); the HITS rounds themselves still run per
-    * invocation. Persisted as an IndexStore parquet artifact, NOT
+    * invocation. Kept as a parquet artifact, NOT
     * localCheckpoint blocks (r15 sf10 probe): at 60M edges the block-
     * stored copy squeezed the execution pool until the first HITS
     * aggregation died with UNABLE_TO_ACQUIRE_MEMORY under batch
@@ -1375,12 +1371,11 @@ object Graph {
     * exchanges across all six HITS half-step joins — the exact trade a
     * 100 TB deployment makes by keeping its edge table bucketed both
     * ways (or bucketed + a projection index). Bucket count scales with
-    * the corpus and is folded into the family key, so a re-tuned count
-    * is a new artifact generation.
+    * the corpus.
     */
   private def cachedBipartite(s: SparkSession, d: String): (DataFrame, DataFrame, Int) = {
-    val fp = graft.IndexStore.fingerprint(s"$d/lineitem.parquet") + "_" +
-      graft.IndexStore.fingerprint(s"$d/orders.parquet")
+    val key = s"$d|${graft.Artifacts.fingerprint(s"$d/lineitem.parquet")}|" +
+      graft.Artifacts.fingerprint(s"$d/orders.parquet")
     val nBuckets = math.max(32L,
       graft.Tables.cachedCount(s, d, "lineitem") / 500000L).toInt
     def build: DataFrame =
@@ -1389,16 +1384,10 @@ object Graph {
         .select(col("o_custkey").as("src"), col("l_partkey").as("dst"))
         .repartition(nBuckets, col("src"), col("dst"))
         .distinct()
-    // INVARIANT (r17 advisory): the (nBuckets, bucketCol) passed here
-    // MUST match what the family name encodes (`_b${nBuckets}` + the
-    // src/dst suffix) — a dir committed before the _BUCKETSPEC marker
-    // existed backfills the CALLER's spec as the truth of record on
-    // first serve, so a typo'd spec at this call site would be
-    // persisted permanently and mis-declare the physical layout.
-    val bySrc = graft.IndexStore.materializeBucketed(
-      s, s"gr_bipartite_src_v2_b${nBuckets}_$d", fp, nBuckets, "src")(build)
-    val byDst = graft.IndexStore.materializeBucketed(
-      s, s"gr_bipartite_dst_v2_b${nBuckets}_$d", fp, nBuckets, "dst")(build)
+    val bySrc = graft.Artifacts.table(
+      s, "gr_bipartite_src", key, bucketBy = Some((nBuckets, "src")))(build)
+    val byDst = graft.Artifacts.table(
+      s, "gr_bipartite_dst", key, bucketBy = Some((nBuckets, "dst")))(build)
     (bySrc, byDst, nBuckets)
   }
 

@@ -58,12 +58,9 @@ object Learn {
     * session serves both gates; everything downstream reads the pinned
     * label×vocab count table (bounded — ~vocab·|langs| rows).
     */
-  private val nbCtokCache = new graft.SessionCache[String]("ml_nb_ctok")
-  private val nbPriorCache = new graft.SessionCache[String]("ml_nb_prior")
-
   def nbScores(s: SparkSession, d: String): DataFrame = {
     val docs = tbl(s, d, "documents")
-    val ctok = nbCtokCache.getOrCompute(s, d) {
+    val ctok = graft.Artifacts.memo(s, "ml_nb_ctok", d) {
       docTokens(docs.where(col("doc_id") % TestMod =!= 0))
         .groupBy(col("lang").as("label"), col("tok"))
         .agg(count(lit(1)).as("c"))
@@ -71,7 +68,7 @@ object Learn {
     }
     val clang = ctok.groupBy(col("label")).agg(sum(col("c")).as("ctot"))
     val vocab = ctok.agg(countDistinct(col("tok")).as("v"))
-    val priors = nbPriorCache.getOrCompute(s, d) {
+    val priors = graft.Artifacts.memo(s, "ml_nb_prior", d) {
       docs.where(col("doc_id") % TestMod =!= 0)
         .groupBy(col("lang").as("label")).agg(count(lit(1)).as("nd"))
         .localCheckpoint(true)

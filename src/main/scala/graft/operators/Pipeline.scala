@@ -44,7 +44,7 @@ object Pipeline {
       .withColumn("lang_ok", col("stop_ratio") >= 0.02)
       .withColumn("qual_ok", col("lang_ok") && col("n_toks") >= 20L)
   }
-  /** The staged corpus as a per-snapshot IndexStore artifact: staging is
+  /** The staged corpus as a per-snapshot parquet artifact: staging is
     * the single most-recomputed sub-plan of this family (corpus_clean,
     * funnel, and pretrain — TWICE inside pretrain's plan, once per
     * consumer of `survivors`), and its stop-ratio filter is a
@@ -58,8 +58,8 @@ object Pipeline {
     * stop_ratio an exact integer division.
     */
   private def stagedTable(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
-    graft.IndexStore.materialize(s, s"pl_staged_v1_$d", fp)(
+    val fp = graft.Artifacts.fingerprint(s"$d/documents.parquet")
+    graft.Artifacts.table(s, "pl_staged", s"$d|$fp")(
       staged(tbl(s, d, "documents")).drop("toks"))
   }
 
@@ -441,7 +441,7 @@ object Pipeline {
     * broadcast against the token stream, never a corpus shuffle.
     *
     * Reuses the memoized cluster artifacts (Graph.ccClusters /
-    * ddCanonical read the SessionCache'd LSH labels — the corpus is not
+    * ddCanonical read the memoized LSH labels — the corpus is not
     * re-shingled here), exactly as a production index build reads the
     * dedup pipeline's published label table rather than recomputing it.
     */
@@ -500,7 +500,7 @@ object Pipeline {
     * handoffs, not just the stages, are hash-checked.
     *
     * Scale shape: the gram screen broadcasts an eval-sized set; the
-    * cluster verdict is the SessionCache'd label artifact (O(clustered
+    * cluster verdict is the memoized label artifact (O(clustered
     * docs)); both reach the corpus scan as broadcast semi-joins; the
     * report aggregation is one map-side-combined shuffle of O(langs)
     * groups.

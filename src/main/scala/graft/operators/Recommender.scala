@@ -37,7 +37,7 @@ object Recommender {
     * the co-occurrence table is THE shared artifact of this family
     * (three gates consume it; a production recommender materializes it
     * once per interaction-log snapshot and serves all similarity/rule
-    * reads off it). Persisted as an IndexStore parquet artifact keyed
+    * reads off it). Kept as a parquet artifact keyed
     * on the lineitem snapshot — NOT localCheckpoint blocks: the r15
     * sf10 probe showed the 45M-row pair table squatting in the block
     * manager (the trigram-index / geo-neighbor-graph lesson, r14), and
@@ -47,8 +47,8 @@ object Recommender {
     * the scan's input splits.
     */
   private def pairCounts(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.IndexStore.fingerprint(s"$d/lineitem.parquet")
-    graft.IndexStore.materialize(s, s"rc_pairs_v1_$d", fp) {
+    val fp = graft.Artifacts.fingerprint(s"$d/lineitem.parquet")
+    graft.Artifacts.table(s, "rc_pairs", s"$d|$fp") {
       val b = baskets(s, d)
       // sized from lineitem (the one table this family reads)
       val parts = math.max(32L, graft.Tables.cachedCount(s, d, "lineitem") / 200000L).toInt
@@ -72,12 +72,12 @@ object Recommender {
     * reference re-running the full lineitem scan + distinct + aggregate
     * (plans/r18/rc_itemsim_before.txt: 6 scans for a 3-table query). A
     * production recommender materializes marginals WITH the pair table
-    * per interaction-log snapshot; serving them from the same IndexStore
-    * generation makes every reference a catalog-sized parquet read.
+    * per interaction-log snapshot; serving them as a parquet artifact
+    * too makes every reference a catalog-sized parquet read.
     */
   private def itemMarginal(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.IndexStore.fingerprint(s"$d/lineitem.parquet")
-    graft.IndexStore.materialize(s, s"rc_marg_v1_$d", fp) {
+    val fp = graft.Artifacts.fingerprint(s"$d/lineitem.parquet")
+    graft.Artifacts.table(s, "rc_marg", s"$d|$fp") {
       baskets(s, d).groupBy(col("item")).agg(count(lit(1)).as("m"))
     }
   }

@@ -269,12 +269,12 @@ object Retrieval {
     // previous attempt's localCheckpoint blocks sat in storage memory
     // squeezing that same pool. The explicit hash repartition below sizes
     // the aggregation by corpus (distinct reuses the partitioning — same
-    // shuffle count, just N maps instead of 32), and IndexStore keeps the
+    // shuffle count, just N maps instead of 32), and a parquet artifact keeps the
     // built index out of the block manager entirely — which is also the
     // operational shape the docstring above promises at 100 TB.
     val parts = math.max(32L, docCount(s, d) / 2000L).toInt
-    val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
-    graft.IndexStore.materialize(s, s"trgm_postings_v1_$d", fp)(
+    val fp = graft.Artifacts.fingerprint(s"$d/documents.parquet")
+    graft.Artifacts.table(s, "trgm_postings", s"$d|$fp")(
       tbl(s, d, "documents")
         .where(length(col("text")) >= 3)
         .select(col("doc_id"), explode(expr(

@@ -136,9 +136,8 @@ object Sketches {
     * and any number of point lookups read the one materialized 8 KiB
     * artifact instead of re-exploding the corpus.
     */
-  private val cmsCache = new graft.SessionCache[String]("sk_cms")
   private def cachedCms(s: SparkSession, d: String): DataFrame =
-    cmsCache.getOrCompute(s, d)(
+    graft.Artifacts.memo(s, "sk_cms", d)(
       cmsCells(corpusTokens(s, d)).localCheckpoint(true))
 
   /** sk_cms_table — the full d×w counter table. */

@@ -716,7 +716,7 @@ object Temporal {
     * rows leave. Change detection compares the payload columns directly
     * (double equality is exact: both sides derive from the same stored
     * value) — a fingerprint column (md5 of concatenated payload, the
-    * IndexStore discipline) is the drop-in at wider schemas.
+    * `Artifacts.fingerprint` discipline) is the drop-in at wider schemas.
     */
   val snDiff: Q = (s, d) => {
     import s.implicits._
@@ -1347,7 +1347,7 @@ object Temporal {
     * board), proving algebraic maintenance ≡ recomputation on this data.
     *
     * At 100 TB the `mv` leg is a persisted artifact read back in
-    * (IndexStore shape) — only the delta slice scans; the full-recompute
+    * (`Artifacts.table` shape) — only the delta slice scans; the full-recompute
     * leg exists for the oracle's certification and is NOT part of the
     * refresh cost. Money as integer cents (sn_apply discipline): all
     * three aggregates are exact BIGINTs, the merge is integer addition,

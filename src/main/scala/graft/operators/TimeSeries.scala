@@ -38,9 +38,8 @@ object TimeSeries {
     * production time-series stack materializes once per snapshot (the
     * bigramCounts / lshLabels precedent).
     */
-  private val dailyIdxCache = new graft.SessionCache[String]("ts_daily_idx")
   private def dailyIdx(s: SparkSession, d: String): DataFrame =
-    dailyIdxCache.getOrCompute(s, d) {
+    graft.Artifacts.memo(s, "ts_daily_idx", d) {
       val ev = tbl(s, d, "events")
       val day: Column = ev.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

@@ -342,29 +342,6 @@ class LlmOpsSpec extends AnyFunSuite {
       s"bloom+confirm != exact: extra=${(bloomed -- exact).take(5)} missing=${(exact -- bloomed).take(5)}")
   }
 
-  test("IndexStore: content fingerprint changes when the source mutates, " +
-       "and a changed fingerprint keys a fresh build") {
-    val src = java.nio.file.Files.createTempDirectory("graft-fp-src").toFile
-    val f = new java.io.File(src, "part-0.parquet")
-    java.nio.file.Files.write(f.toPath, "v1".getBytes("UTF-8"))
-    val fp1 = IndexStore.fingerprint(src.getAbsolutePath)
-    assert(fp1 == IndexStore.fingerprint(src.getAbsolutePath), "fingerprint unstable")
-    // mutate content (length changes, so mtime granularity can't mask it)
-    java.nio.file.Files.write(f.toPath, "v2-longer".getBytes("UTF-8"))
-    val fp2 = IndexStore.fingerprint(src.getAbsolutePath)
-    assert(fp1 != fp2, "regenerated source must change the fingerprint")
-    // same key → served from the store; new fingerprint → fresh build
-    var builds = 0
-    val run = java.util.UUID.randomUUID().toString.take(8)
-    def mk(fp: String) = IndexStore.materialize(spark, s"fp_spec_$run", fp) {
-      builds += 1; Seq((1L, fp)).toDF("id", "fp")
-    }
-    mk(fp1); mk(fp1)
-    assert(builds == 1, "unchanged content must be served from the store")
-    mk(fp2)
-    assert(builds == 2, "changed fingerprint must key a fresh build")
-  }
-
   test("pl_pretrain survivors exclude the eval slice and all contaminated docs") {
     val out = operators.Pipeline.pretrain(spark, sf)
       .select($"doc_id").as[Long].collect().toSet
@@ -666,7 +643,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("byte-fallback BPE round-trips held-out text with unseen characters, from the persisted vocab") {
     import operators.TextAnalysis
-    // vocab served from the IndexStore artifact (train-once contract)
+    // vocab served from the session artifact (train-once contract)
     val (merges, alpha) = TextAnalysis.trainedVocab(spark, sf)
     assert(merges.size == TextAnalysis.BpeN && alpha.nonEmpty)
     // ASCII corpus → these chars are genuinely outside the trained alphabet
@@ -837,5 +814,104 @@ class LlmOpsSpec extends AnyFunSuite {
         s"sq_dist diverged from lambda: $r")
     }
     assert(got(2).getDouble(2) == 0.0 && got(3).isNullAt(2)) // lambda sanity
+  }
+
+  test("conv() md5 bucket == per-hex-digit arithmetic") {
+    val toks = Seq("the", "alpha", "", "Zulu9", "été", "a b").toDF("tok")
+    def digits(n: Int, mod: Int) = "(" + (1 to n).map(i =>
+      s"(instr('0123456789abcdef', substr(md5(tok), $i, 1)) - 1) * ${math.pow(16, n - i).toLong}L")
+      .mkString(" + ") + s") % $mod"
+    val bad = toks.select(
+      expr(s"(CAST(conv(substr(md5(tok), 1, 6), 16, 10) AS BIGINT) % 512)").as("c6"),
+      expr(digits(6, 512)).as("d6"),
+      expr(s"(CAST(conv(substr(md5(tok), 1, 2), 16, 10) AS BIGINT) % 64)").as("c2"),
+      expr(digits(2, 64)).as("d2"))
+      .where(col("c6") =!= col("d6") || col("c2") =!= col("d2"))
+    assert(bad.count() == 0, s"conv/digit bucket mismatch: ${bad.collect().mkString}")
+  }
+
+  test("t5Spans single-stream form == the dense_rank branch-and-rejoin shape") {
+    // Adversarial docs: empty text (split → [""]), a one-token doc, a
+    // doc whose LAST block truncates inside/before the hash-picked span
+    // window, and long docs with many corrupted blocks — the cases where
+    // "k = running sentinel count − 1 ≡ dense_rank(b) − 1" could break.
+    import org.apache.spark.sql.expressions.Window
+    val docs = Seq(
+      (0L, ""), (1L, "one"), (2L, (1 to 9).map(i => s"w$i").mkString(" ")),
+      (3L, (1 to 64).map(i => s"tok$i").mkString(" ")),
+      (4L, (1 to 17).map(i => s"x$i").mkString(" ")),
+      (5L, (1 to 200).map(i => s"v$i").mkString(" "))).toDF("doc_id", "text")
+    val t = docs
+      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p", "tok")))
+      .withColumn("b", expr("CAST(floor(p / 8.0) AS BIGINT)"))
+      .withColumn("h", md5(concat(lit("t5:"), col("doc_id"), lit(":"), col("b"))))
+      .withColumn("off", ascii(substring(col("h"), 1, 1)) % 4)
+      .withColumn("len", ascii(substring(col("h"), 2, 1)) % 3 + 1)
+      .withColumn("pib", col("p") - col("b") * 8)
+      .withColumn("corrupt",
+        ascii(substring(col("h"), 3, 1)) % 2 === 0 &&
+        col("pib") >= col("off") && col("pib") < col("off") + col("len"))
+    val c = t.where(col("corrupt"))
+      .withColumn("k",
+        dense_rank().over(Window.partitionBy(col("doc_id")).orderBy(col("b"))) - 1)
+    val pieces = t.where(!col("corrupt"))
+      .select(col("doc_id"), col("p"), col("tok").as("piece"))
+      .unionByName(c.where(col("pib") === col("off"))
+        .select(col("doc_id"), col("p"),
+          concat(lit("<extra_id_"), col("k"), lit(">")).as("piece")))
+    val joined = expr(
+      "array_join(transform(array_sort(collect_list(struct(p, piece))), x -> x.piece), ' ')")
+    val input = pieces.groupBy(col("doc_id")).agg(joined.as("input"))
+    val target = c
+      .select(col("doc_id"), col("p"), col("k"),
+        when(col("pib") === col("off"),
+          concat(lit("<extra_id_"), col("k"), lit("> "), col("tok")))
+          .otherwise(col("tok")).as("piece"))
+      .groupBy(col("doc_id"))
+      .agg(joined.as("target"), (max(col("k")) + 1).cast("long").as("n_spans"))
+    val old = input.join(target, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("input"),
+        coalesce(col("target"), lit("")).as("target"),
+        coalesce(col("n_spans"), lit(0L)).as("n_spans"))
+    // New shape, via the production entry point over a temp parquet dir
+    val dir = java.nio.file.Files.createTempDirectory("t5eq").toFile
+    try {
+      docs.withColumn("source", lit("t"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val neu = operators.TextAnalysis.t5Spans(spark, dir.toString)
+      val diff = neu.as("n").join(old.as("o"), Seq("doc_id"), "full")
+        .where(col("n.input") =!= col("o.input") ||
+          col("n.target") =!= col("o.target") ||
+          col("n.n_spans") =!= col("o.n_spans"))
+      assert(diff.count() == 0,
+        s"t5 single-stream mismatch: ${diff.collect().mkString("\n")}")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
+
+  test("pl_decontam: corpus gram stream reaches the broadcast join unshuffled") {
+    // AQE off so the executedPlan is a plain inspectable tree
+    // (PlanGuardSpec.planWithoutAqe idiom)
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val plan =
+      try operators.Pipeline.decontam(spark, "/root/testdata/sf0.001")
+        .queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(bhj.nonEmpty, "expected a broadcast gram join")
+    // the streamed (corpus) side of the gram join must be a straight
+    // scan→gram-explode line: the r18 fix moved the distinct above it
+    val streamed = bhj.map(j => if (j.buildSide.toString.contains("Right")) j.left else j.right)
+    streamed.foreach { s =>
+      assert(s.collect { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"corpus side shuffles before the broadcast join:\n$s")
+    }
   }
 }

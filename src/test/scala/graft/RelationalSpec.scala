@@ -70,4 +70,14 @@ class RelationalSpec extends AnyFunSuite {
       .where($"value" =!= $"expect").count()
     assert(joined == 0)
   }
+
+  test("tpch_q21 window form: one lineitem scan, no Expand") {
+    val plan = operators.Relational.tpchQ21(spark, "/root/testdata/sf0.001")
+      .queryExecution.executedPlan
+    val leaves = plan.collectLeaves().map(_.toString)
+    assert(leaves.count(_.contains("lineitem")) == 1,
+      s"expected ONE lineitem scan:\n${leaves.mkString("\n")}")
+    assert(plan.collect { case e if e.nodeName == "Expand" => e }.isEmpty,
+      "q21 must not plan an Expand")
+  }
 }

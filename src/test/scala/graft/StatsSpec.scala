@@ -258,4 +258,42 @@ class StatsSpec extends AnyFunSuite {
     // NULL (the ev_anomaly zero-variance rule), never NaN/Inf
     assert(r.isNullAt(r.fieldIndex("z")))
   }
+
+  test("floor(x*1e4+0.5) long == decimal(17,4) unscaled for gate-domain values") {
+    // 2-dp money, integral quantities, 2-dp rates, and revenue-style
+    // products p·(1−δ) (exact 4-dp rationals stored as inexact doubles)
+    val base = Seq(0.0, 0.01, 0.04, 0.99, 1.0, 7.0, 49.99, 901.00,
+      104949.50, 0.1 + 0.2 /* 0.30000000000000004 */)
+    val prods = for {
+      p <- Seq(901.00, 88888.88, 104949.50); dsc <- Seq(0.0, 0.04, 0.1)
+    } yield p * (1.0 - dsc)
+    val vals = (base ++ prods).toDF("x")
+    val cmp = vals.select(
+      floor(col("x") * lit(10000.0d) + lit(0.5d)).cast("long").as("viaFloor"),
+      (col("x").cast("decimal(17,4)") * lit(10000)).cast("long").as("viaDec"))
+      .where(col("viaFloor") =!= col("viaDec"))
+    assert(cmp.count() == 0, s"floor-trick mismatch: ${cmp.collect().mkString}")
+  }
+
+  test("hi/lo split sums recombine to the exact decimal product sum") {
+    // products up to ~1.2e18 (price·price at 4-dp unscale) and enough
+    // rows that Σlo crosses 1e9 — the regime the decimal(20,0) casts and
+    // the (·10 + lo/1e8) recombination must stay exact in
+    val rows = (1 to 5000).map { i =>
+      val u = 1000000000L + i.toLong * 171717L // ~1e9-scale unscaled
+      (u, u - 7L)
+    }
+    val df = rows.toDF("ua", "ub")
+    val agg = df.agg(
+      sum(expr("(ua * ub) div 1000000000L")).as("hi"),
+      sum(expr("(ua * ub) % 1000000000L")).as("lo"))
+    val got = agg.select(
+      (col("hi").cast("decimal(20,0)") * expr("CAST(10 AS DECIMAL(2,0))") +
+        col("lo").cast("decimal(20,0)") /
+          expr("CAST(100000000 AS DECIMAL(9,0))")).cast("string"))
+      .as[String].head()
+    val want = rows.map { case (a, b) => BigInt(a) * BigInt(b) }.sum
+    assert(BigDecimal(got) * BigDecimal(100000000L) == BigDecimal(want),
+      s"recombined $got vs exact ${want}e-8")
+  }
 }

@@ -847,4 +847,22 @@ class TemporalGraphSpec extends AnyFunSuite {
       release(result)
     }
   }
+
+  test("brandes saturation early-exit: deep level budget == exact ball depth") {
+    // A path graph 1-2-3-4 plus an isolated edge (7,8): from sources
+    // {1, 7}, every frontier is empty past depth 3 — a levels budget of
+    // 12 must return exactly what levels=4 returns (the early-exit padds
+    // empty frames), and both must match Brandes hand-computation:
+    // path P4 from source 1 gives delta(2)=2, delta(3)=1.
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("a", "b")
+    val srcs = Seq(1L, 7L).toDF("src")
+    val lo = operators.Graph.brandes(edges, srcs, levels = 4)
+      .orderBy(col("node")).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val hi = operators.Graph.brandes(edges, srcs, levels = 12)
+      .orderBy(col("node")).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(lo.sameElements(hi), s"levels=12 diverged: ${hi.mkString} vs ${lo.mkString}")
+    val m = lo.toMap
+    assert(m(2L) == 2.0 && m(3L) == 1.0 && m(8L) == 0.0,
+      s"Brandes dependencies wrong: ${lo.mkString(", ")}")
+  }
 }

@@ -18,9 +18,4 @@ export SPARK_GRAFT_BENCH_FILTER="pl_pretrain,dd_jaro,dd_dup_ngrams,dd_ppjoin,sp_
 SPARK_GRAFT_SF_DIR=/tmp/graft-sf10 tools/run_main.sh graft.Bench > /tmp/r10/bench_sf10_filtered.log 2>&1
 unset SPARK_GRAFT_BENCH_FILTER
 
-# iterative-family scheduling floor
-tools/run_main.sh graft.IterBench /root/testdata/sf0.001 > /tmp/r10/iter_sf0001.log 2>&1
-tools/run_main.sh graft.IterBench /root/testdata/sf0.1   > /tmp/r10/iter_sf01.log   2>&1
-tools/run_main.sh graft.IterBench /tmp/graft-sf1         > /tmp/r10/iter_sf1.log    2>&1
-
 echo "ALL DONE"
