@@ -255,7 +255,7 @@ object Graph {
     * keep/drop filters) reads the label table. Memoize per
     * (session, sfDir) accordingly; the frame is an eager localCheckpoint,
     * so the cache holds materialized blocks, not lineage. Same precedent
-    * as HypermapQueries.decodedCache.
+    * as HypermapQueries' decoded fixture frame.
     */
   private[operators] def lshLabels(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.memo(s, "gr_lsh_labels", d)(connectedComponents(lshPairGraph(s, d)))
@@ -265,7 +265,7 @@ object Graph {
     * edge list, and a production pipeline computes candidates ONCE per
     * corpus snapshot — re-shingling the corpus per downstream graph
     * metric would triple the dominant cost. Eager localCheckpoint so the
-    * cache holds blocks, not lineage (labelCache discipline).
+    * cache holds blocks, not lineage (the [[lshLabels]] discipline).
     */
   private def lshPairGraph(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.memo(s, "gr_lsh_pairs", d)(Dedup.lshPairs(s, d).localCheckpoint())
@@ -1354,8 +1354,8 @@ object Graph {
   /** The distinct customer→part bipartite edge list — the per-snapshot
     * infrastructure artifact (orders ⋈ lineitem + distinct, the suite's
     * largest edge build); the HITS rounds themselves still run per
-    * invocation. Kept as a parquet artifact, NOT
-    * localCheckpoint blocks (r15 sf10 probe): at 60M edges the block-
+    * invocation. Kept as a parquet artifact, NOT localCheckpoint
+    * blocks (r15 sf10 probe): at 60M edges the block-
     * stored copy squeezed the execution pool until the first HITS
     * aggregation died with UNABLE_TO_ACQUIRE_MEMORY under batch
     * pressure — the identical failure mode the trigram index (r14), geo

@@ -269,8 +269,8 @@ object Retrieval {
     // previous attempt's localCheckpoint blocks sat in storage memory
     // squeezing that same pool. The explicit hash repartition below sizes
     // the aggregation by corpus (distinct reuses the partitioning — same
-    // shuffle count, just N maps instead of 32), and a parquet artifact keeps the
-    // built index out of the block manager entirely — which is also the
+    // shuffle count, just N maps instead of 32), and a parquet artifact
+    // keeps the built index out of the block manager entirely — which is also the
     // operational shape the docstring above promises at 100 TB.
     val parts = math.max(32L, docCount(s, d) / 2000L).toInt
     val fp = graft.Artifacts.fingerprint(s"$d/documents.parquet")
