@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.CheckpointBridge
+import scala.jdk.CollectionConverters._
 
 /** Session artifacts: values derived once per corpus snapshot (label
   * tables, code indexes, trained vocabularies, row counts) and read by
@@ -32,8 +34,10 @@ import org.apache.spark.sql.functions.col
   * Storage kinds:
   *  - [[memo]] keeps whatever the build returns. A Dataset is usually an
   *    eager localCheckpoint, i.e. executor blocks: right for small
-  *    artifacts, and registered with [[BlockJanitor.protect]] so the
-  *    sweep between top-level builds never frees them.
+  *    artifacts. The build's [[Pins]] that the kept Dataset reads belong
+  *    to no scope and live as long as the context; every other pin the
+  *    build made is freed when it returns, and all of them when it
+  *    throws.
   *  - [[table]] writes the frame to parquet and keeps the frame read
   *    back. Parquet survives block eviction and keeps a corpus-sized
   *    table out of storage memory, where it would squeeze the execution
@@ -62,13 +66,31 @@ object Artifacts {
     cells.keySet.removeIf(_._1.sparkContext.isStopped)
     val cell = cells.computeIfAbsent((s, family, key), _ => new Cell)
     cell.synchronized {
-      if (cell.value.isEmpty) cell.value = Some(ArtifactLedger.timed(family)(build) match {
-        case ds: Dataset[_] => BlockJanitor.protect(ds)
-        case v => v
-      })
+      if (cell.value.isEmpty) cell.value = Some(ArtifactLedger.timed(family)(keep(build)))
       cell.value.get.asInstanceOf[A]
     }
   }
+
+  /** `build`'s value; of the pins made under it, those the value reads
+    * are kept and the rest freed.
+    */
+  private def keep[A](build: => A): A = {
+    val (value, pins) = Pins.made(build)
+    val read = value match {
+      case ds: Dataset[_] => CheckpointBridge.checkpointedRdds(ds).map(_.id).toSet
+      case _ => Set.empty[Int]
+    }
+    Pins.release(pins.filterNot(r => read(r.id)))
+    value
+  }
+
+  /** Ids of the pins that `s`'s memoized Datasets read. */
+  private[graft] def heldPins(s: SparkSession): Set[Int] =
+    cells.asScala.collect { case ((`s`, _, _), cell) => cell.synchronized(cell.value) }
+      .flatMap {
+        case Some(ds: Dataset[_]) => CheckpointBridge.checkpointedRdds(ds).map(_.id)
+        case _ => Nil
+      }.toSet
 
   /** The artifact `(s, family, key)` as a parquet table, written from
     * `build` on first use. `bucketBy = Some((n, c))` writes it

@@ -11,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   * three timed passes each, reporting the per-query MEDIAN — a single pass
   * is hostage to one GC pause or page-cache miss landing on an arbitrary
   * query (observed: a 0.2 s point lookup recorded as 2.6 s in one round).
+  * Every pass runs in a [[Pins.scope]]: the pins its build made are freed,
+  * blocking, after the count and outside the timer, so no pass inherits
+  * another's blocks.
   */
 object Bench {
 
@@ -106,14 +109,7 @@ object Bench {
     val warmupErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     sorted.foreach { case (name, fn) =>
       mark(s"warmup $name")
-      // sweep BEFORE each build: the previous gate's returned pins /
-      // iterative finals are consumed and unreferenced, but their
-      // localCheckpoint blocks survive until a driver GC lets the
-      // ContextCleaner at them — across a 333-gate battery they
-      // accumulate without bound (BlockJanitor scaladoc). Sequential
-      // context only: Verify's concurrent dump must NOT sweep.
-      warmupPass(name, () => { BlockJanitor.sweep(spark)
-        fn(spark, sfDir).count(); () }, mark,
+      warmupPass(name, () => Pins.scope { fn(spark, sfDir).count(); () }, mark,
         () => ensureAlive()).foreach(warmupErrors.getOrElseUpdate(name, _))
     }
 
@@ -145,23 +141,22 @@ object Bench {
         var warmed = false
         while (!warmed && attempts < 2) {
           attempts += 1
-          warmed = warmupPass(name, () => { fn(spark, sfDir).count(); () },
+          warmed = warmupPass(name, () => Pins.scope { fn(spark, sfDir).count(); () },
             mark, () => ensureAlive()).isEmpty
         }
       }
       val times = Seq.fill(3) {
-        // the sweep is cleanup of the PREVIOUS run's leaked blocks, so it
-        // sits before the timer; it is an async unpersist over a map of
-        // at most a few hundred entries (sub-ms)
-        BlockJanitor.sweep(spark)
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
+        try Pins.scope {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        } catch {
           case t: Throwable =>
             errors.getOrElseUpdate(name, t.getClass.getSimpleName + ": " +
               Option(t.getMessage).getOrElse("").take(120))
             ensureAlive()
+            Double.NaN
         }
-        (System.nanoTime() - t0) / 1e9
       }
       if (sessionGen > genBefore) restarts += name
       // times stays CHRONOLOGICAL in the record (r18 verdict read the

@@ -17,14 +17,11 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * NOTE on leaked pins: many builders return an eagerly checkpointed
-    * frame (iterative finals, fan-out pins) that the operator cannot free
-    * itself. Sequential consumers (Bench) reclaim them between runs via
-    * [[BlockJanitor.sweep]]; the sweep deliberately does NOT live here —
-    * Verify consumes these builders from 8 concurrent threads, where a
-    * sweep triggered by one gate's build would free a sibling's blocks
-    * mid-write. Session artifacts ([[Artifacts]]) are protected from the
-    * sweep and built once per key under concurrent builders.
+    * Many builders return a frame that reads pins (iterative finals,
+    * fan-out tables) the operator cannot free itself. A consumer runs the
+    * builder and its action in one [[Pins.scope]], which frees exactly
+    * those pins afterwards; scopes are per thread, so concurrent
+    * consumers (Verify's dump threads) never free each other's blocks.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     operators.Relational.queries ++ hypermap.HypermapQueries.queries ++

@@ -15,14 +15,15 @@ object Verify {
     // sequential loop spent ~8.5 min mostly on per-query job latency with
     // local[32] idle (VERDICT r12 §wrong-1). Spark sessions are thread-safe
     // for concurrent actions, so run the dump on a fixed pool; session
-    // artifacts stay single-build per key (Artifacts.memo).
+    // artifacts stay single-build per key (Artifacts.memo), and each
+    // thread's scope frees only the pins its own gate made.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       sys.env.getOrElse("GRAFT_VERIFY_THREADS", "8").toInt)
     val futures = selected.toSeq.map { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit =
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          try Pins.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name"))
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           }
@@ -48,6 +49,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs at exit")
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.hypermap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.EvmCodec
+import graft.Pins
 
 /** Driver-gate queries exercising the hypermap pipeline itself.
   *
@@ -200,8 +201,10 @@ object HypermapQueries {
     * fold + idempotent sinks converge to the batch semantics end-to-end.
     *
     * Memoized per session: the replay is a side-effecting fixture build
-    * (temp dirs + two streaming queries, ~5 s); verify's parallel dump
-    * and bench both reuse the one materialized result.
+    * (temp dirs + two streaming queries, 17–25 s in a Bench session on a
+    * 4-core host, most of it the first micro-batch's cold plans, not the
+    * trigger); verify's parallel dump and bench both reuse the one
+    * materialized result.
     */
   val entriesReplay: Q = (s, _) => {
     import s.implicits._
@@ -220,7 +223,7 @@ object HypermapQueries {
         4 -> all.take(7))      // pure redelivery: must be a no-op
       def run(batches: Seq[(Int, Seq[Fixtures.Log])]): Unit = {
         val q = graft.streaming.Tail.startWithEntriesCommitted(s, rawDir + "/*/",
-          ev, en, ck, trigger = Trigger.ProcessingTime("1 second"))
+          ev, en, ck, trigger = Trigger.ProcessingTime(0L))
         // finally-stop: a failed landing/batch must not leak a live
         // query bound to the shared checkpoint (a same-session retry
         // would otherwise start a SECOND query on the same dirs)
@@ -231,7 +234,7 @@ object HypermapQueries {
       }
       run(land.take(2))
       run(land.drop(2)) // restart on the same checkpoint (ST2)
-      val result = Sinks.readCommitted(s, en).localCheckpoint(true)
+      val result = Pins(Sinks.readCommitted(s, en))
       // the fixture dirs are consumed once the checkpoint materializes
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
       result
@@ -272,9 +275,8 @@ object HypermapQueries {
         d
       } finally mock.stop()
       Coverage.requireComplete(s, dir, 27430000L, 27434999L)
-      val result = Decode.decode(
-        s.read.schema(Schemas.rawLogs).json(dir))
-        .localCheckpoint(true)
+      val result = Pins(Decode.decode(
+        s.read.schema(Schemas.rawLogs).json(dir)))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       result
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Deduplication operator family for large-scale training-data pipelines
@@ -157,8 +158,7 @@ object Dedup {
     // pinned (r18 batch 4): probe-bounded (30 docs) shingle set feeds
     // the size aggregate and both self-join sides — 3 unpinned copies
     // of the scan+explode+distinct subtree
-    val sh = shingles(tbl(s, d, "documents").where(col("doc_id") < 30)).distinct()
-      .localCheckpoint(true)
+    val sh = Pins(shingles(tbl(s, d, "documents").where(col("doc_id") < 30)).distinct())
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val inter = sh.select(col("doc_id").as("a"), col("sh"))
       .join(sh.select(col("doc_id").as("b"), col("sh")), Seq("sh"))
@@ -619,10 +619,9 @@ object Dedup {
           // (bounded by Σ_pairs shared anchors) so the corpus-scale g0
           // cache can be RELEASED here instead of pinning executor
           // storage for the session lifetime
-          a.join(cand, Seq("a"))
+          Pins(a.join(cand, Seq("a"))
             .join(b, Seq("gram", "b"))
-            .select(col("a"), col("b"), col("pa"), (col("pa") - col("pb")).as("diff"))
-            .localCheckpoint(true)
+            .select(col("a"), col("b"), col("pa"), (col("pa") - col("pb")).as("diff")))
         } finally g0.unpersist()
     }
     val w = org.apache.spark.sql.expressions.Window
@@ -825,7 +824,7 @@ object Dedup {
         (col("inter").cast("double") / (col("sza") + col("szb") - col("inter")).cast("double"))
           .as("jaccard"))
       .where(col("jaccard") >= threshold)
-    try out.localCheckpoint(true) finally sh.unpersist()
+    try Pins(out) finally sh.unpersist()
   }
 
   // ------------------------------------------------------- decontamination
@@ -937,8 +936,7 @@ object Dedup {
     // parquet scans for an eval-slice-sized set). Eval sets are bounded
     // by construction — the broadcast-ability argument below already
     // depends on that.
-    val evalGrams = docNGrams(evalDocs, n).select(col("gram"))
-      .localCheckpoint(true)
+    val evalGrams = Pins(docNGrams(evalDocs, n).select(col("gram")))
     val expected = math.max(evalGrams.count(), 1L)
     // standard sizing: m = -n·ln(fpp)/ln(2)², same formula stat.bloomFilter used
     val numBits = math.max(64L,
@@ -1005,7 +1003,7 @@ object Dedup {
     * pruned plan returns exactly the naive answer.
     */
   def ppJoin(docs: DataFrame, n: Int, tau: Double,
-             materializeLists: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+             materializeLists: DataFrame => DataFrame = Pins(_)): DataFrame = {
     // Each doc's grams become ONE sorted array of "df(10-digit)|gram"
     // keys — zero-padded df first, so UTF8 binary order ≡ the (df, gram)
     // rarest-first order, and the SAME array serves three stages: its
@@ -1241,8 +1239,8 @@ object Dedup {
     // once and fanning out from blocks is the guide §3.3 fix for
     // duplicated subtrees ("materialising an intermediate truncates the
     // plan"); after: 1 scan, 1 explode, 7 exchanges.
-    val sh = shingles(tbl(s, d, "documents").where($"doc_id" < 200))
-      .distinct().localCheckpoint()
+    val sh = Pins(shingles(tbl(s, d, "documents").where($"doc_id" < 200))
+      .distinct())
     // corpus size N attaches via the jk literal-key broadcast equi-join
     // (pl_shards' PlanGuard-clean scalar form) — the first formulation
     // ran a DRIVER-SIDE count() at plan-build time, paying one extra
@@ -1433,7 +1431,7 @@ object Dedup {
         concat($"nk", lit(":"), round($"ba" * 100).cast("long")))
       .join(b.withColumn("bk",
         concat($"nk", lit(":"), round($"bb" * 100).cast("long"))), "bk")
-    val pairs = g(p1).unionByName(g(p2)).distinct().localCheckpoint()
+    val pairs = Pins(g(p1).unionByName(g(p2)).distinct())
     def clamp(p: org.apache.spark.sql.Column) =
       least(greatest(p, lit(0.0001)), lit(0.9999))
     val m = pairs.where($"ka" === $"kb").agg(
@@ -1520,13 +1518,12 @@ object Dedup {
         .join(sh.select(col("doc_id").as("b"), col("sh")), Seq("sh"))
         .where(col("a") < col("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-      inter
+      Pins(inter
         .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
         .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), Seq("b"))
         .select(col("a"), col("b"), col("inter"),
           round(col("inter").cast("double") / col("sza"), 6).as("cont_a"),
-          round(col("inter").cast("double") / col("szb"), 6).as("cont_b"))
-        .localCheckpoint()
+          round(col("inter").cast("double") / col("szb"), 6).as("cont_b")))
     }
 
   val containment: Q = (s, d) =>

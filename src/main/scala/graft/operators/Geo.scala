@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Geospatial primitives: deterministic synthetic coordinates, grid-cell
@@ -434,14 +435,13 @@ object Geo {
       // the output slice, and the survivor anti join all read the tiny
       // checkpointed top-k block, and the output slice no longer needs
       // its own eager checkpoint at all.
-      val ranked = broadcast(probes).join(suppSrc, Seq("band"))
+      val ranked = Pins(broadcast(probes).join(suppSrc, Seq("band"))
         .withColumn("dist_km",
           round(haversine(col("clat"), col("clon"), col("slat"), col("slon")), 4))
         .withColumn("rk", row_number().over(win))
         .where(col("rk") <= k)
         .select(col("c_custkey"), col("rk").cast("long").as("rk"),
-          col("s_suppkey"), col("dist_km"))
-        .localCheckpoint(true)
+          col("s_suppkey"), col("dist_km")))
       val guaranteed = 2.0 * w * (math.Pi * 6371.0088 / 180.0) - 0.001
       val doneKeys =
         if (w >= 90) undone.select(col("c_custkey"))
@@ -453,8 +453,7 @@ object Geo {
       acc = Some(acc.map(_.unionByName(out)).getOrElse(out))
       if (w >= 90) remaining = 0L
       else {
-        undone = undone.join(doneKeys, Seq("c_custkey"), "left_anti")
-          .localCheckpoint(true)
+        undone = Pins(undone.join(doneKeys, Seq("c_custkey"), "left_anti"))
         remaining = undone.count()
       }
     }
@@ -663,9 +662,8 @@ object Geo {
       val ccLab = Graph.connectedComponentsStar(coreEdges)
         .select(col("node").as("k"), col("cluster"))
       // isolated cores: no core-core edge → singleton cluster = self
-      core.join(ccLab, Seq("k"), "left")
-        .select(col("k"), coalesce(col("cluster"), col("k")).as("cluster"))
-        .localCheckpoint(true)
+      Pins(core.join(ccLab, Seq("k"), "left")
+        .select(col("k"), coalesce(col("cluster"), col("k")).as("cluster")))
     }
 
   val geoDbscanCc: Q = (s, d) => {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Graph operators for dedup canonicalization: near-duplicate candidate
@@ -157,9 +158,8 @@ object Graph {
       // Eager checkpoint: materialize the O(|nodes|) labeling while
       // `cleaned` is still cached, then drop both the input cache and the
       // fixpoint edge set — the caller holds only the final small frame.
-      val out = nodes.join(cur.withColumnRenamed("a", "node"), Seq("node"), "left")
-        .select(col("node"), coalesce(col("b"), col("node")).as("cluster"))
-        .localCheckpoint()
+      val out = Pins(nodes.join(cur.withColumnRenamed("a", "node"), Seq("node"), "left")
+        .select(col("node"), coalesce(col("b"), col("node")).as("cluster")))
       CheckpointBridge.freeCheckpoint(cur)
       out
     } finally cleaned.unpersist(blocking = false)
@@ -268,7 +268,7 @@ object Graph {
     * cache holds blocks, not lineage (the [[lshLabels]] discipline).
     */
   private def lshPairGraph(s: SparkSession, d: String): DataFrame =
-    graft.Artifacts.memo(s, "gr_lsh_pairs", d)(Dedup.lshPairs(s, d).localCheckpoint())
+    graft.Artifacts.memo(s, "gr_lsh_pairs", d)(Pins(Dedup.lshPairs(s, d)))
 
   /** cc — duplicate clusters over the LSH candidate pairs (same probe set
     * as dd_lsh_pairs): each doc in a candidate pair labeled with its
@@ -475,7 +475,7 @@ object Graph {
     val out = tri
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-    val materialized = out.localCheckpoint()
+    val materialized = Pins(out)
     und.unpersist(); oriented.unpersist()
     materialized
   }
@@ -1311,8 +1311,8 @@ object Graph {
     */
   private def hitsBipartiteOn(eBySrc: DataFrame, eByDst: DataFrame,
                               iters: Int, shjHint: Boolean = false): DataFrame = {
-    var hub = eBySrc.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(1.0).as("hub")).localCheckpoint()
+    var hub = Pins(eBySrc.select(col("src").as("id")).distinct()
+      .select(col("id"), lit(1.0).as("hub")))
     // no zero-auth seed: the first half-round derives auth from hub and
     // would free the seed unread — materializing it burned one full
     // distinct-shuffle of the edge list per call
@@ -1334,16 +1334,14 @@ object Graph {
       def side(n: DataFrame) = if (shjHint) n.hint("shuffle_hash") else n
       val as = eBySrc.join(side(hub), eBySrc("src") === hub("id"))
         .groupBy(col("dst")).agg(sum(col("hub")).as("s"))
-      val nextAuth = as.crossJoin(broadcast(as.agg(max(col("s")).as("m"))))
-        .select(col("dst").as("id"), round(col("s") / col("m"), 9).as("auth"))
-        .localCheckpoint()
+      val nextAuth = Pins(as.crossJoin(broadcast(as.agg(max(col("s")).as("m"))))
+        .select(col("dst").as("id"), round(col("s") / col("m"), 9).as("auth")))
       if (auth != null) CheckpointBridge.freeCheckpoint(auth)
       auth = nextAuth
       val hs = eByDst.join(side(auth), eByDst("dst") === auth("id"))
         .groupBy(col("src")).agg(sum(col("auth")).as("s"))
-      val nextHub = hs.crossJoin(broadcast(hs.agg(max(col("s")).as("m"))))
-        .select(col("src").as("id"), round(col("s") / col("m"), 9).as("hub"))
-        .localCheckpoint()
+      val nextHub = Pins(hs.crossJoin(broadcast(hs.agg(max(col("s")).as("m"))))
+        .select(col("src").as("id"), round(col("s") / col("m"), 9).as("hub")))
       CheckpointBridge.freeCheckpoint(hub)
       hub = nextHub
     }
@@ -1480,13 +1478,12 @@ object Graph {
   def brandes(edges: DataFrame, sources: DataFrame,
               levels: Int = BcLevels): DataFrame = {
     val und = undirected(edges, "brandes").persist()
-    val seed = sources.select(col("src"), col("src").as("node"), lit(1L).as("sigma"))
-      .localCheckpoint()
+    val seed = Pins(sources.select(col("src"), col("src").as("node"), lit(1L).as("sigma")))
     // forward: lvls(r) = (src, node, sigma) at depth exactly r; each
     // cumulative visited frame is dead as soon as its successor
     // checkpoints — free it then
     val lvls = scala.collection.mutable.ArrayBuffer(seed)
-    var visited = seed.select(col("src"), col("node")).localCheckpoint()
+    var visited = Pins(seed.select(col("src"), col("node")))
     // Saturation early-exit: once a frontier is EMPTY,
     // every deeper level is empty by construction (it expands the empty
     // frame) and visited cannot change — so the remaining rounds' join/
@@ -1503,13 +1500,12 @@ object Graph {
       else {
         val exp = lvls.last.join(und, lvls.last("node") === und("x"))
           .select(col("src"), col("y").as("node"), col("sigma"))
-        val nxt = exp.join(visited, Seq("src", "node"), "left_anti")
-          .groupBy(col("src"), col("node")).agg(sum(col("sigma")).as("sigma"))
-          .localCheckpoint()
+        val nxt = Pins(exp.join(visited, Seq("src", "node"), "left_anti")
+          .groupBy(col("src"), col("node")).agg(sum(col("sigma")).as("sigma")))
         lvls += nxt
         if (nxt.isEmpty) saturated = true
         else {
-          val nextVisited = visited.union(nxt.select(col("src"), col("node"))).localCheckpoint()
+          val nextVisited = Pins(visited.union(nxt.select(col("src"), col("node"))))
           CheckpointBridge.freeCheckpoint(visited)
           visited = nextVisited
         }
@@ -1535,21 +1531,19 @@ object Graph {
           .withColumn("term", round(col("sigma").cast("double") / col("wsig") *
             (lit(1.0) + col("wdelta")), 12).cast("decimal(30,12)"))
           .groupBy(col("src"), col("node")).agg(sum(col("term")).as("sd"))
-        deeper = f.join(sd, Seq("src", "node"), "left")
+        deeper = Pins(f.join(sd, Seq("src", "node"), "left")
           .select(col("src"), col("node"), col("sigma"),
             round(coalesce(col("sd"), lit(java.math.BigDecimal.ZERO)).cast("double"), 9)
-              .as("delta"))
-          .localCheckpoint()
+              .as("delta")))
         acc += deeper
       }
     }
     // materialize the O(ball-nodes) result eagerly, then free every
     // level/delta checkpoint — returning lazily would pin levels+1
     // O(Σ ball) frames until the caller's action and beyond
-    val out = acc.map(_.select(col("node"), col("delta"))).reduce(_ unionByName _)
+    val out = Pins(acc.map(_.select(col("node"), col("delta"))).reduce(_ unionByName _)
       .groupBy(col("node"))
-      .agg(round(sum(col("delta").cast("decimal(28,9)")).cast("double"), 6).as("bc"))
-      .localCheckpoint()
+      .agg(round(sum(col("delta").cast("decimal(28,9)")).cast("double"), 6).as("bc")))
     (lvls ++ acc).foreach(CheckpointBridge.freeCheckpoint)
     und.unpersist()
     out

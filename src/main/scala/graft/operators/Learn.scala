@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Supervised-learning operators beyond the logistic scorer
@@ -61,17 +62,15 @@ object Learn {
   def nbScores(s: SparkSession, d: String): DataFrame = {
     val docs = tbl(s, d, "documents")
     val ctok = graft.Artifacts.memo(s, "ml_nb_ctok", d) {
-      docTokens(docs.where(col("doc_id") % TestMod =!= 0))
+      Pins(docTokens(docs.where(col("doc_id") % TestMod =!= 0))
         .groupBy(col("lang").as("label"), col("tok"))
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("c")))
     }
     val clang = ctok.groupBy(col("label")).agg(sum(col("c")).as("ctot"))
     val vocab = ctok.agg(countDistinct(col("tok")).as("v"))
     val priors = graft.Artifacts.memo(s, "ml_nb_prior", d) {
-      docs.where(col("doc_id") % TestMod =!= 0)
-        .groupBy(col("lang").as("label")).agg(count(lit(1)).as("nd"))
-        .localCheckpoint(true)
+      Pins(docs.where(col("doc_id") % TestMod =!= 0)
+        .groupBy(col("lang").as("label")).agg(count(lit(1)).as("nd")))
     }
     val nTrain = priors.agg(sum(col("nd")).as("n"))
     val priorTerm = priors.crossJoin(broadcast(nTrain))

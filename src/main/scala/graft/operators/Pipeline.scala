@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** End-to-end corpus cleaning — the composition every LLM training-data
@@ -639,10 +640,9 @@ object Pipeline {
       .where(length($"tok") > 0)
       .withColumn("b", expr(bucketExpr))
       .groupBy($"doc_id", $"lang", $"b").agg(count(lit(1)).as("c"))
-    val both = hist.groupBy($"b").agg(
+    val both = Pins(hist.groupBy($"b").agg(
       sum($"c").as("cr"),
-      sum(when($"lang" === "en", $"c").otherwise(0L)).as("ct"))
-      .localCheckpoint(true)
+      sum(when($"lang" === "en", $"c").otherwise(0L)).as("ct")))
     val tots = both.agg(sum($"ct").as("tt"), sum($"cr").as("tr"))
     val llr = both.crossJoin(broadcast(tots))
       .select($"b",

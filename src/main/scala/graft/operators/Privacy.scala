@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** PII detection and redaction — a first-class stage in any training-data
@@ -135,9 +136,8 @@ object Privacy {
     // consumers (pass level + risky/suppressed overflow) — unpinned,
     // the documents scan + aggregation replicated per branch; both
     // grids are O(classes)
-    val c0 = docs.groupBy(col("lang"), col("source"), col("b0"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val c0 = Pins(docs.groupBy(col("lang"), col("source"), col("b0"))
+      .agg(count(lit(1)).as("n")))
     val level0 = c0.where(col("n") >= k)
       .select(lit(0L).as("level"), col("lang"), col("source"),
         concat(col("b0") * 100, lit("-"), col("b0") * 100 + 99).as("len_range"),
@@ -145,9 +145,8 @@ object Privacy {
     val risky = docs.join(
       broadcast(c0.where(col("n") < k).select(col("lang"), col("source"), col("b0"))),
       Seq("lang", "source", "b0"))
-    val c1 = risky.groupBy(col("lang"), col("source"), col("b1"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val c1 = Pins(risky.groupBy(col("lang"), col("source"), col("b1"))
+      .agg(count(lit(1)).as("n")))
     val level1 = c1.where(col("n") >= k)
       .select(lit(1L).as("level"), col("lang"), col("source"),
         concat(col("b1") * 400, lit("-"), col("b1") * 400 + 399).as("len_range"),
@@ -431,9 +430,8 @@ object Privacy {
       .select(col("lang"), expr("n_chars div 100").as("b0"), col("source"))
     // cells pinned (r18 batch 4): the O(grid) cell counts feed the class
     // totals AND the distance join — unpinned, two documents scans + aggs
-    val cells = docs.groupBy(col("lang"), col("b0"), col("source"))
-      .agg(count(lit(1)).as("a"))
-      .localCheckpoint(true)
+    val cells = Pins(docs.groupBy(col("lang"), col("b0"), col("source"))
+      .agg(count(lit(1)).as("a")))
     val cls = cells.groupBy(col("lang"), col("b0")).agg(sum(col("a")).as("n"))
     val glob = docs.groupBy(col("source")).agg(count(lit(1)).as("b"))
     val tot = glob.agg(sum(col("b")).as("nn"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Relational operator battery — one query per SURVEY.md §2 operator, each
@@ -297,7 +298,7 @@ object Relational {
     * fresh expression ids, ReuseExchange cannot match — the executed
     * plan holds TWO orders shuffle+aggs and FOUR orders scans. That
     * duplication is deliberately KEPT here: materializing c once
-    * (`.localCheckpoint()` after the agg) was A/B-measured sf10
+    * (a `Pins` checkpoint after the agg) was A/B-measured sf10
     * 9.81→10.16 s (wash — the duplicate branches overlap on idle cores)
     * and sf0.1 ~0.4→1.3 s (eager-job overhead dominates at bench
     * scale), so dedup only costs local wall. On a shared 100 TB cluster
@@ -1536,14 +1537,13 @@ object Relational {
     // and the final filter, and unpinned, Catalyst replicated the
     // lineitem scan + semi-join + aggregation into each branch (measured
     // plan: 2 fact scans). The checkpoint is |parts|-bounded.
-    val value = tbl(s, d, "lineitem")
+    val value = Pins(tbl(s, d, "lineitem")
       .select($"l_partkey", $"l_suppkey", $"l_extendedprice", $"l_discount")
       .join(broadcast(elig), $"l_suppkey" === $"s_suppkey", "left_semi")
       .groupBy($"l_partkey")
       .agg(sum(($"l_extendedprice".cast("decimal(18,2)") *
             (lit(1).cast("decimal(18,2)") - $"l_discount".cast("decimal(18,2)")))
-          .cast("decimal(30,4)")).as("value"))
-      .localCheckpoint(true)
+          .cast("decimal(30,4)")).as("value")))
     val total = value.agg(sum($"value").as("total"))
     value.crossJoin(broadcast(total))
       .where($"value" * 1000 > $"total")
@@ -1685,19 +1685,18 @@ object Relational {
       .join(broadcast(tbl(s, d, "nation").select($"n_nationkey", $"n_name", $"n_regionkey")
         .where($"n_regionkey" === 3)), $"s_nationkey" === $"n_nationkey")
       .select($"s_suppkey", $"s_name", $"s_acctbal", $"n_name")
-    val offers = tbl(s, d, "lineitem")
+    // pinned (r18 batch 3): offers feeds the per-part min AND the
+    // equality rejoin — unpinned, the fact scan + filtered-part join +
+    // aggregation replicated into both branches; the table is bounded
+    // by (filtered parts × their suppliers)
+    val offers = Pins(tbl(s, d, "lineitem")
       .select($"l_partkey", $"l_suppkey", $"l_extendedprice")
       .join(broadcast(tbl(s, d, "part")
           .where($"p_size".between(10, 20) && $"p_type" === "LARGE")
           .select($"p_partkey")), $"l_partkey" === $"p_partkey")
       .join(broadcast(elig.select($"s_suppkey")), $"l_suppkey" === $"s_suppkey", "left_semi")
       .groupBy($"l_partkey", $"l_suppkey")
-      .agg(min($"l_extendedprice".cast("decimal(18,2)")).as("moff"))
-      // pinned (r18 batch 3): offers feeds the per-part min AND the
-      // equality rejoin — unpinned, the fact scan + filtered-part join +
-      // aggregation replicated into both branches; the table is bounded
-      // by (filtered parts × their suppliers)
-      .localCheckpoint(true)
+      .agg(min($"l_extendedprice".cast("decimal(18,2)")).as("moff")))
     val mins = offers.groupBy($"l_partkey".as("pk")).agg(min($"moff").as("mn"))
     offers.join(mins, $"l_partkey" === $"pk" && $"moff" === $"mn")
       .join(broadcast(elig), $"l_suppkey" === $"s_suppkey")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Full-text retrieval primitives over the `documents` corpus: a sharded
@@ -99,12 +100,11 @@ object Retrieval {
     // doc-stats artifact of a production index (one narrow row per doc).
     val qterms = Seq("join", "hash", "scan")
     val tk = toks(s, d)
-    val perDoc = tk.groupBy($"doc_id").agg(
+    val perDoc = Pins(tk.groupBy($"doc_id").agg(
         count(lit(1)).as("dl"),
         count(when($"tok" === qterms(0), 1)).as("tf0"),
         count(when($"tok" === qterms(1), 1)).as("tf1"),
-        count(when($"tok" === qterms(2), 1)).as("tf2"))
-      .localCheckpoint(true)
+        count(when($"tok" === qterms(2), 1)).as("tf2")))
     val stats = perDoc.agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
     val tf = perDoc.select($"doc_id", $"dl",
         expr(s"stack(3, '${qterms(0)}', tf0, '${qterms(1)}', tf1, " +
@@ -434,18 +434,16 @@ object Retrieval {
     // yet tf fans into n_docs/df/w and w into norms/probes/dots, so the
     // unpinned plan replicated the explode+count subtree ~6× (measured:
     // 72 Exchanges / 24 scans). Two eager checkpoints collapse it.
-    val tf = tbl(s, d, "documents")
+    val tf = Pins(tbl(s, d, "documents")
       .where($"doc_id" < 300)
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf")))
     val nDocs = tf.select(countDistinct($"doc_id").as("n_docs"))
     val dfT = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
-    val w = tf.join(broadcast(dfT), Seq("tok")).crossJoin(broadcast(nDocs))
+    val w = Pins(tf.join(broadcast(dfT), Seq("tok")).crossJoin(broadcast(nDocs))
       .select($"doc_id", $"tok",
         round($"tf" * (log(($"n_docs" + 1).cast("double") / ($"df" + 1)) + 1), 6)
-          .as("w"))
-      .localCheckpoint(true)
+          .as("w")))
     val norms = w.groupBy($"doc_id")
       .agg(round(sqrt(sum($"w" * $"w")), 6).as("norm"))
     val probes = w.where($"doc_id" < 3)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftbridge.CheckpointBridge
+import graft.Pins
 
 /** The round loop of the single-frame iterative operators.
   *
@@ -15,7 +16,8 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   * nothing reads it again), so its blocks go at once instead of piling up
   * in executor storage until the ContextCleaner runs. The returned frame
   * is the last checkpoint, the only block set a loop leaves behind; the
-  * caller's result reads it.
+  * caller's result reads it, and the caller's [[graft.Pins.scope]] frees
+  * it.
   */
 private[operators] object Rounds {
 
@@ -25,12 +27,12 @@ private[operators] object Rounds {
     */
   def fixed(init: DataFrame, rounds: Int, every: Int = 1)(
       step: DataFrame => DataFrame): DataFrame = {
-    var kept = init.localCheckpoint()
+    var kept = Pins(init)
     var cur = kept
     for (k <- 1 to rounds) {
       cur = step(cur)
       if (k % every == 0 || k == rounds) {
-        cur = supersede(kept, cur.localCheckpoint())
+        cur = supersede(kept, Pins(cur))
         kept = cur
       }
     }
@@ -51,7 +53,7 @@ private[operators] object Rounds {
                   minRounds: Int = 0)(step: DataFrame => DataFrame): DataFrame = {
     def checkpoint(df: DataFrame): (DataFrame, Map[String, Any]) = {
       val obs = Observation()
-      val ckpt = df.observe(obs, count(lit(1)).as(Rows), signature: _*).localCheckpoint()
+      val ckpt = Pins(df.observe(obs, count(lit(1)).as(Rows), signature: _*))
       (ckpt, obs.get)
     }
     var (cur, sig) = checkpoint(init)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Deterministic sampling + profiling for corpus curation.
@@ -232,8 +233,7 @@ object Sampling {
     // pinned (r18 batch 4): the O(langs) count grid feeds the total and
     // the weight projection (which itself fans into the pw sum and the
     // final select) — unpinned, the documents scan ran up to 4×
-    val c = tbl(s, d, "documents").groupBy($"lang").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val c = Pins(tbl(s, d, "documents").groupBy($"lang").agg(count(lit(1)).as("n")))
     val t = c.agg(sum($"n").as("total"))
     val w = c.crossJoin(broadcast(t))
       .withColumn("share", $"n" / $"total")
@@ -538,13 +538,12 @@ object Sampling {
     // the plan (measured: 47 Exchanges / 16 scans for a tens-of-rows
     // table). One eager checkpoint of the O(domains) aggregate leaves
     // the rounds duplicating only trivial in-memory scans.
-    val toks = tbl(s, d, "documents").groupBy(col("source"))
+    val toks = Pins(tbl(s, d, "documents").groupBy(col("source"))
       .agg(sum(col("n_chars")).as("tokens"))
       .withColumn("weight",
         expr("CAST((instr('0123456789abcdef', substr(md5(source), 1, 1)) - 1) % 4 AS DOUBLE)")
           + 1.0)
-      .withColumn("cap", col("tokens").cast("double") * capEpochs)
-      .localCheckpoint(true)
+      .withColumn("cap", col("tokens").cast("double") * capEpochs))
     val tot = toks.agg(sum(col("tokens")).cast("double").as("budget"),
       sum(col("weight")).as("wsum"))
     var cur = toks.crossJoin(broadcast(tot))

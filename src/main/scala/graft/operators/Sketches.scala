@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Approximate-sketch operators and their correctness gates.
@@ -138,7 +139,7 @@ object Sketches {
     */
   private def cachedCms(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.memo(s, "sk_cms", d)(
-      cmsCells(corpusTokens(s, d)).localCheckpoint(true))
+      Pins(cmsCells(corpusTokens(s, d))))
 
   /** sk_cms_table — the full d×w counter table. */
   val cmsTable: Q = (s, d) =>

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Inferential statistics over the warehouse tables: Welch's t-test,
@@ -100,17 +101,15 @@ object Stats {
     // + aggregation into every branch (measured plan: 54 Exchanges /
     // 24 scans for a 35-row grid). Both tables are O(|types|·7) at any
     // corpus size, so the eager checkpoints are scale-safe by bound.
-    val seen = ev.select(col("event_type"), weekday(day).cast("long").as("dow"))
-      .groupBy(col("event_type"), col("dow")).agg(count(lit(1)).as("o"))
-      .localCheckpoint(true)
+    val seen = Pins(ev.select(col("event_type"), weekday(day).cast("long").as("dow"))
+      .groupBy(col("event_type"), col("dow")).agg(count(lit(1)).as("o")))
     // χ² sums over EVERY grid cell — a (type, dow) pair with zero observed
     // rows still contributes (0−E)²/E, so rebuild the full cross product
     // and coalesce the missing counts (a groupBy alone silently drops them).
-    val cells = seen.select(col("event_type")).distinct()
+    val cells = Pins(seen.select(col("event_type")).distinct()
       .crossJoin(seen.select(col("dow")).distinct())
       .join(seen, Seq("event_type", "dow"), "left")
-      .withColumn("o", coalesce(col("o"), lit(0L)))
-      .localCheckpoint(true)
+      .withColumn("o", coalesce(col("o"), lit(0L))))
     val rowT = cells.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
     val colT = cells.groupBy(col("dow")).agg(sum(col("o")).as("ct"))
     val tot = cells.agg(sum(col("o")).as("n"),
@@ -253,18 +252,16 @@ object Stats {
     // lifetime projection, byT feeds n0 and the final KM fold — each
     // unpinned reference re-ran the orders scan + per-customer
     // aggregation. Both tables are bounded (per-customer / per-duration).
-    val users = tbl(s, d, "orders")
+    val users = Pins(tbl(s, d, "orders")
       .select(col("o_custkey"), to_date(col("o_orderdate")).as("day"))
-      .groupBy(col("o_custkey")).agg(min(col("day")).as("fst"), max(col("day")).as("lst"))
-      .localCheckpoint(true)
+      .groupBy(col("o_custkey")).agg(min(col("day")).as("fst"), max(col("day")).as("lst")))
     val horizon = users.agg(max(col("lst")).as("maxd"))
     val lifet = users.crossJoin(broadcast(horizon))
       .select(datediff(col("lst"), col("fst")).cast("long").as("dur"),
         (datediff(col("maxd"), col("lst")) > 365).as("observed"))
-    val byT = lifet.groupBy(col("dur")).agg(
+    val byT = Pins(lifet.groupBy(col("dur")).agg(
       count(lit(1)).as("at_t"),
-      sum(when(col("observed"), 1L).otherwise(0L)).as("deaths"))
-      .localCheckpoint(true)
+      sum(when(col("observed"), 1L).otherwise(0L)).as("deaths")))
     val n0 = byT.agg(sum(col("at_t")).as("n0"))
     val w = Window.orderBy(col("dur"))
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -973,15 +970,13 @@ object Stats {
     // + count grid replicated into every downstream branch — measured
     // plan 72 Exchanges / 48 scans for a 75-row grid. Both checkpoints
     // are O(|nations|·|flags|) at any scale.
-    val seen = tbl(s, d, "lineitem").select(col("l_suppkey"), col("l_returnflag").as("rf"))
+    val seen = Pins(tbl(s, d, "lineitem").select(col("l_suppkey"), col("l_returnflag").as("rf"))
       .join(broadcast(sup), Seq("l_suppkey"))
-      .groupBy(col("nk"), col("rf")).agg(count(lit(1)).as("o"))
-      .localCheckpoint(true)
-    val cells = seen.select(col("nk")).distinct()
+      .groupBy(col("nk"), col("rf")).agg(count(lit(1)).as("o")))
+    val cells = Pins(seen.select(col("nk")).distinct()
       .crossJoin(seen.select(col("rf")).distinct())
       .join(seen, Seq("nk", "rf"), "left")
-      .withColumn("o", coalesce(col("o"), lit(0L)))
-      .localCheckpoint(true)
+      .withColumn("o", coalesce(col("o"), lit(0L))))
     val gT = cells.groupBy(col("nk")).agg(sum(col("o")).as("ng"))
     val cT = cells.groupBy(col("rf")).agg(sum(col("o")).as("oc"))
     val tot = cells.agg(sum(col("o")).as("nn"))

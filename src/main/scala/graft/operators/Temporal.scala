@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Temporal/ordered operators the reference's event-stream model implies but
@@ -920,8 +921,7 @@ object Temporal {
     // cohorts pinned (r18 batch 4): feeds the cohort-size aggregate AND
     // the per-event join — unpinned, the events scan + per-user min ran
     // twice; the table is per-user-bounded
-    val cohorts = ev.groupBy($"user_id").agg(min($"week").as("cohort"))
-      .localCheckpoint(true)
+    val cohorts = Pins(ev.groupBy($"user_id").agg(min($"week").as("cohort")))
     val sizes = cohorts.groupBy($"cohort").agg(count(lit(1)).as("cohort_users"))
     val cells = ev.join(cohorts, "user_id")
       // both dates are week-truncated Mondays, so the day gap is an exact

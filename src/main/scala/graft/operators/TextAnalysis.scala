@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Text-analysis operators for training-data pipelines: token counting,
@@ -298,11 +299,10 @@ object TextAnalysis {
     // tf pinned (r18 batch 4, the ix_mlt fix): probe-bounded
     // (doc_id < 300) term-frequency table feeds n_docs/df/scored — 3
     // unpinned copies of the explode+count subtree
-    val tf = tbl(s, d, "documents")
+    val tf = Pins(tbl(s, d, "documents")
       .where($"doc_id" < 300)
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf")))
     val nDocs = tf.select(countDistinct($"doc_id").as("n_docs"))
     val df = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
     val scored = tf.join(broadcast(df), Seq("tok")).crossJoin(broadcast(nDocs))
@@ -474,7 +474,7 @@ object TextAnalysis {
       // the gates (plans/r18/tx_clf_calib_before.txt; guide §3.3 "very
       // large plans — planning time itself becomes the bottleneck").
       // After: linear plan, 9 Exchanges.
-      if (t < ClfIters) w = w.localCheckpoint(true)
+      if (t < ClfIters) w = Pins(w)
     }
     w
   }
@@ -488,7 +488,7 @@ object TextAnalysis {
   private def trainedW(s: SparkSession, d: String,
                        feats: DataFrame, labels: DataFrame): DataFrame =
     graft.Artifacts.memo(s, "tx_clf_weights", d)(
-      clfTrain(feats, labels).localCheckpoint(true))
+      Pins(clfTrain(feats, labels)))
 
   /** Score every doc with a trained weight table. */
   def clfScoreWith(feats: DataFrame, w: DataFrame): DataFrame =
@@ -499,9 +499,9 @@ object TextAnalysis {
 
   val clfScore: Q = (s, d) => {
     val feats = graft.Artifacts.memo(s, "tx_clf_features", d)(
-      clfFeatures(tbl(s, d, "documents")).localCheckpoint(true))
+      Pins(clfFeatures(tbl(s, d, "documents"))))
     val labels = graft.Artifacts.memo(s, "tx_clf_labels", d)(
-      clfLabels(tbl(s, d, "documents")).localCheckpoint(true))
+      Pins(clfLabels(tbl(s, d, "documents"))))
     clfScoreWith(feats, trainedW(s, d, feats, labels)).orderBy(col("doc_id"))
   }
 
@@ -575,9 +575,9 @@ object TextAnalysis {
     */
   val clfAuc: Q = (s, d) => {
     val feats = graft.Artifacts.memo(s, "tx_clf_features", d)(
-      clfFeatures(tbl(s, d, "documents")).localCheckpoint(true))
+      Pins(clfFeatures(tbl(s, d, "documents"))))
     val labels = graft.Artifacts.memo(s, "tx_clf_labels", d)(
-      clfLabels(tbl(s, d, "documents")).localCheckpoint(true))
+      Pins(clfLabels(tbl(s, d, "documents"))))
     val ev = clfScoreWith(feats, trainedW(s, d, feats, labels))
       .join(labels, Seq("doc_id"))
     val w = org.apache.spark.sql.expressions.Window
@@ -624,9 +624,9 @@ object TextAnalysis {
   val clfCalib: Q = (s, d) => {
     val docs = tbl(s, d, "documents")
     val feats = graft.Artifacts.memo(s, "tx_clf_features", d)(
-      clfFeatures(docs).localCheckpoint(true))
+      Pins(clfFeatures(docs)))
     val labels = graft.Artifacts.memo(s, "tx_clf_labels", d)(
-      clfLabels(docs).localCheckpoint(true))
+      Pins(clfLabels(docs)))
     val allLab = docs
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"),
@@ -720,7 +720,7 @@ object TextAnalysis {
   def bpeTrain(docs: DataFrame, n: Int = BpeN): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words0 = bpeWords0(docs).localCheckpoint(true)
+    val words0 = Pins(bpeWords0(docs))
     var words = words0
     var lastCkpt = words0
     val merges = Seq.newBuilder[(Long, String, String)]
@@ -732,7 +732,7 @@ object TextAnalysis {
       // so the materialization itself is cheap; the superseded round's
       // blocks are freed immediately (CC-loop hygiene).
       if (t % 8 == 0) {
-        val ck = words.localCheckpoint(true)
+        val ck = Pins(words)
         if (lastCkpt ne words0)
           org.apache.spark.sql.graftbridge.CheckpointBridge.freeCheckpoint(lastCkpt)
         lastCkpt = ck
@@ -1070,9 +1070,8 @@ object TextAnalysis {
 
   private def bigramCounts(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.memo(s, "tx_lm_model", d)(
-      bigramsOf(tbl(s, d, "documents"))
-        .groupBy(col("bg")).agg(count(lit(1)).as("c2"))
-        .localCheckpoint(true))
+      Pins(bigramsOf(tbl(s, d, "documents"))
+        .groupBy(col("bg")).agg(count(lit(1)).as("c2"))))
 
   /** Per-doc bigram-LM scores WITHOUT the gate's output sort — the table
     * [[withPpBucket]] consumes. Session-cached as materialized blocks
@@ -1088,7 +1087,7 @@ object TextAnalysis {
     */
   private def lmScored(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.memo(s, "tx_lm_scored", d)(
-      lmScoreOf(s, d).localCheckpoint(true))
+      Pins(lmScoreOf(s, d)))
 
   private def lmScoreOf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1934,10 +1933,9 @@ object TextAnalysis {
     val und = dirEdges.select($"w1".as("x"), $"w2".as("y"), $"c2".as("c"))
       .unionByName(dirEdges.select($"w2".as("x"), $"w1".as("y"), $"c2".as("c")))
       .groupBy($"x", $"y").agg(sum($"c").as("w"))
-    val wdeg = und.groupBy($"x").agg(sum($"w").as("wd")).localCheckpoint()
-    val edges = und.join(wdeg, Seq("x"))
-      .select($"x", $"y", ($"w".cast("double") / $"wd").as("frac"))
-      .localCheckpoint()
+    val wdeg = Pins(und.groupBy($"x").agg(sum($"w").as("wd")))
+    val edges = Pins(und.join(wdeg, Seq("x"))
+      .select($"x", $"y", ($"w".cast("double") / $"wd").as("frac")))
     val n = wdeg.count()
     // Checkpoint every SECOND round, not every round: each eager
     // localCheckpoint is a whole job (~0.3 s scheduling floor per round,

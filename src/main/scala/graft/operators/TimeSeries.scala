@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins
 import graft.Tables.{t => tbl}
 
 /** Time-series analytics over the events stream: smoothing (EWMA),
@@ -46,10 +47,9 @@ object TimeSeries {
           to_date(timestamp_micros(expr("ts div 1000")))
         case _ => to_date(col("ts"))
       }
-      ev.select(day.as("day"))
+      Pins(ev.select(day.as("day"))
         .groupBy(col("day")).agg(count(lit(1)).as("n"))
-        .withColumn("t", row_number().over(Window.orderBy(col("day"))) - 1)
-        .localCheckpoint(true)
+        .withColumn("t", row_number().over(Window.orderBy(col("day"))) - 1))
     }
 
   private val dailyIdxSql =
@@ -437,10 +437,9 @@ object TimeSeries {
     */
   val tsAr2: Q = (s, d) => {
     val w = Window.orderBy(col("day"))
-    val lagged = dailyIdx(s, d)
+    val lagged = Pins(dailyIdx(s, d)
       .withColumn("y1", lag(col("n"), 1).over(w))
-      .withColumn("y2", lag(col("n"), 2).over(w))
-      .localCheckpoint()
+      .withColumn("y2", lag(col("n"), 2).over(w)))
     val mom = lagged
       .select(expr("stack(2, 1, n, y1, 2, n, y2) AS (lag, x, y)"))
       .where(col("y").isNotNull)

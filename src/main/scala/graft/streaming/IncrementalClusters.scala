@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph}
+import graft.Pins
 
 /** Streaming near-duplicate clustering: dedup → MinHash/LSH → incremental
   * connected components composed into ONE foreachBatch fold, so a live
@@ -70,14 +71,14 @@ object IncrementalClusters {
       .dropDuplicates("doc_id")
       .join(state.sigs.select(col("doc_id")), Seq("doc_id"), "left_anti")
     // 2. sign once; reuse for both edge joins below
-    val batchSigs = Dedup.signatureTable(fresh, k).localCheckpoint()
+    val batchSigs = Pins(Dedup.signatureTable(fresh, k))
     // 3. LSH candidate edges: batch↔corpus + batch-internal
     val crossEdges = Dedup.bandedPairs(batchSigs, state.sigs, k, bands)
     val innerEdges = Dedup.bandedPairs(batchSigs, batchSigs, k, bands)
       .where(col("a") < col("b"))
     // 4. incremental CC fold — O(touched), never a corpus recompute
-    val labels = Graph.incrementalComponents(
-      state.labels, crossEdges.unionByName(innerEdges)).localCheckpoint()
+    val labels = Pins(Graph.incrementalComponents(
+      state.labels, crossEdges.unionByName(innerEdges)))
     (batchSigs, labels)
   }
 
@@ -85,7 +86,7 @@ object IncrementalClusters {
   def foldBatch(state: CorpusState, batch: DataFrame,
                 k: Int = 32, bands: Int = 8): CorpusState = {
     val (batchSigs, labels) = foldCore(state, batch, k, bands)
-    val sigs = state.sigs.unionByName(batchSigs).localCheckpoint()
+    val sigs = Pins(state.sigs.unionByName(batchSigs))
     org.apache.spark.sql.graftbridge.CheckpointBridge.freeCheckpoint(state.sigs)
     org.apache.spark.sql.graftbridge.CheckpointBridge.freeCheckpoint(state.labels)
     CorpusState(sigs, labels)

@@ -16,13 +16,13 @@ object ColumnBridge {
 
 /** Bridge to the RDD behind a (local)checkpointed Dataset. A checkpointed
   * Dataset's logical plan is a `LogicalRDD` wrapping the materialized
-  * blocks; iterative algorithms (Graph.connectedComponents*) need the
-  * handle to unpersist superseded rounds — Dataset itself exposes no way
-  * to free a checkpoint. Returns None for non-checkpoint plans, so a
-  * caller can never unpersist an RDD it doesn't own.
+  * blocks; Dataset itself exposes no way to free a checkpoint, so
+  * [[graft.Pins]] and the iterative loops free through this object.
+  * Returns None for non-checkpoint plans, so a caller can never unpersist
+  * an RDD it doesn't own.
   */
 object CheckpointBridge {
-  import org.apache.spark.rdd.RDD
+  import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
   import org.apache.spark.sql.Dataset
   import org.apache.spark.sql.execution.LogicalRDD
 
@@ -37,19 +37,29 @@ object CheckpointBridge {
     * localCheckpoint has no lineage to recompute from.
     */
   def freeCheckpoint(ds: Dataset[_]): Unit =
-    checkpointedRdd(ds).foreach(
-      org.apache.spark.rdd.GraftRddBridge.release(_, blocking = false))
+    checkpointedRdd(ds).foreach(release(_, blocking = false))
 
-  /** EVERY locally-checkpointed RDD a Dataset's plan reads — not just a
-    * root LogicalRDD: cached artifacts are typically a Project/Filter
-    * over their checkpoint (or join several), and [[graft.BlockJanitor]]
-    * must protect each underlying block set, not only root-shaped plans.
-    * Subqueries included for completeness (scalar-subquery pins).
+  /** What `RDD.unpersist` does, without its warning that a locally
+    * checkpointed RDD cannot be recomputed: the engine frees one only once
+    * nothing reads it again. Freeing an RDD twice, or one of a stopped
+    * context, is a no-op.
+    */
+  def release(r: RDD[_], blocking: Boolean): Unit =
+    if (!r.sparkContext.isStopped) r.sparkContext.unpersistRDD(r.id, blocking)
+
+  /** Whether `r` is a localCheckpoint's block set, as opposed to a
+    * Dataset.persist'ed RDD.
+    */
+  def isLocallyCheckpointed(r: RDD[_]): Boolean =
+    r.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
+
+  /** EVERY locally-checkpointed RDD a Dataset's plan reads, not just a
+    * root LogicalRDD: a memoized artifact is typically a Project/Filter
+    * over its checkpoint (or joins several), and [[graft.Artifacts.memo]]
+    * keeps each of them. Subqueries included (scalar-subquery pins).
     */
   def checkpointedRdds(ds: Dataset[_]): Seq[RDD[_]] =
     ds.queryExecution.analyzed.collectWithSubqueries {
-      case l: LogicalRDD
-          if org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed(l.rdd) =>
-        l.rdd
+      case l: LogicalRDD if isLocallyCheckpointed(l.rdd) => l.rdd
     }
 }

@@ -3,19 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Session artifacts ([[Artifacts]]) and the block sweep that must leave
-  * them alone ([[BlockJanitor]]).
+/** Session artifacts ([[Artifacts]]) and the ownership of pins
+  * ([[Pins]]).
   *
-  * BlockJanitor: iterative finals and fan-out pins RETURN eagerly
-  * checkpointed frames their operators cannot free; Bench sweeps them
-  * between sequential runs. The contract pinned here:
-  *  1. sweep unpersists an unprotected localCheckpoint's blocks;
-  *  2. memoized artifacts are protected — a sweep must never free them,
-  *     INCLUDING when the memoized frame is a projection over its
-  *     checkpoint (the common artifact shape) rather than a root
-  *     LogicalRDD;
-  *  3. a swept gate rebuilt afterwards computes the same result (the
-  *     sweep can only ever free storage, never change semantics).
+  * Pins: iterative finals and fan-out tables RETURN eagerly checkpointed
+  * frames their operators cannot free; the consumer's scope frees them.
+  * The contract pinned here:
+  *  1. a scope frees the pins made under it and no others;
+  *  2. a memoized artifact keeps the pins its value reads after the
+  *     enclosing scope closes, INCLUDING when the memoized frame is a
+  *     projection over its checkpoint (the common artifact shape) rather
+  *     than a root LogicalRDD;
+  *  3. a gate rebuilt after a scope computes the same result (a scope
+  *     can only ever free storage, never change semantics);
+  *  4. concurrent scopes free only their own thread's pins.
   *
   * Artifacts: one build per key under concurrent callers, nested builds,
   * retry after a failed build, the bucket spec as part of the key,
@@ -28,50 +29,84 @@ class ArtifactsSpec extends AnyFunSuite {
   private def rddOf(ds: org.apache.spark.sql.Dataset[_]) =
     org.apache.spark.sql.graftbridge.CheckpointBridge.checkpointedRdd(ds)
 
+  private def registered(ds: org.apache.spark.sql.Dataset[_]): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(rddOf(ds).get.id)
+
   private def uniq(family: String): String = s"${family}_${System.nanoTime()}"
 
-  test("sweep frees an unprotected localCheckpoint; protect exempts") {
-    val leaked = (1 to 100).toDF("x").localCheckpoint()
-    val kept = (1 to 100).toDF("y").localCheckpoint()
-    BlockJanitor.protect(kept)
-    val leakedRdd = rddOf(leaked).get
-    val keptRdd = rddOf(kept).get
-    assert(spark.sparkContext.getPersistentRDDs.contains(leakedRdd.id))
-    BlockJanitor.sweep(spark)
-    // unpersist(blocking=false) removes the persistentRdds entry
-    // synchronously; only block deletion is async
-    assert(!spark.sparkContext.getPersistentRDDs.contains(leakedRdd.id),
-      "sweep left an unprotected localCheckpoint registered")
-    assert(spark.sparkContext.getPersistentRDDs.contains(keptRdd.id),
-      "sweep freed a protected artifact")
-    assert(kept.count() == 100)
-    rddOf(kept).foreach(_.unpersist(blocking = false))
+  test("a scope frees a pin made under it and leaves one made outside it") {
+    val outside = Pins((1 to 100).toDF("y"))
+    val inside = Pins.scope {
+      val pin = Pins((1 to 100).toDF("x"))
+      assert(pin.count() == 100)
+      pin
+    }
+    assert(!registered(inside), "the scope left its pin registered")
+    assert(registered(outside), "the scope freed a pin it does not own")
+    assert(outside.count() == 100)
+    Pins.release(rddOf(outside).toSeq)
   }
 
-  test("protect covers checkpoints UNDER a derived plan, not just roots") {
+  test("a memo keeps the checkpoint under its derived frame after the enclosing scope closes") {
     // artifact shape: Project ∘ Filter over the checkpoint — exactly how
     // lshLabels/dailyIdx hand out their memoized frames
-    val art = Artifacts.memo(spark, "spec_protect", "k") {
-      (1 to 50).toDF("x").localCheckpoint()
-        .where(col("x") > 10).select((col("x") * 2).as("y"))
+    val fam = uniq("spec_keep")
+    val (art, dropped) = Pins.scope {
+      var scratch: org.apache.spark.sql.DataFrame = null
+      val art = Artifacts.memo(spark, fam, "k") {
+        scratch = Pins((1 to 5).toDF("z")) // made in the build, not read by its value
+        Pins((1 to 50).toDF("x"))
+          .where(col("x") > 10).select((col("x") * 2).as("y"))
+      }
+      (art, scratch)
     }
-    BlockJanitor.sweep(spark)
-    assert(art.count() == 40,
-      "sweep freed the checkpoint under a memoized frame")
+    assert(art.count() == 40, "the scope freed the checkpoint under a memoized frame")
+    assert(!registered(dropped), "a pin the memo's value does not read outlived its build")
   }
 
-  test("a swept gate rebuilt afterwards is unchanged (gr_pagerank)") {
+  test("gr_pagerank rebuilt after a scope is unchanged") {
     val sf = "/root/testdata/sf0.001"
     val fn = SparkEntry.queries("gr_pagerank")
-    val before = fn(spark, sf).collect().toSeq
-    BlockJanitor.sweep(spark)
-    val after = fn(spark, sf).collect().toSeq
+    val before = Pins.scope(fn(spark, sf).collect().toSeq)
+    val after = Pins.scope(fn(spark, sf).collect().toSeq)
     assert(before == after)
-    BlockJanitor.sweep(spark)
+  }
+
+  test("8 threads, each in its own scope, read intact results after a sibling's scope closed") {
+    val sf = SparkTestSession.smokeSf
+    val gates = Seq("gr_pagerank", "gr_kcore", "gr_triangles", "gr_hits", "gr_closeness",
+      "tx_textrank", "st_chisq", "st_km")
+    val expected = gates.map(g => Pins.scope(SparkEntry.queries(g)(spark, sf).collect().toSet))
+    val built = new java.util.concurrent.CountDownLatch(gates.size)
+    val firstClosed = new java.util.concurrent.CountDownLatch(gates.size / 2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(gates.size)
+    try {
+      val futures = gates.zipWithIndex.map { case (g, i) =>
+        pool.submit(new java.util.concurrent.Callable[Set[org.apache.spark.sql.Row]] {
+          def call(): Set[org.apache.spark.sql.Row] = {
+            val rows = Pins.scope {
+              val df = SparkEntry.queries(g)(spark, sf)
+              val own = org.apache.spark.sql.graftbridge.CheckpointBridge.checkpointedRdds(df)
+                .map(_.id).toSet -- Artifacts.heldPins(spark)
+              assert(own.nonEmpty, s"$g reads no pin of its own")
+              built.countDown()
+              built.await()
+              // the second half reads only after the first half's scopes closed
+              if (i >= gates.size / 2) firstClosed.await()
+              df.collect().toSet
+            }
+            if (i < gates.size / 2) firstClosed.countDown()
+            rows
+          }
+        })
+      }
+      val got = futures.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      gates.indices.foreach(i => assert(got(i) == expected(i), s"${gates(i)} changed under a sibling's scope"))
+    } finally pool.shutdownNow()
   }
 
   test("artifact ledger records memo build seconds by family") {
-    Artifacts.memo(spark, "spec_ledger", "k")((1 to 10).toDF("x").localCheckpoint())
+    Artifacts.memo(spark, "spec_ledger", "k")(Pins((1 to 10).toDF("x")))
     val snap = ArtifactLedger.snapshot
     assert(snap.contains("spec_ledger") && snap("spec_ledger") >= 0.0)
   }
@@ -155,8 +190,13 @@ class ArtifactsSpec extends AnyFunSuite {
   test("a build that throws is retried on the next call") {
     val fam = uniq("spec_retry")
     var calls = 0
-    def build: Long = { calls += 1; if (calls == 1) sys.error("transient") else 7L }
+    var pin: org.apache.spark.sql.DataFrame = null
+    def build: Long = {
+      calls += 1
+      if (calls == 1) { pin = Pins((1 to 10).toDF("x")); sys.error("transient") } else 7L
+    }
     intercept[RuntimeException](Artifacts.memo(spark, fam, "k")(build))
+    assert(!registered(pin), "the failed build left its pin registered")
     assert(Artifacts.memo(spark, fam, "k")(build) == 7L)
     assert(Artifacts.memo(spark, fam, "k")(build) == 7L)
     assert(calls == 2, s"$calls builds: a failed build must not be cached")

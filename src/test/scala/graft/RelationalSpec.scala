@@ -19,9 +19,18 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("every declared query runs non-empty on the smoke scale factor") {
+    import org.apache.spark.sql.graftbridge.CheckpointBridge
+    val sc = spark.sparkContext
+    def pins: Set[Int] = sc.getPersistentRDDs.collect {
+      case (id, rdd) if CheckpointBridge.isLocallyCheckpointed(rdd) => id
+    }.toSet
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      val before = pins
+      val n = Pins.scope(fn(spark, sf).count())
       assert(n > 0, s"query $name returned 0 rows at sf0.001")
+      // a scope frees every pin its gate made, except those a memo keeps
+      val left = pins -- before -- Artifacts.heldPins(spark)
+      assert(left.isEmpty, s"query $name left ${left.size} pins registered after its scope")
     }
   }
 

@@ -832,7 +832,7 @@ class TemporalGraphSpec extends AnyFunSuite {
       "kCore" -> (() => Graph.kCore(edges)),
       "tx_textrank" -> (() => SparkEntry.queries("tx_textrank")(spark, SparkTestSession.smokeSf)))
     def release(df: org.apache.spark.sql.DataFrame): Unit =
-      CheckpointBridge.checkpointedRdds(df).foreach(_.unpersist(blocking = false))
+      CheckpointBridge.checkpointedRdds(df).foreach(CheckpointBridge.release(_, blocking = false))
     calls.foreach { case (name, call) =>
       val warm = call()
       warm.collect()
