@@ -47,7 +47,7 @@ class ArtifactsSpec extends AnyFunSuite {
     Pins.release(rddOf(outside).toSeq)
   }
 
-  test("a memo keeps the checkpoint under its derived frame after the enclosing scope closes") {
+  test("a memo keeps the checkpoint under its derived frame after its scope closes") {
     // artifact shape: Project ∘ Filter over the checkpoint — exactly how
     // lshLabels/dailyIdx hand out their memoized frames
     val fam = uniq("spec_keep")
