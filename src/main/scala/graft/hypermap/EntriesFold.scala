@@ -2,8 +2,9 @@ package graft.hypermap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
-import graft.functions.evm
+import graft.functions.{EvmCodec, evm}
 
 /** §2.4: the sequential per-event Mongo fold
   * (/root/reference/src/lib/services/mongodb.ts:113-270) re-expressed as a
@@ -38,7 +39,9 @@ import graft.functions.evm
   *
   * Scale: every aggregation/join here keys on namehash (high-cardinality) —
   * one shuffle per stream, merged by a final multi-way join on the same key
-  * so Catalyst reuses the exchange. No driver-side iteration.
+  * so Catalyst reuses the exchange. No driver-side iteration in `fold`;
+  * the live tail's small collected histories are folded on the driver
+  * instead, by the same streams translated to plain Scala ([[foldLocal]]).
   */
 object EntriesFold {
 
@@ -176,14 +179,14 @@ object EntriesFold {
     * batch references it); one job scans `allEvents` with a hash-set
     * filter on the keys and collects their history, holding at most
     * 2 × [[HistoryCap]] + 1 rows on the driver. At or under the cap the
-    * fold runs over that copy in ≤ 2 jobs, ≤ 5 for the call, and
-    * `refreshed` is a local relation of its rows in the caller's session:
-    * driver memory O(batch keys + touched history), no blocks held. Over
-    * it (a spread batch, e.g. a restart after an outage) `refreshed` is
-    * the same fold over the filtered scan, lazy and distributed: the call
-    * runs ≤ 3 jobs and the caller's action runs the fold. A batch
-    * touching most keys refolds most of the history either way: backfill
-    * is `EtlJob.run`.
+    * call runs ≤ 3 jobs and plans no fold: the collected rows are folded
+    * on the driver ([[foldLocal]]) and `refreshed` is a local relation of
+    * the result in the caller's session, with `fold`'s schema: driver
+    * memory O(batch keys + touched history), no blocks held. Over it (a
+    * spread batch, e.g. a restart after an outage) `refreshed` is `fold`
+    * over the filtered scan, lazy and distributed: the call runs ≤ 3 jobs
+    * and the caller's action runs the fold. A batch touching most keys
+    * refolds most of the history either way: backfill is `EtlJob.run`.
     */
   def incrementalDelta(allEvents: DataFrame, previousEntries: DataFrame,
                        newBatch: DataFrame,
@@ -192,12 +195,9 @@ object EntriesFold {
       HistoryCap)
 
   /** Bounds driver memory, not time: collected history costs ~0.95 KB of
-    * heap a row before the local relation's copy, so the cap is ~95 MB,
-    * about 100× a tail batch's history. The collected fold was the faster
-    * route at every size measured (4-core host, 200k-event history: 2.2–2.6
-    * against 3.7–4.4 s at 4.4k history rows, 6.4 against 7.6–9.3 s at 24k,
-    * 23–25 against 64–83 s at 81k), so a lower cap gains nothing; how much
-    * driver memory the distributed route saves past it is not measured.
+    * heap a row, so the cap is ~95 MB, about 100× a tail batch's history.
+    * How much driver memory the distributed route saves past it is not
+    * measured.
     */
   private val HistoryCap = 100000
 
@@ -231,31 +231,99 @@ object EntriesFold {
     spark.sparkContext.runJob(history.rdd.mapPartitions(_.take(historyCap + 1)),
       (it: Iterator[Row]) => it.toArray,
       (_: Int, part: Array[Row]) => if (collected.length <= historyCap) collected ++= part)
-    def refresh(relevant: DataFrame) =
-      fold(relevant, normalizeTransferIds).where($"namehash".isin(affectedKeys: _*))
-    val refreshed = if (collected.length > historyCap) refresh(history) else {
-      val local = refresh(smallQuerySession(spark).createDataFrame(collected.asJava,
-        allEvents.schema))
-      spark.createDataFrame(local.collect().toSeq.asJava, local.schema)
-    }
+    val refreshed =
+      if (collected.length > historyCap)
+        fold(history, normalizeTransferIds).where($"namehash".isin(affectedKeys: _*))
+      else spark.createDataFrame(foldLocal(collected.toSeq, allEvents.schema,
+        affectedKeys.toSet, normalizeTransferIds).asJava, FoldSchema)
     (affectedKeys.toDF("k"), refreshed)
   }
 
-  /** One session per parent for folds over driver-local rows, its conf
-    * fixed here: without AQE, with one shuffle partition and no size-based
-    * broadcasts, the fold is one job plus one for the hinted broadcast of
-    * ROOT's creation, instead of a job per exchange. Codegen stays on.
+  /** The schema `fold` returns (HypermapSpec checks the two agree). */
+  private val FoldSchema = StructType(Seq(
+    StructField("namehash", StringType), StructField("label", StringType),
+    StructField("parentHash", StringType), StructField("fullName", StringType),
+    StructField("owner", StringType), StructField("gene", StringType),
+    StructField("notes", MapType(StringType, StringType), nullable = false),
+    StructField("facts", MapType(StringType, StringType), nullable = false),
+    StructField("children", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("creationBlock", LongType),
+    StructField("lastUpdateBlock", LongType, nullable = false)))
+
+  /** [[fold]] over driver-local event rows, limited to `keys`, stream by
+    * stream (E1–E8) and with its null rules: a row whose join or group key
+    * is null joins nothing, `children` drops null childhashes, and an
+    * existence check is strict, in `(blockNumber, logIndex)` order. Exact
+    * for a key when `events` holds every event referencing it, which is
+    * what the history collect of [[incrementalDeltaImpl]] gathers.
     */
-  private val smallQuerySessions =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SparkSession])
-  private def smallQuerySession(parent: SparkSession): SparkSession =
-    smallQuerySessions.computeIfAbsent(parent, { p =>
-      val s = p.newSession()
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions", "1")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s
-    })
+  private def foldLocal(events: Seq[Row], schema: StructType, keys: Set[String],
+                        normalizeTransferIds: Boolean): Seq[Row] = {
+    import scala.math.Ordering.Implicits._
+    val Seq(tpe, bn, li, parent, child, label, data, entry, gene, to, id) =
+      Seq("eventType", "blockNumber", "logIndex", "parenthash", "childhash", "label",
+        "data", "entry", "gene", "to", "id").map(schema.fieldIndex)
+    def ord(r: Row) = (r.getLong(bn), r.getInt(li))
+    def key(r: Row, i: Int) = Option(r.getString(i)).filter(keys)
+    val byType = events.groupBy(r => r.getString(tpe)).withDefaultValue(Seq.empty)
+    val mints = byType("Mint")
+
+    // ---- E1 + E3: creation stream (first writer wins, placeholder-first) --
+    // namehash -> (label, parentHash, creation order, prio)
+    val creations = (mints.flatMap(m => key(m, child).map(k =>
+        k -> (m.getString(label), m.getString(parent), ord(m), 1))) ++
+      mints.filter(_.getString(parent) != ROOT).flatMap(m => key(m, parent).map(k =>
+        k -> ("[unknown]", ROOT, ord(m), 0))))
+      .groupBy(_._1).map { case (k, cs) => k -> cs.map(_._2).minBy(c => (c._3, c._4)) }
+    // the entry exists, in event order, before `r`
+    def existsBefore(r: Row, k: String) = creations.get(k).exists(c => ord(r) > c._3)
+
+    // ---- E2: children sets (ROOT's only once ROOT exists) ---------------
+    val children = mints.flatMap(m => key(m, parent).map(_ -> m))
+      .filter { case (k, m) => k != ROOT || existsBefore(m, k) }
+      .groupBy(_._1).map { case (k, kms) =>
+        val ms = kms.map(_._2)
+        k -> (ms.flatMap(m => Option(m.getString(child))).distinct, ms.map(_.getLong(bn)).max)
+      }
+
+    // ---- E4-E7: existence-checked, last writer wins ---------------------
+    // key -> (applied rows, bump)
+    def lww(rs: Seq[(String, Row)]) = rs.filter { case (k, r) => existsBefore(r, k) }
+      .groupBy(_._1).map { case (k, krs) =>
+        val applied = krs.map(_._2)
+        k -> (applied, applied.map(_.getLong(bn)).max)
+      }
+    def lwwMap(evType: String) = lww(byType(evType).flatMap(r => key(r, parent).map(_ -> r)))
+      .map { case (k, (rs, bump)) =>
+        k -> (rs.groupBy(_.getString(label)).map { case (l, ls) =>
+          l -> ls.maxBy(ord).getString(data) }, bump)
+      }
+    def lastOf(rs: Seq[(String, Row)], value: Int) = lww(rs)
+      .map { case (k, (applied, bump)) => k -> (applied.maxBy(ord).getString(value), bump) }
+    val facts = lwwMap("Fact")
+    val notes = lwwMap("Note")
+    val genes = lastOf(byType("Gene").flatMap(r => key(r, entry).map(_ -> r)), gene)
+    val owners = lastOf(byType("Transfer").flatMap { r =>
+      val tkey = if (normalizeTransferIds) EvmCodec.uintDecToBytes32(r.getString(id))
+        else r.getString(id)
+      Option(tkey).filter(keys).map(_ -> r)
+    }, to)
+
+    // ---- assemble + E8 --------------------------------------------------
+    val mintBumps = mints.flatMap(m => key(m, child).map(_ -> m.getLong(bn)))
+      .groupBy(_._1).map { case (k, bs) => k -> bs.map(_._2).max }
+    creations.toSeq.map { case (k, (lbl, parentHash, (block, _), _)) =>
+      val bumps = Seq(children.get(k).map(_._2), facts.get(k).map(_._2),
+        notes.get(k).map(_._2), genes.get(k).map(_._2), owners.get(k).map(_._2),
+        mintBumps.get(k)).flatten
+      Row(k, lbl, parentHash, null, owners.get(k).map(_._1).orNull,
+        genes.get(k).map(_._1).orNull,
+        notes.get(k).fold(Map.empty[String, String])(_._1),
+        facts.get(k).fold(Map.empty[String, String])(_._1),
+        children.get(k).fold(Seq.empty[String])(_._1),
+        block, (block +: bumps).max)
+    }
+  }
 
   /** E10 extension (off by default in parity mode): resolve fullName by
     * iterating parent links label.parent.grandparent…, bounded depth.

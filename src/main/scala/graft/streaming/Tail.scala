@@ -85,9 +85,10 @@ object Tail {
     *   - writes: the novel events and one new generation holding only
     *     the touched buckets (plus, every `maxGens` batches, a compaction
     *     of the whole table);
-    *   - jobs: a fixed number for the insert, the key and history collects,
-    *     the fold over the collected history (≤ 2) and the upsert; none
-    *     per live generation and none to list or infer a schema
+    *   - jobs: a fixed number for the insert, the key and history
+    *     collects and the upsert; none for the fold over the collected
+    *     history, which runs on the driver without a Spark plan, none per
+    *     live generation and none to list or infer a schema
     *     (TailJobBudgetSpec pins the count);
     *   - driver memory: O(history of TOUCHED keys) up to
     *     `EntriesFold.incrementalDelta`'s cap, past which the fold runs

@@ -1,9 +1,12 @@
 package graft
 
-import graft.functions.EvmCodec
+import graft.functions.{EvmCodec, evm}
 import graft.hypermap.{Decode, EntriesFold, Fixtures, Schemas}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** Golden-output + semantics tests for the hypermap decode and entries fold
@@ -168,42 +171,82 @@ class HypermapSpec extends AnyFunSuite {
   }
 
   test("incremental entries: the collected and the distributed fold commit identical entries") {
-    // the same batches through both routes of incrementalDelta: the fold
-    // over the collected history (cap above it) and the fold over the
-    // filtered scan (cap 0, as a spread batch past the cap would take)
-    val all = Fixtures.goldenLogs ++ Fixtures.adversarialLogs
-    val batches = Seq(all.take(5), all.slice(5, 12), all.drop(12))
-    var history = Seq.empty[Fixtures.Log]
-    val empty = EntriesFold.fold(Decode.decode(Fixtures.toDF(spark, Seq.empty)))
-    var (collected, distributed) = (empty, empty)
-    batches.foreach { b =>
-      history = history ++ b
-      val allEvents = Decode.decode(Fixtures.toDF(spark, history))
-      val newBatch = Decode.decode(Fixtures.toDF(spark, b))
-      def step(state: org.apache.spark.sql.DataFrame, cap: Int, local: Boolean) = {
-        val (affected, refreshed) = EntriesFold.incrementalDeltaImpl(allEvents, state,
-          newBatch, normalizeTransferIds = false, historyCap = cap)
-        assert(refreshed.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] == local)
-        state.join(affected, $"namehash" === $"k", "left_anti").unionByName(refreshed)
+    // the same batches through incrementalDelta's two routes, the fold of
+    // the collected history on the driver (cap above it) and the fold over
+    // the filtered scan (cap 0, as a spread batch past the cap would take),
+    // against the rebuild, in both transfer-id modes. ROOT gets an entry
+    // only when a Mint names it as its child; minting it under itself makes
+    // that Mint one ROOT's children must not count (it is not after ROOT's
+    // creation), and a Transfer of id 0 is ROOT's own in normalized mode
+    val Root = Fixtures.Root
+    def asRoot(m: Fixtures.Log) = m.copy(topics = m.topics.updated(2, Root))
+    val late = EvmCodec.namehash(Root, "late")
+    val addr = "0x" + "ab" * 20
+    val rootLogs = Seq(
+      Fixtures.mint(Root, "early", 100L, 0),
+      Fixtures.note(Root, "~early", "x".getBytes("UTF-8"), 101L, 0),
+      asRoot(Fixtures.mint(Root, "root", 200L, 0)),
+      Fixtures.mint(Root, "same", 200L, 1),
+      Fixtures.mint(Root, "late", 300L, 0),
+      Fixtures.note(Root, "~k", "v".getBytes("UTF-8"), 301L, 0),
+      Fixtures.fact(Root, "!f", "w".getBytes("UTF-8"), 302L, 0),
+      Fixtures.gene(Root, addr, 303L, 0),
+      Fixtures.transfer(addr, "0x" + "cd" * 20, "0", 304L, 0),
+      Fixtures.mint(late, "leaf", 400L, 0),
+      Fixtures.mint(EvmCodec.namehash(Root, "unminted"), "orphan", 401L, 0),
+      asRoot(Fixtures.mint(Fixtures.OsHash, "again", 500L, 0)),
+      Fixtures.mint(Root, "last", 501L, 0))
+    val fixtures = Seq(1L, 2L, 3L).map(s => s"randomLogs seed $s" -> Fixtures.randomLogs(150, s)) ++
+      Seq("golden + adversarial" -> (Fixtures.goldenLogs ++ Fixtures.adversarialLogs),
+        "ROOT minted as a child" -> rootLogs)
+    assert(Fixtures.toDF(spark, rootLogs).rdd.getNumPartitions > 1)
+    val rnd = new Random(11)
+    // without AQE an action is one job, not one per exchange; no result
+    // depends on it
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    // a frame's rows as a local relation, so that a state does not carry
+    // the plans of the steps before it
+    def local(df: DataFrame) = session.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    val empty = local(EntriesFold.fold(Decode.decode(Fixtures.toDF(session, Seq.empty))))
+    for ((name, logs) <- fixtures; normalize <- Seq(false, true)) {
+      // three batches at random cut points
+      val cuts = 0 +: rnd.shuffle((1 until logs.size).toList).take(2).sorted :+ logs.size
+      var (collected, distributed) = (empty, empty)
+      cuts.sliding(2).foreach { case Seq(from, until) =>
+        val allEvents = Decode.decode(Fixtures.toDF(session, logs.take(until)))
+        val newBatch = Decode.decode(Fixtures.toDF(session, logs.slice(from, until)))
+        def step(state: DataFrame, cap: Int) = {
+          val (affected, refreshed) = EntriesFold.incrementalDeltaImpl(allEvents, state,
+            newBatch, normalize, cap)
+          (affected, refreshed,
+            state.join(affected, $"namehash" === $"k", "left_anti").unionByName(refreshed))
+        }
+        def isLocal(refreshed: DataFrame) =
+          refreshed.queryExecution.analyzed.isInstanceOf[LocalRelation]
+        val clue = s"$name, normalizeTransferIds = $normalize, after logs $from until $until"
+        val (affected, collectedRefresh, c) = step(collected, 1 << 20)
+        val (_, distributedRefresh, d) = step(distributed, 0)
+        assert(collectedRefresh.schema == distributedRefresh.schema, clue)
+        // the cap bounds the whole collected history, not each partition's
+        // share of it: a cap of exactly the history's size collects, one
+        // less does not
+        val keys = affected.as[String].collect()
+        val tkey = if (normalize) evm.uint_dec_to_bytes32($"id") else $"id"
+        val historyRows = allEvents.where($"childhash".isin(keys: _*) ||
+          $"parenthash".isin(keys: _*) || $"entry".isin(keys: _*) ||
+          ($"eventType" === "Transfer" && tkey.isin(keys: _*))).count().toInt
+        if (historyRows > 1) {
+          assert(isLocal(step(collected, historyRows)._2), clue)
+          assert(!isLocal(step(collected, historyRows - 1)._2), clue)
+          assert(isLocal(collectedRefresh) && !isLocal(distributedRefresh), clue)
+        }
+        collected = local(c)
+        distributed = local(d)
+        EntriesAssert.assertSameEntries(collected, distributed, clue)
+        EntriesAssert.assertSameEntries(collected, local(EntriesFold.fold(allEvents, normalize)),
+          clue)
       }
-      // the cap bounds the whole collected history, not each partition's
-      // share of it: a cap of exactly the history's size collects, one less
-      // does not
-      val keys = EntriesFold.incrementalDeltaImpl(allEvents, collected, newBatch,
-        normalizeTransferIds = false, historyCap = 0)._1.as[String].collect()
-      val historyRows = allEvents.where($"childhash".isin(keys: _*) ||
-        $"parenthash".isin(keys: _*) || $"entry".isin(keys: _*) ||
-        ($"eventType" === "Transfer" && $"id".isin(keys: _*))).count().toInt
-      assert(allEvents.rdd.getNumPartitions > 1 && historyRows > 1)
-      step(collected, historyRows, local = true)
-      step(collected, historyRows - 1, local = false)
-      collected = step(collected, 1 << 20, local = true)
-      distributed = step(distributed, 0, local = false)
-      EntriesAssert.assertSameEntries(distributed, collected,
-        s"the two routes diverge after a batch of ${b.size}")
-      EntriesAssert.assertSameEntries(collected, EntriesFold.fold(allEvents),
-        s"incremental diverges from rebuild after a batch of ${b.size}")
     }
   }
 
