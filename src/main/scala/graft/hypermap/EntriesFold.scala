@@ -175,11 +175,14 @@ object EntriesFold {
     * pass a point read of it (Tail passes `Sinks.lookupCommitted`).
     *
     * Cost contract, per call, run eagerly: one job collects the batch's
-    * keys; at most one probes `previousEntries` for ROOT (only when the
-    * batch references it); one job scans `allEvents` with a hash-set
-    * filter on the keys and collects their history, holding at most
-    * 2 × [[HistoryCap]] + 1 rows on the driver. At or under the cap the
-    * call runs ≤ 3 jobs and plans no fold: the collected rows are folded
+    * keys, none when the batch is a local relation (the committed tail
+    * passes one: the optimizer folds the key projection into the relation,
+    * whose collect reads the driver's rows); at most one job probes
+    * `previousEntries` for ROOT (only when the batch references it); one
+    * job scans `allEvents` with a hash-set filter on the keys and collects
+    * their history, holding at most 2 × [[HistoryCap]] + 1 rows on the
+    * driver. At or under the cap the call runs ≤ 3 jobs (≤ 2 for a local
+    * batch) and plans no fold: the collected rows are folded
     * on the driver ([[foldLocal]]) and `refreshed` is a local relation of
     * the result in the caller's session, with `fold`'s schema: driver
     * memory O(batch keys + touched history), no blocks held. Over it (a
@@ -196,10 +199,11 @@ object EntriesFold {
 
   /** Bounds driver memory, not time: collected history costs ~0.95 KB of
     * heap a row, so the cap is ~95 MB, about 100× a tail batch's history.
-    * How much driver memory the distributed route saves past it is not
-    * measured.
+    * The committed tail collects its decoded micro-batch (rows of the same
+    * schema) under the same cap. How much driver memory the distributed
+    * route saves past it is not measured.
     */
-  private val HistoryCap = 100000
+  private[graft] val HistoryCap = 100000
 
   private[graft] def incrementalDeltaImpl(
       allEvents: DataFrame, previousEntries: DataFrame, newBatch: DataFrame,
@@ -223,19 +227,12 @@ object EntriesFold {
       $"childhash".isin(affectedKeys: _*) || $"parenthash".isin(affectedKeys: _*) ||
         $"entry".isin(affectedKeys: _*) ||
         ($"eventType" === "Transfer" && tkey.isin(affectedKeys: _*)))
-    // one job: each partition ships at most cap + 1 rows, and the driver
-    // stops keeping them once the total passes the cap, so it holds at
-    // most 2 × cap + 1 (a `limit` would plan an incremental take instead,
-    // a job per round of partitions)
-    val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    spark.sparkContext.runJob(history.rdd.mapPartitions(_.take(historyCap + 1)),
-      (it: Iterator[Row]) => it.toArray,
-      (_: Int, part: Array[Row]) => if (collected.length <= historyCap) collected ++= part)
-    val refreshed =
-      if (collected.length > historyCap)
-        fold(history, normalizeTransferIds).where($"namehash".isin(affectedKeys: _*))
-      else spark.createDataFrame(foldLocal(collected.toSeq, allEvents.schema,
+    val collected = Sinks.collectUpTo(history, historyCap)
+    val refreshed = collected match {
+      case Some(rows) => spark.createDataFrame(foldLocal(rows, allEvents.schema,
         affectedKeys.toSet, normalizeTransferIds).asJava, FoldSchema)
+      case None => fold(history, normalizeTransferIds).where($"namehash".isin(affectedKeys: _*))
+    }
     (affectedKeys.toDF("k"), refreshed)
   }
 

@@ -3,13 +3,16 @@ package graft.hypermap
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, BoundReference,
+  Descending, InterpretedOrdering, NullsLast, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField,
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** S5/S6 — the reference's two write paths re-expressed over parquet.
   *
@@ -19,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * table format on the classpath (no Delta in /opt/spark/jars), the engine
   * provides the same semantics with pure-parquet building blocks:
   *
-  *   - insertIfAbsent: anti-join against existing ids, append only novel
+  *   - insertIfAbsent: skip ids already present, append only novel
   *     rows — at-least-once input → exactly-once table, matching the
   *     duplicate-key-skip behavior (upserted count = appended rows).
   *   - upsertCommitted: the one keyed upsert. A last-writer-wins merge
@@ -29,10 +32,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *     maps 1:1 to `WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`.
   *     `readCommitted` and `lookupCommitted` read it back.
   *
-  * Scale note: insertIfAbsent's anti-join shuffles only on event_id and the
-  * existing side prunes to the id column; at 100 TB the existing-ids scan
-  * should be replaced by a Delta MERGE (metadata-pruned) or a bucketed id
-  * index — documented as the production path.
+  * Both take one of two routes, chosen by their input. An input whose
+  * plan is a local relation (a tail micro-batch's collected rows, the live
+  * fold's refreshed entries) already sits on the driver: it is
+  * deduplicated there and merged against the table by a filter on its keys,
+  * with no window, join, cache or count job. Any other input (a backfill, a
+  * seeding commit) takes the distributed route: a window dedupe and a join
+  * against the table. The two give the same table, manifest and counts
+  * (SinksSpec).
+  *
+  * Scale note: each insert still scans the existing `event_id` column once
+  * (the distributed route's anti-join shuffles only on event_id; the local
+  * route filters it on the batch's ids, a hash-set probe of every file); at
+  * 100 TB that scan should be replaced by a Delta MERGE (metadata-pruned)
+  * or a bucketed id index — documented as the production path.
   */
 object Sinks {
 
@@ -41,38 +54,128 @@ object Sinks {
     * arbitrary partition-order row — nondeterministic across runs, while
     * the reference's bulkWrite applies ops in array order).
     */
-  private def dedupeDeterministicBy(updates: DataFrame, keyCol: String): DataFrame = {
+  private[graft] def dedupeDeterministicBy(updates: DataFrame, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val orderCols = updates.schema.fields
-      .filter(f => f.name != keyCol && (f.dataType match {
-        case _: ArrayType | _: MapType | _: StructType => false
-        case _ => true // scalar types: totally ordered in Spark SQL
-      }))
-      .map(f => col(f.name).desc_nulls_last)
+    val orderCols = orderFields(updates.schema, keyCol)
+      .map(i => col(updates.schema(i).name).desc_nulls_last)
     if (orderCols.isEmpty) updates.dropDuplicates(keyCol)
     else updates
       .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(keyCol)).orderBy(orderCols.toIndexedSeq: _*)))
+        Window.partitionBy(col(keyCol)).orderBy(orderCols: _*)))
       .where(col("__rn") === 1).drop("__rn")
+  }
+
+  /** The columns [[dedupeDeterministicBy]] orders by, in schema order: all
+    * but the key, scalar types only (totally ordered in Spark SQL).
+    */
+  private def orderFields(schema: StructType, keyCol: String): Seq[Int] =
+    schema.fields.indices.filter(i => schema(i).name != keyCol && (schema(i).dataType match {
+      case _: ArrayType | _: MapType | _: StructType => false
+      case _ => true
+    }))
+
+  /** [[dedupeDeterministicBy]] over driver rows: per key, the row that
+    * comes first in the same order, compared by Spark's own ordering of
+    * the stored values (strings as UTF-8 bytes, nulls last). Rows tied on
+    * every order column are interchangeable there and here.
+    */
+  private[graft] def dedupeLocal(rows: Seq[InternalRow], schema: StructType,
+                                 keyCol: String): Seq[InternalRow] = {
+    val k = schema.fieldIndex(keyCol)
+    val byKey = rows.groupBy(r => Option(r.get(k, schema(k).dataType))).values.toSeq
+    val order = orderFields(schema, keyCol).map { i =>
+      SortOrder(BoundReference(i, schema(i).dataType, schema(i).nullable), Descending, NullsLast,
+        Seq.empty)
+    }
+    if (order.isEmpty) byKey.map(_.head)
+    else {
+      val first = new InterpretedOrdering(order)
+      byKey.map(_.min(first))
+    }
+  }
+
+  /** The rows of `df` when its plan is a local relation, which holds them
+    * on the driver: reading them starts no job. The analyzed plan is read,
+    * which every Dataset already holds, so a distributed input pays no
+    * extra optimizer pass for the check.
+    */
+  private[graft] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.analyzed match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
+
+  /** A local relation of `rows` laid out as `schema`. */
+  private def localFrame(spark: SparkSession, schema: StructType,
+                         rows: Seq[InternalRow]): DataFrame = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    spark.createDataFrame(rows.map(toRow(_).asInstanceOf[Row]).asJava, schema)
+  }
+
+  /** `df`'s rows on the driver, from one job, when there are at most `cap`
+    * of them and at most `perPartition` in each partition; None otherwise.
+    * Each partition ships at most one row past its limit (min(cap,
+    * perPartition)) and the driver stops keeping them once the total
+    * passes the cap, so it holds at most 2 × cap + 1 (a `limit` would plan
+    * an incremental take instead, a job per round of partitions).
+    */
+  private[graft] def collectUpTo(df: DataFrame, cap: Int,
+                                 perPartition: Int = Int.MaxValue): Option[Seq[Row]] = {
+    val limit = math.min(cap, perPartition)
+    val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var cut = false
+    df.sparkSession.sparkContext.runJob(df.rdd.mapPartitions(_.take(limit + 1)),
+      (it: Iterator[Row]) => it.toArray,
+      (_: Int, part: Array[Row]) => {
+        cut ||= part.length > limit
+        if (!cut && collected.length <= cap) collected ++= part
+      })
+    Option.when(!cut && collected.length <= cap)(collected.toSeq)
   }
 
   /** Append rows whose event_id is not already present. Returns number of
     * rows actually inserted (the reference's "upsertedCount").
+    *
+    * Cost, by route (see the header):
+    *   - a local input (the committed tail's collected micro-batch):
+    *     dedupe on the driver; one job that scans the table's `event_id`
+    *     column, filtered to the batch's ids, and collects the ids present;
+    *     one job that writes the novel rows (as many files as the
+    *     distributed route writes for a batch this small: one per core,
+    *     at most one per row). No window, join, cache or count; driver
+    *     memory O(batch);
+    *   - any other input (the backfill): a window dedupe and an anti-join
+    *     against every existing id (two exchanges), cached and counted
+    *     before the write.
     */
-  def insertIfAbsent(spark: SparkSession, dir: String, updates: DataFrame): Long = {
-    val deduped = dedupeDeterministicBy(updates, "event_id")
-    val novel =
-      if (exists(spark, dir)) {
-        val existingIds = readFlat(spark, dir).select("event_id")
-        deduped.join(existingIds, Seq("event_id"), "left_anti")
-      } else deduped
-    val toWrite = novel.cache()
-    val n = toWrite.count()
-    if (n > 0) toWrite.write.mode(SaveMode.Append).parquet(dir)
-    toWrite.unpersist()
-    n
-  }
+  def insertIfAbsent(spark: SparkSession, dir: String, updates: DataFrame): Long =
+    localRows(updates) match {
+      case Some(rows) =>
+        val id = updates.schema.fieldIndex("event_id")
+        def idOf(r: InternalRow) = if (r.isNullAt(id)) null else r.getUTF8String(id).toString
+        val deduped = dedupeLocal(rows, updates.schema, "event_id")
+        val ids = deduped.map(idOf).filter(_ != null)
+        val present =
+          if (ids.isEmpty || !exists(spark, dir)) Set.empty[String]
+          else readFlat(spark, dir).where(col("event_id").isin(ids: _*)).select("event_id")
+            .collect().map(_.getString(0)).toSet
+        val novel = deduped.filterNot(r => present(idOf(r)))
+        if (novel.nonEmpty)
+          localFrame(spark, updates.schema, novel).write.mode(SaveMode.Append).parquet(dir)
+        novel.size.toLong
+      case None =>
+        val deduped = dedupeDeterministicBy(updates, "event_id")
+        val novel =
+          if (exists(spark, dir)) {
+            val existingIds = readFlat(spark, dir).select("event_id")
+            deduped.join(existingIds, Seq("event_id"), "left_anti")
+          } else deduped
+        val toWrite = novel.cache()
+        val n = toWrite.count()
+        if (n > 0) toWrite.write.mode(SaveMode.Append).parquet(dir)
+        toWrite.unpersist()
+        n
+    }
 
   // ----------------------------------------------------- manifest commit
 
@@ -120,6 +223,21 @@ object Sinks {
     * batch; once they exceed `maxGens` the commit is followed by a fold of
     * the whole table into a single gen (amortized O(table/maxGens) per
     * batch — the same economics as Delta checkpoint compaction).
+    *
+    * Cost, by route (see the header), besides the manifest and GC work,
+    * which is driver-side file I/O:
+    *   - a local input (the committed tail's refreshed entries): dedupe,
+    *     row count, keys and touched buckets on the driver, driver memory
+    *     O(batch); then one write that scans the touched buckets once,
+    *     drops the batch's keys with a hash-set filter and counts them as
+    *     it merges (its exchange's stage and the write: two jobs under
+    *     adaptive execution, one shuffle-writing stage);
+    *   - any other input (a backfill, the seeding fold): a window dedupe,
+    *     cached; one job for the row count and touched buckets (a first
+    *     commit counts the batch once before, to size the layout); then the
+    *     same write, which joins the touched buckets with the batch's keys.
+    * Either way a manifest written before the row count was kept adds one
+    * count of the table, and a compaction one rewrite of it.
     */
   def upsertCommitted(spark: SparkSession, dir: String, updates: DataFrame,
                       keyCol: String = "event_id", maxGens: Int = 16): (Long, Long) =
@@ -254,7 +372,10 @@ object Sinks {
                       keys: Seq[String]): DataFrame = {
     val m = readManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $dir"))
-    val live = bucketsOf(spark, m.keyCol, m.nBuckets, keys).distinct.filter(m.buckets.contains)
+    val bucketOf = bucketFn(spark, StructType(Seq(StructField(m.keyCol, StringType))),
+      m.keyCol, m.nBuckets)
+    val live = keys.map(k => bucketOf(InternalRow(UTF8String.fromString(k))))
+      .distinct.filter(m.buckets.contains)
     if (live.isEmpty) return readLive(spark, dir, m, None)
       .where(lit(false)).drop("bucket") // keys hash only to absent buckets
     readLive(spark, dir, m, Some(live))
@@ -262,17 +383,17 @@ object Sinks {
       .drop("bucket")
   }
 
-  /** [[bucketCol]] evaluated on the driver: the analyzed expression, bound
-    * to a one-string row, so no query is planned just to hash a few keys.
+  /** [[bucketCol]] evaluated on the driver over rows laid out as `schema`:
+    * the analyzed expression, bound to those rows, so no query is planned
+    * just to hash a few keys.
     */
-  private def bucketsOf(spark: SparkSession, keyCol: String, nBuckets: Int,
-                        keys: Seq[String]): Seq[Long] = {
-    import spark.implicits._
-    val plan = Seq.empty[String].toDF(keyCol)
+  private def bucketFn(spark: SparkSession, schema: StructType, keyCol: String,
+                       nBuckets: Int): InternalRow => Long = {
+    val plan = spark.createDataFrame(java.util.List.of[Row](), schema)
       .select(bucketCol(keyCol, nBuckets)).queryExecution.analyzed
     val hash = BindReferences.bindReference(
       plan.expressions.head.asInstanceOf[Alias].child, plan.children.head.output)
-    keys.map(k => hash.eval(InternalRow(UTF8String.fromString(k))).asInstanceOf[Long])
+    r => hash.eval(r).asInstanceOf[Long]
   }
 
   /** Delete gen dirs and tmp manifests the committed snapshot `m` does not
@@ -308,12 +429,9 @@ object Sinks {
     (tallies.map(_._1).sum, tallies.flatMap(_._2).distinct.sorted.toSeq)
   }
 
-  /** Per call: one job for the count and touched buckets (which also
-    * materializes `updates`; a first commit counts it once before, to size
-    * the layout), then one write that reads the touched buckets once,
-    * counting matched keys as it merges; a manifest written before the
-    * row count was kept adds one count of the table. Manifest and GC work
-    * is driver-side file I/O.
+  /** [[upsertCommitted]] at `rowsPerBucket` rows per bucket, optionally
+    * failing after the generation is written and before the manifest
+    * rename.
     */
   private[graft] def upsertCommittedImpl(
       spark: SparkSession, dir: String, updates: DataFrame,
@@ -324,24 +442,20 @@ object Sinks {
       s"upsertCommitted layout mismatch for $dir: table is keyed on ${m.keyCol}, " +
         s"caller passed keyCol=$keyCol"))
     gcUnreferenced(spark, dir, current) // sweep any crashed commit's orphans
-    val deduped = dedupeDeterministicBy(updates, keyCol).cache()
-    try {
-      val m = current.getOrElse(
-        Manifest(bucketsFor(deduped.count(), rowsPerBucket), keyCol, Some(0L), Map.empty))
-      val bucketed = deduped.withColumn("bucket", bucketCol(keyCol, m.nBuckets))
-      val (nUpdates, touched) = rowsAndBuckets(bucketed)
-      if (nUpdates == 0) return (0L, 0L)
+    def layout(rows: => Long) =
+      current.getOrElse(Manifest(bucketsFor(rows, rowsPerBucket), keyCol, Some(0L), Map.empty))
+    // merges `bucketed` (the deduplicated batch with its bucket column:
+    // `nUpdates` rows over the sorted `touched` buckets) into m's live rows
+    // of those buckets, kept by `unmatched`, which counts the rows it drops
+    // into the Observation's `matched`; writes a new generation, commits it
+    def commit(m: Manifest, bucketed: DataFrame, nUpdates: Long, touched: Seq[Long])(
+        unmatched: (DataFrame, Observation) => DataFrame): (Long, Long) = {
       val gen = s"gen-${System.nanoTime()}"
       val liveTouched = touched.filter(m.buckets.contains)
       val matches = new Observation()
       val merged =
         if (liveTouched.isEmpty) bucketed
-        else bucketed.unionByName(
-          readLive(spark, dir, m, Some(liveTouched))
-            .join(bucketed.select(col(keyCol), lit(true).as("__updated")),
-              Seq(keyCol), "left_outer")
-            .observe(matches, count(col("__updated")).as("matched"))
-            .where(col("__updated").isNull).drop("__updated"),
+        else bucketed.unionByName(unmatched(readLive(spark, dir, m, Some(liveTouched)), matches),
           allowMissingColumns = true)
       writeBuckets(merged, touched.size, s"$dir/$gen")
       val matched =
@@ -354,7 +468,37 @@ object Sinks {
       gcUnreferenced(spark, dir, Some(next))
       compactIfNeeded(spark, dir, next, maxGens, rowsPerBucket)
       (matched, nUpdates - matched)
-    } finally deduped.unpersist()
+    }
+    localRows(updates) match {
+      case Some(rows) =>
+        val deduped = dedupeLocal(rows, updates.schema, keyCol)
+        if (deduped.isEmpty) return (0L, 0L)
+        val m = layout(deduped.size)
+        val bucketOf = bucketFn(spark, updates.schema, keyCol, m.nBuckets)
+        val (k, keyType) = (updates.schema.fieldIndex(keyCol), updates.schema(keyCol).dataType)
+        val keys = deduped.flatMap(r =>
+          Option(CatalystTypeConverters.convertToScala(r.get(k, keyType), keyType)))
+        val hit = coalesce(col(keyCol).isin(keys: _*), lit(false))
+        commit(m, localFrame(spark, updates.schema, deduped)
+            .withColumn("bucket", bucketCol(keyCol, m.nBuckets)),
+          deduped.size, deduped.map(bucketOf).distinct.sorted) { (live, matches) =>
+          live.observe(matches, count(when(hit, true)).as("matched")).where(!hit)
+        }
+      case None =>
+        val deduped = dedupeDeterministicBy(updates, keyCol).cache()
+        try {
+          val m = layout(deduped.count())
+          val bucketed = deduped.withColumn("bucket", bucketCol(keyCol, m.nBuckets))
+          val (nUpdates, touched) = rowsAndBuckets(bucketed)
+          if (nUpdates == 0) return (0L, 0L)
+          commit(m, bucketed, nUpdates, touched) { (live, matches) =>
+            live.join(bucketed.select(col(keyCol), lit(true).as("__updated")),
+                Seq(keyCol), "left_outer")
+              .observe(matches, count(col("__updated")).as("matched"))
+              .where(col("__updated").isNull).drop("__updated")
+          }
+        } finally deduped.unpersist()
+    }
   }
 
   /** The least power of two that holds `rows` at `rowsPerBucket` each. */

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.hypermap.{Decode, EntriesFold, Schemas, Sinks}
+import scala.jdk.CollectionConverters._
 
 /** ST1-ST4: the reference's "continuous mode"
   * (/root/reference/scripts/scan-events.ts:129,148-300 — poll head every
@@ -16,7 +17,7 @@ import graft.hypermap.{Decode, EntriesFold, Schemas, Sinks}
   *   - ST2 offsets: the checkpoint dir persists source offsets — the
   *     engine's `currentStartBlock = endBlock + 1` equivalent, crash-safe.
   *   - ST3 exactly-once: at-least-once file delivery + the idempotent
-  *     event_id sink (anti-join insert) ⇒ effectively-once tables, same
+  *     event_id sink (insert-if-absent) ⇒ effectively-once tables, same
   *     trick as the reference's upsert-by-_id, minus the N+1 round trips.
   *   - ST4 running counts: streaming aggregation over eventType (7 keys,
   *     unbounded-safe, no watermark needed — mirrors the reference's
@@ -39,7 +40,9 @@ import graft.hypermap.{Decode, EntriesFold, Schemas, Sinks}
 object Tail {
 
   /** Stream raw-log files (JSON lines) → decode → idempotent events table.
-    * Exactly-once via foreachBatch + insert-if-absent on event_id.
+    * Exactly-once via foreachBatch + insert-if-absent on event_id. Each
+    * micro-batch is collected once and inserted from its rows, as in
+    * [[startWithEntriesCommitted]].
     */
   def start(spark: SparkSession, rawDir: String, eventsDir: String,
             checkpointDir: String,
@@ -49,12 +52,41 @@ object Tail {
     raw.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // decode is stateless per micro-batch; the sink dedupes re-delivery
-        Sinks.insertIfAbsent(spark, eventsDir, Decode.decode(batch, blocks))
+        Sinks.insertIfAbsent(spark, eventsDir, decodeCollected(spark, batch, blocks))
         ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
+  }
+
+  /** A floor on the bytes of a raw log's JSON line that decodes: the
+    * shortest such line, its contract address (42 characters), topic0 (66)
+    * and an empty second topic with their keys and quotes, takes 139.
+    */
+  private val MinDecodableLogBytes = 128
+
+  /** A micro-batch of raw logs, decoded. A batch of at most
+    * `EntriesFold.HistoryCap` decoded rows, with at most an equal share of
+    * the cap in each partition, is collected in one job and returned as a
+    * local relation, so every call on it reads its rows without a job (the
+    * route `Sinks` and `EntriesFold` take for a local input). Any other
+    * batch is returned distributed. A batch whose raw files (their size is
+    * in its plan) have room for more than the cap's worth of decodable logs
+    * is not collected at all; the share bounds what a failed collect costs
+    * otherwise (a compressed batch): about the cap's worth of rows decoded
+    * and shipped to the driver.
+    */
+  private def decodeCollected(spark: SparkSession, batch: DataFrame,
+                              blocks: Option[DataFrame]): DataFrame = {
+    val decoded = Decode.decode(batch, blocks)
+    val cap = EntriesFold.HistoryCap
+    val rows =
+      if (batch.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(cap) * MinDecodableLogBytes)
+        None
+      else Sinks.collectUpTo(decoded, cap,
+        perPartition = cap / math.max(1, decoded.rdd.getNumPartitions))
+    rows.fold(decoded)(rs => spark.createDataFrame(rs.asJava, decoded.schema))
   }
 
   /** Tail that maintains BOTH tables: events (idempotent insert) and the
@@ -77,22 +109,41 @@ object Tail {
     * The events dir is the write-once archive log, deliberately
     * append-only; its file hygiene is an offline `ZOrder.compaction` pass.
     *
-    * Cost contract, per micro-batch with new events:
-    *   - scans: the batch once for the insert and once for its keys; the
-    *     events table once for the insert's existing ids and once, with a
-    *     hash-set filter on the touched keys, for their history; ROOT's
+    * Cost contract, per micro-batch with rows, at or under
+    * `EntriesFold.HistoryCap` decoded rows and at most an equal share
+    * of it in each partition (the tail shape):
+    *   - jobs: one decodes and collects the batch; the insert probes the
+    *     events table's ids and writes the novel rows (one job each); the
+    *     fold probes ROOT's committed bucket (only when the batch references
+    *     ROOT) and collects the touched keys' history (one job each); the
+    *     upsert writes one new generation (its exchange's stage and the
+    *     write). No job for the batch's keys, its dedupe, its count or its
+    *     touched buckets, which are read from the collected rows; none for
+    *     the fold, which runs on the driver; none per live generation and
+    *     none to list or infer a schema (TailJobBudgetSpec pins the count,
+    *     and one shuffle-writing stage);
+    *   - scans: the raw batch once (twice with `confirmedUpTo`, whose
+    *     check adds one job); the events table's `event_id` column once,
+    *     filtered to the batch's ids, and the table once more, with
+    *     a hash-set filter on the touched keys, for their history; ROOT's
     *     one committed bucket; the touched buckets once, in the merge;
-    *   - writes: the novel events and one new generation holding only
-    *     the touched buckets (plus, every `maxGens` batches, a compaction
-    *     of the whole table);
-    *   - jobs: a fixed number for the insert, the key and history
-    *     collects and the upsert; none for the fold over the collected
-    *     history, which runs on the driver without a Spark plan, none per
-    *     live generation and none to list or infer a schema
-    *     (TailJobBudgetSpec pins the count);
-    *   - driver memory: O(history of TOUCHED keys) up to
-    *     `EntriesFold.incrementalDelta`'s cap, past which the fold runs
-    *     distributed.
+    *   - writes: the novel events and one new generation
+    *     holding only the touched buckets (plus, every `maxGens` batches,
+    *     a compaction of the whole table);
+    *   - driver memory: O(batch rows + history of TOUCHED keys), each
+    *     bounded by the cap.
+    * A batch whose raw files have room for more than the cap's worth of
+    * decodable logs (12.8 MB) is not collected; one that fails the collect
+    * (compressed files, rows spread unevenly) first costs about the cap's
+    * worth of rows decoded and shipped to the driver. Either stays
+    * distributed, cached for the batch: the insert
+    * dedupes with a window and anti-joins every existing id, the batch's
+    * keys are collected, past the cap the fold runs distributed, and the
+    * upsert counts and joins its input; a few more jobs and two more
+    * exchanges. Every batch with rows is folded, inserted or not: one that
+    * was redelivered after a crash between the insert and the commit
+    * finds its events present and still refreshes its keys (the fold of
+    * the history is idempotent).
     * That is the tail shape — small triggers touching few keys. A bulk
     * BACKFILL through this path re-folds ~the whole history per batch; it
     * belongs to the batch path (`EtlJob.run`), then start the tail from
@@ -101,7 +152,11 @@ object Tail {
     * `confirmedUpTo` (ST5 extension): when set, each micro-batch ASSERTS
     * that every row is at or below `confirmedUpTo()` — the
     * confirmation-depth bound (head − N), evaluated per batch — and FAILS
-    * LOUD otherwise, at the cost of one max-aggregate job over the batch.
+    * LOUD otherwise, at the cost of one max-aggregate job over the raw
+    * batch, before anything is decoded or written. It reads the raw logs,
+    * not the decoded rows: a log the decoder drops today (another address,
+    * an unknown topic, a malformed payload) may be replaced by a reorg
+    * with one it keeps, and its re-landed chunk is never reprocessed.
     * It asserts instead of filtering because a dropped row would never
     * come back: a re-landed chunk keeps its filename, which the file
     * source never reprocesses, and the coverage manifest counts it as
@@ -131,23 +186,28 @@ object Tail {
                 ">= this tail's depth (Rpc.pollOnce(confirmations = N)), or re-land " +
                 "the unconfirmed range under fresh filenames.")
         }
-        val decoded = Decode.decode(batch, blocks).cache()
+        val decoded = decodeCollected(spark, batch, blocks)
+        val local = Sinks.localRows(decoded)
+        // a distributed batch is read by each call below
+        if (local.isEmpty) decoded.cache()
         try {
-          val inserted = Sinks.insertIfAbsent(spark, eventsDir, decoded)
-          if (inserted > 0 && Sinks.exists(spark, eventsDir)) {
+          Sinks.insertIfAbsent(spark, eventsDir, decoded)
+          // fold every batch with rows, inserted or not: a batch redelivered
+          // after a crash between the insert and the commit finds its events
+          // present, and its keys still need the fold
+          if (local.forall(_.nonEmpty)) {
             val allEvents = Sinks.readFlat(spark, eventsDir)
             // incrementalDelta only probes the previous entries for ROOT
             val prev =
               if (Sinks.readManifest(spark, entriesDir).isDefined)
                 Sinks.lookupCommitted(spark, entriesDir, Seq(Schemas.RootHash))
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.entries)
+              else spark.createDataFrame(java.util.List.of[Row](), Schemas.entries)
             val (_, refreshed) =
               EntriesFold.incrementalDelta(allEvents, prev, decoded)
             Sinks.upsertCommitted(spark, entriesDir, refreshed,
               keyCol = "namehash", maxGens = maxGens)
           }
-        } finally decoded.unpersist()
+        } finally if (local.isEmpty) decoded.unpersist()
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -1,9 +1,13 @@
 package graft
 
 import graft.hypermap.{Decode, Fixtures, Sinks}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** S5/S6 sink semantics: at-least-once input → exactly-once table,
   * idempotent re-merge (SURVEY.md §2.1 S5/S6, §5 property tests).
@@ -211,5 +215,93 @@ class SinksSpec extends AnyFunSuite {
     assert(gens.size <= 2, s"compaction did not bound generations: $gens")
     assert(Sinks.readCommitted(spark, dir).count() == 14)
     assert(Sinks.readCommitted(spark, dir).where($"label" === "alice-v3").count() == 1)
+  }
+
+  /** `df`'s rows as a local relation: the route a collected tail batch takes. */
+  def local(df: DataFrame): DataFrame = spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  /** Rows as a sorted multiset of strings, so that tables compare in any order. */
+  def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.map {
+    case m: scala.collection.Map[_, _] => m.toSeq.map(_.toString).sorted.mkString("{", ",", "}")
+    case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+    case v => String.valueOf(v)
+  }.mkString("|")).toSeq.sorted
+
+  test("the driver dedupe keeps the row the window dedupe keeps") {
+    val schema = StructType(Seq(
+      StructField("k", StringType), StructField("s", StringType), StructField("i", IntegerType),
+      StructField("l", LongType), StructField("d", DoubleType),
+      StructField("tags", ArrayType(StringType))))
+    // per key, rows that tie on every order column but one
+    val groups = Seq(
+      Seq(Row("long", "a", 1, 5L, 0.0, Seq("x")), Row("long", "a", 1, 7L, 0.0, Seq("y")),
+        Row("long", "a", 1, Long.MinValue, 0.0, null)),
+      Seq(Row("int", "a", -1, 1L, 0.0, null), Row("int", "a", 2, 1L, 0.0, null),
+        Row("int", "a", Int.MinValue, 1L, 0.0, null)),
+      Seq(Row("null int", "a", null, 1L, 0.0, null), Row("null int", "a", 3, 1L, 0.0, null)),
+      Seq(Row("null str", null, 1, 1L, 0.0, null), Row("null str", "x", 1, 1L, 0.0, null)),
+      // U+FF61 sorts after U+1F600 in UTF-16 (0xFF61 > 0xD83D) and before
+      // it in UTF-8 bytes (0xEF < 0xF0), the order Spark compares in
+      Seq(Row("utf8", "\uff61", 1, 1L, 0.0, null), Row("utf8", "\ud83d\ude00", 1, 1L, 0.0, null),
+        Row("utf8", "z", 1, 1L, 0.0, null)),
+      Seq(Row("nan", "a", 1, 1L, Double.PositiveInfinity, null),
+        Row("nan", "a", 1, 1L, Double.NaN, null), Row("nan", "a", 1, 1L, -0.0, null)),
+      Seq(Row(null, "a", 1, 1L, 0.0, null), Row(null, "b", 1, 1L, 0.0, null)),
+      Seq(Row("single", null, null, 0L, 0.0, null)))
+    assert("\uff61".compareTo("\ud83d\ude00") > 0)
+    assert(UTF8String.fromString("\uff61").compareTo(UTF8String.fromString("\ud83d\ude00")) < 0)
+    val rnd = new scala.util.Random(3)
+    for (round <- 0 until 4) {
+      val rows = rnd.shuffle(groups.flatten)
+      val distributed =
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      val localIn = spark.createDataFrame(rows.asJava, schema)
+      assert(Sinks.localRows(distributed).isEmpty && Sinks.localRows(localIn).isDefined)
+      val byWindow = rowsOf(Sinks.dedupeDeterministicBy(distributed, "k"))
+      val onDriver = Sinks.dedupeLocal(Sinks.localRows(localIn).get, schema, "k")
+      assert(rowsOf(spark.createDataFrame(onDriver.map(r =>
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala(r, schema)
+          .asInstanceOf[Row]).asJava, schema)) == byWindow, s"round $round")
+      assert(byWindow.size == groups.size)
+    }
+    assert(rowsOf(Sinks.dedupeDeterministicBy(spark.createDataFrame(
+      spark.sparkContext.parallelize(groups(4), 2), schema), "k")).head.startsWith("utf8|\ud83d"))
+  }
+
+  test("a local and a distributed input commit the same table, manifest and counts") {
+    def same(a: String, b: String, clue: String): Unit = {
+      val (ma, mb) = (Sinks.readManifest(spark, a).get, Sinks.readManifest(spark, b).get)
+      assert(ma.nBuckets == mb.nBuckets && ma.rows == mb.rows && ma.keyCol == mb.keyCol, clue)
+      // the same buckets, grouped into generations the same way
+      def gens(m: Sinks.Manifest) = m.buckets.groupBy(_._2).values.map(_.keySet).toSet
+      assert(gens(ma) == gens(mb), clue)
+      assert(rowsOf(Sinks.readCommitted(spark, a)) == rowsOf(Sinks.readCommitted(spark, b)), clue)
+    }
+    val alice = decoded.where($"label" === "alice")
+    for ((keyCol, name) <- Seq("event_id" -> "event_id", "blockNumber" -> "a Long key")) {
+      val (a, b) = (freshDir(), freshDir())
+      def both(df: DataFrame, maxGens: Int, clue: String): Unit = {
+        assert(Sinks.localRows(df).isEmpty, clue)
+        val commit = (dir: String, in: DataFrame) => Sinks.upsertCommittedImpl(spark, dir, in,
+          keyCol, maxGens, rowsPerBucket = 2, crashBeforeCommit = false)
+        assert(commit(a, local(df)) == commit(b, df), s"$name: $clue")
+        same(a, b, s"$name: $clue")
+      }
+      // a fresh table, with a second version of one key in the batch
+      both(decoded.orderBy($"event_id").limit(6).unionByName(
+        alice.withColumn("label", lit("alice-v2"))), 16, "fresh table")
+      // matched and inserted keys, again with two versions of one
+      both(decoded.unionByName(alice.withColumn("label", lit("alice-v3"))), 16, "merge")
+      // a second generation past maxGens = 1: the commit compacts
+      both(alice.withColumn("label", lit("alice-v4")), 1, "compacting")
+      assert(Sinks.readManifest(spark, a).get.buckets.values.toSet.size == 1)
+    }
+    // the insert: the same novel rows and the same table
+    val (a, b) = (freshDir(), freshDir())
+    for (batch <- Seq(decoded.limit(5), decoded.unionByName(decoded), decoded)) {
+      assert(Sinks.insertIfAbsent(spark, a, local(batch)) == Sinks.insertIfAbsent(spark, b, batch))
+      assert(rowsOf(spark.read.parquet(a)) == rowsOf(spark.read.parquet(b)))
+    }
+    assert(spark.read.parquet(a).count() == 14)
   }
 }

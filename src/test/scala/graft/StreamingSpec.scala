@@ -78,6 +78,56 @@ class StreamingSpec extends AnyFunSuite {
       EntriesFold.fold(Decode.decode(Fixtures.toDF(spark, all))))
   }
 
+  test("committed tail folds a redelivered batch whose events were inserted before a crash") {
+    // a crash between the events insert and the entries commit leaves the
+    // batch's events in the table and its keys unfolded; the redelivered
+    // batch inserts nothing, and must still be folded
+    val base = Files.createTempDirectory("graft-stream-redeliver")
+    val rawDir = base.resolve("raw").toString
+    val (evDir, enDir) = (base.resolve("ev").toString, base.resolve("en").toString)
+    new java.io.File(rawDir).mkdirs()
+    val all = Fixtures.goldenLogs
+    def tail() = Tail.startWithEntriesCommitted(spark, rawDir + "/*/", evDir, enDir,
+      base.resolve("ck").toString, trigger = Trigger.ProcessingTime(0L))
+    try {
+      Fixtures.toDF(spark, all.take(8)).coalesce(1).write.json(rawDir + "/b1")
+      val q1 = tail()
+      try q1.processAllAvailable() finally q1.stop()
+      // the state the crash leaves: the next chunk's events inserted only
+      assert(Sinks.insertIfAbsent(spark, evDir,
+        Decode.decode(Fixtures.toDF(spark, all.drop(8)))) == all.drop(8).size)
+      Fixtures.toDF(spark, all.drop(8)).coalesce(1).write.json(rawDir + "/b2")
+      val q2 = tail()
+      try q2.processAllAvailable() finally q2.stop()
+      assertSameEntries(Sinks.readCommitted(spark, enDir),
+        EntriesFold.fold(Decode.decode(Fixtures.toDF(spark, all))))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("committed tail runs a batch too large to collect distributed, to the same tables") {
+    // raw files with room for more than the collect cap's worth of
+    // decodable logs are not collected: the insert, the keys and the
+    // upsert take their distributed routes
+    val base = Files.createTempDirectory("graft-stream-large")
+    val rawDir = base.resolve("raw").toString
+    val (evDir, enDir) = (base.resolve("ev").toString, base.resolve("en").toString)
+    new java.io.File(rawDir).mkdirs()
+    val small = Fixtures.goldenLogs
+    val large = Fixtures.randomLogs(24000, seed = 5L)
+    try {
+      Fixtures.toDF(spark, small).coalesce(1).write.json(rawDir + "/b1")
+      Fixtures.toDF(spark, large ++ small.take(3)).coalesce(2).write.json(rawDir + "/b2")
+      val bytes = org.apache.commons.io.FileUtils.sizeOfDirectory(new java.io.File(rawDir + "/b2"))
+      assert(bytes > EntriesFold.HistoryCap * 128L, s"batch of $bytes bytes would be collected")
+      val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/", evDir, enDir,
+        base.resolve("ck").toString, trigger = Trigger.ProcessingTime(0L))
+      try q.processAllAvailable() finally q.stop()
+      val all = Decode.decode(Fixtures.toDF(spark, small ++ large))
+      assert(spark.read.parquet(evDir).count() == all.count())
+      assertSameEntries(Sinks.readCommitted(spark, enDir), EntriesFold.fold(all))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
   test("committed tail refreshes a ROOT entry minted as a child, batch by batch") {
     // ROOT has an entry only once some Mint names it as its CHILD; from
     // then on, every later top-level Mint adds to ROOT's children. The
@@ -308,32 +358,35 @@ class StreamingSpec extends AnyFunSuite {
     // r14 ADVICE (medium): a dropped row is never re-delivered — the
     // fetcher re-lands chunks under the SAME filename (never reprocessed
     // by the file source) and the poll frontier advances past the block.
-    // The depth bound is therefore an assertion, not a filter.
-    val base = Files.createTempDirectory("graft-stream-unconf")
-    val rawDir = base.resolve("raw").toString
-    new java.io.File(rawDir).mkdirs()
+    // The depth bound is therefore an assertion, not a filter. It holds for
+    // logs the decoder drops too (the adversarial ones): a reorg may
+    // replace one with a log it keeps.
     val alice = graft.functions.EvmCodec.namehash(Fixtures.OsHash, "alice")
-    val unconfirmed = Fixtures.note(alice, "~ip", "10.9.9.9".getBytes("UTF-8"),
-      27435100L, 0)
-    // a fetcher run with confirmations=0 landed the unconfirmed tail
-    Fixtures.toDF(spark, Fixtures.goldenLogs :+ unconfirmed)
-      .coalesce(1).write.json(rawDir + "/b1")
-    val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/",
-      base.resolve("ev").toString, base.resolve("en").toString,
-      base.resolve("ck").toString, trigger = Trigger.ProcessingTime("1 second"),
-      confirmedUpTo = Some(() => 27435100L - 10L))
-    try {
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
+    val note = Fixtures.note(alice, "~ip", "10.9.9.9".getBytes("UTF-8"), 27435100L, 0)
+    (note +: Fixtures.adversarialLogs).foreach { log =>
+      val base = Files.createTempDirectory("graft-stream-unconf")
+      val rawDir = base.resolve("raw").toString
+      new java.io.File(rawDir).mkdirs()
+      // a fetcher run with confirmations=0 landed the unconfirmed tail
+      Fixtures.toDF(spark, Fixtures.goldenLogs :+ log.copy(blockNumber = 27435100L))
+        .coalesce(1).write.json(rawDir + "/b1")
+      val q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/",
+        base.resolve("ev").toString, base.resolve("en").toString,
+        base.resolve("ck").toString, trigger = Trigger.ProcessingTime("1 second"),
+        confirmedUpTo = Some(() => 27435100L - 10L))
+      try {
+        val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        def chain(t: Throwable): Seq[Throwable] =
+          if (t == null) Nil else t +: chain(t.getCause)
+        assert(chain(ex).exists(c =>
+          Option(c.getMessage).exists(_.contains("UNCONFIRMED"))),
+          s"expected the misconfiguration error for $log, got: $ex")
+      } finally {
+        q.stop()
+        org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
       }
-      def chain(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: chain(t.getCause)
-      assert(chain(ex).exists(c =>
-        Option(c.getMessage).exists(_.contains("UNCONFIRMED"))),
-        s"expected the misconfiguration error, got: $ex")
-    } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     }
   }
 

@@ -3,26 +3,37 @@ package graft
 import graft.hypermap.{Decode, EntriesFold, Fixtures, Sinks}
 import graft.streaming.Tail
 import org.apache.spark.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-/** The committed tail's cost in Spark jobs per micro-batch. Job count,
-  * not data, sets a small batch's latency, so the count is pinned: a
-  * change that adds a scan, a listing or a schema inference to the batch
-  * shows up here before it shows up as seconds.
+/** The committed tail's cost in Spark jobs per micro-batch, and in stages
+  * that write shuffle output. Job count, not data, sets a small batch's
+  * latency, so both counts are pinned: a change that adds a scan, a
+  * listing, a schema inference or an exchange to the batch shows up here
+  * before it shows up as seconds.
   */
 class TailJobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** Counts the Spark jobs one streaming query starts. */
+  /** Counts the Spark jobs one streaming query starts, and those jobs'
+    * stages that wrote shuffle output.
+    */
   private final class QueryJobs(queryId: () => String) extends SparkListener {
     val count = new AtomicInteger
+    val shuffleStages = new AtomicInteger
+    private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == queryId()))
+      if (Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == queryId())) {
         count.incrementAndGet()
+        e.stageIds.foreach(stages.add(_))
+      }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (stages.contains(e.stageInfo.stageId) &&
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+        shuffleStages.incrementAndGet()
   }
 
   test("a committed micro-batch stays within its job budget, flat in live generations") {
@@ -64,15 +75,17 @@ class TailJobBudgetSpec extends AnyFunSuite {
       q = Tail.startWithEntriesCommitted(spark, rawDir + "/*/", base.resolve("ev").toString,
         enDir, base.resolve("ck").toString, trigger = Trigger.ProcessingTime(0L),
         maxGens = maxGens)
-      val (jobs, gens) = batches.zipWithIndex.map { case (b, i) =>
-        val before = listener.count.get
+      val (jobs, shuffles, gens) = batches.zipWithIndex.map { case (b, i) =>
+        val (before, shufflesBefore) = (listener.count.get, listener.shuffleStages.get)
         Fixtures.toDF(spark, b).coalesce(1).write.json(rawDir + s"/b$i")
         q.processAllAvailable()
         ListenerBusBridge.drain(spark.sparkContext)
-        (listener.count.get - before, Sinks.readManifest(spark, enDir).get.buckets.values.toSet.size)
-      }.unzip
-      info(s"jobs per batch $jobs, live generations after each $gens")
-      val budget = 16 // recorded: 15 for the golden batch, 14 per later batch, 16 compacting
+        (listener.count.get - before, listener.shuffleStages.get - shufflesBefore,
+          Sinks.readManifest(spark, enDir).get.buckets.values.toSet.size)
+      }.unzip3
+      info(s"jobs per batch $jobs, shuffle-writing stages $shuffles, " +
+        s"live generations after each $gens")
+      val budget = 8 // recorded: 6 golden, 6 later (7 with ROOT's bucket live), 8 compacting
       assert(jobs(1) <= budget, s"golden batch took ${jobs(1)} jobs, budget $budget; all: $jobs")
       // batches that only add a generation cost the same whatever the
       // count of live ones; the batch that compacts adds the compaction
@@ -82,6 +95,12 @@ class TailJobBudgetSpec extends AnyFunSuite {
         s"jobs per batch grew with live generations: jobs $jobs, generations $gens")
       assert(compacting.nonEmpty && compacting.forall(jobs(_) <= budget),
         s"compacting batch over budget $budget: jobs $jobs, generations $gens")
+      // one exchange per batch, the upsert's repartition by bucket; a batch
+      // whose commit compacts (its live generations drop) adds the rewrite's
+      val compacted = (1 until batches.size).filter(i => gens(i) < gens(i - 1)).toSet
+      assert(compacted.nonEmpty &&
+        shuffles.indices.forall(i => shuffles(i) == (if (compacted(i)) 2 else 1)),
+        s"shuffle-writing stages per batch $shuffles, generations $gens")
     } finally {
       if (q != null) q.stop()
       spark.sparkContext.removeSparkListener(listener)
